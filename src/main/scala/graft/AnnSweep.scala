@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Measurement harness for the ANN recall/cost dials (q19's multi-probe
   * Hamming budget, q34's IVF probe count) — produces the BENCH_NOTES table
   * backing the "documented dial" claim. Not part of the query surface: it
@@ -18,14 +15,7 @@ import org.apache.spark.sql.functions._
 object AnnSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-ann-sweep")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val exact = ops.Similarity.knnBruteForce.run(spark, dir)
       .select("q_id", "neighbor_id").collect()

@@ -99,13 +99,19 @@ object Bench {
     * scheduler noise, not a plan change). This is the alarm that would have
     * caught BENCH_r10's q148 3.8× drift at build time instead of judge
     * time. Absent/unreadable file → no check (empty pins). */
-  private[graft] def loadPins(path: String): Map[String, Double] =
+  private[graft] def loadPins(path: String): Map[String, Double] = readPins(path)._2
+
+  /** One read of the pins file: its `"_sf"` scale tag and its pins. */
+  private[graft] def readPins(path: String): (Option[String], Map[String, Double]) =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      "\"([^\"]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Exception => Map.empty }
+      val txt = readText(path)
+      ("\"_sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1)),
+        "\"([^\"]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+    } catch { case _: Exception => (None, Map.empty) }
+
+  private def readText(path: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(path))
 
   /** A query regresses when its timed reading exceeds 2× its pin PLUS its
     * recorded warm-suite delta (VERDICT r16 #4): queries pinned from
@@ -287,12 +293,11 @@ object Bench {
     * lines moved or changed meaning. */
   private[graft] def renderCompact(results: Seq[QResult],
       confirm: Map[String, Double], gcSec: Double, sfDir: String,
-      oracleRef: String): String = {
+      oracleTotal: Option[String]): String = {
     val ok = results.filter(_.err.isEmpty)
     // oracle total only (the full oracle_ref with its _meta block is on the
     // longer lines; embedding it here could push past the tail window)
-    val oTot = "\"total\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-      .findFirstMatchIn(oracleRef).map(_.group(1)).getOrElse("null")
+    val oTot = oracleTotal.getOrElse("null")
     s"""{"metric":"total","value":${ok.map(_.sec).sum},"unit":"sec",""" +
       s""""total_confirmed":${totalConfirmed(results, confirm)},""" +
       s""""n_queries":${results.size},""" +
@@ -309,10 +314,13 @@ object Bench {
     * tools/oracle_timing.py r18+), so a future ratio swing is attributable
     * in ONE read of BENCH_r{N} instead of cross-session forensics.
     * Absent/old-format file → {} (the pre-r18 dump had no _total/_meta). */
-  private[graft] def oracleRefJson(path: String): String =
+  private[graft] def oracleRefJson(path: String): String = oracleRef(path)._2
+
+  /** The oracle suite total as written in the file, and the `oracle_ref`
+    * JSON that embeds it. */
+  private[graft] def oracleRef(path: String): (Option[String], String) =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+      val txt = readText(path)
       val tot = "\"_total\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
         .findFirstMatchIn(txt).map(_.group(1))
       val meta = {
@@ -332,12 +340,12 @@ object Bench {
           if (open >= 0 && end > open) Some(txt.substring(open, end + 1)) else None
         }
       }
-      (tot, meta) match {
+      (tot, (tot, meta) match {
         case (Some(t), Some(m)) => s"""{"total":$t,"meta":$m}"""
         case (Some(t), None) => s"""{"total":$t}"""
         case _ => "{}"
-      }
-    } catch { case _: Exception => "{}" }
+      })
+    } catch { case _: Exception => (None, "{}") }
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -352,9 +360,7 @@ object Bench {
     * pair 1.13×→1.44×) is adjudicable from the JSON alone instead of
     * from after-the-fact prose. */
   private[graft] def loadAvg1(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-      java.nio.charset.StandardCharsets.UTF_8).split(" ")(0).toDouble
+    try readText("/proc/loadavg").split(" ")(0).toDouble
     catch { case _: Exception => -1.0 }
 
   /** Render the load-probe JSON fragment shared by both output lines. */
@@ -365,9 +371,7 @@ object Bench {
 
   private def procStatBusy(): Long =
     try {
-      val first = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")),
-        java.nio.charset.StandardCharsets.UTF_8).linesIterator.next()
+      val first = readText("/proc/stat").linesIterator.next()
       // cpu user nice system idle iowait irq softirq steal ... — busy is
       // everything except idle(3) and iowait(4)
       val f = first.trim.split("\\s+").drop(1).map(_.toLong)
@@ -376,9 +380,7 @@ object Bench {
 
   private def selfJiffies(): Long =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")),
-        java.nio.charset.StandardCharsets.UTF_8)
+      val txt = readText("/proc/self/stat")
       // fields 14/15 (utime/stime) — count from after the parenthesized comm
       val rest = txt.substring(txt.lastIndexOf(')') + 2).split(" ")
       rest(11).toLong + rest(12).toLong
@@ -403,15 +405,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val spark = Harness.session()
+    val queries = Harness.select(Nil)
     // warmup: one untimed pass (JIT + codegen caches + repo materialization)
     runSuite(spark, sfDir, queries)
     // re-materialize every PlanCache shared frame on this UNTIMED line: a
@@ -435,14 +430,9 @@ object Bench {
     // and a pins file WITHOUT the tag disables the alarm rather than
     // applying the pins at every scale.
     val pinsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PINS", "bench_pins.json")
-    val pinSf = try {
-      "\"_sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(pinsPath)),
-          java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1))
-    } catch { case _: Exception => None }
+    val (pinSf, allPins) = readPins(pinsPath)
     val pins =
-      if (pinSf.exists(t => sfDir.split('/').contains(t))) loadPins(pinsPath)
+      if (pinSf.exists(t => sfDir.split('/').contains(t))) allPins
       else {
         // a silently-disabled alarm is indistinguishable from a clean run;
         // say WHY the pins were skipped so a corrupted/renamed pins file or
@@ -483,15 +473,15 @@ object Bench {
     val storage = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum
     val allHeals = selfHeals ++ confirmHeals
-    val oracleRef = oracleRefJson(
+    val (oracleTotal, oracleRefJs) = oracleRef(
       sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "oracle_times.json"))
     println(renderJson(results, sfDir, gcSec,
       spark.sparkContext.getPersistentRDDs.size, storage, regs, warmSharedSec,
       warmed, allHeals, confirm, loadBefore, loadAfter, extBusy, extBlocks,
-      oracleRef))
+      oracleRefJs))
     println(renderSummary(results, sfDir, regs, allHeals, confirm, gcSec,
-      warmed, loadBefore, loadAfter, extBusy, extBlocks, oracleRef))
-    println(renderCompact(results, confirm, gcSec, sfDir, oracleRef))
+      warmed, loadBefore, loadAfter, extBusy, extBlocks, oracleRefJs))
+    println(renderCompact(results, confirm, gcSec, sfDir, oracleTotal))
     spark.stop()
   }
 }

@@ -1,22 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: prints the formatted physical plan of selected
   * queries (all when no args). Usage: runMain graft.Explain [query ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+    val queries = Harness.select(args.toSeq)
+    val spark = Harness.session()
+    queries.foreach { case (n, fn) =>
       println(s"\n########## $n ##########")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -294,15 +294,8 @@ object FpStress {
     val master = args.headOption.getOrElse("local[32]")
     val tag = master.replaceAll("[^a-z0-9]", "")
     // deliberately different parallelism geometry per master
-    val parts = if (tag == "local4") "7" else "64"
-    val spark = SparkSession.builder()
-      .master(master).appName(s"graft-fpstress-$tag")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(master.filter(_.isDigit).toInt,
+      partitions = if (tag == "local4") 7 else 64)
     // force q95's DISTRIBUTED phases: the adaptive driver path has no FP
     // surface (integer walk over a collected slice) — the multi-phase plan's
     // bucket arithmetic is what this harness exists to stress

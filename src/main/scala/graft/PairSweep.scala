@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Growth sweep for the pair-join operators (the class whose cost is driven
   * by CANDIDATE volume, not row count): runs q14 n-gram Jaccard, q87 edit
   * distance, q40 dedup clustering and q19 LSH ANN at sf0.1 and at the
@@ -114,22 +112,15 @@ object PairSweep {
     "q262_fs_linkage", "q264_local_clustering")
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[32]").appName("graft-pairsweep")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // deep mode runs q259's disk-bounded sliced verify: unreferenced slice
     // shuffles are deleted by the ContextCleaner only after a full GC, so
     // the deep session pins the cleaner's periodic-GC interval well inside
     // the slice turnaround (VERDICT r15 #5 — the documented session knob
     // replacing the former in-loop System.gc(); ~40 GCs over an sf10 rung,
     // a few percent of its wall clock)
-    val spark = (if (args.contains("deep"))
-        builder.config("spark.cleaner.periodicGC.interval", "30s")
-      else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(extra =
+      if (args.contains("deep")) Map("spark.cleaner.periodicGC.interval" -> "30s")
+      else Map.empty)
     FpStress.ensureBuilt(spark)
     def time(dir: String, name: String): Double = {
       val t0 = System.nanoTime()

@@ -201,22 +201,12 @@ object PlanGates {
 object PlanGateAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Harness.select(Harness.only)
+    val spark = Harness.session()
     var bad = 0
     var excepted = 0
-    // dev-only subset knob (same contract as Verify's): unset = full audit
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.contains(kv._1)))
-      .foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY (same contract as Verify's): unset = full audit
+    queries.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         df.count() // finalize AQE
@@ -232,7 +222,7 @@ object PlanGateAudit {
           println(s"ERROR $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    println(s"audit done: $bad flagged of ${SparkEntry.queries.size} " +
+    println(s"audit done: $bad flagged of ${queries.size} " +
       s"($excepted documented workload-model exceptions filtered)")
     spark.stop()
   }

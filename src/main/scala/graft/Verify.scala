@@ -1,19 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB hash compare (tools/verify_local.py).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir>. SPARK_GRAFT_ONLY=qA,qB
+  * dumps just those queries (plus their oracles) for a fast pre-flight; an
+  * unknown name fails the run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.select(Harness.only)
+    val spark = Harness.session()
     // pin dynamic oracles (q34's centroid literals) to this run's sf dir
     System.setProperty("graft.oracle.sfdir", sfDir)
     // ... and let dump-derived oracles (q27's recursive closure over the q25
@@ -23,29 +20,23 @@ object Verify {
     System.setProperty("graft.oracle.outdir", new java.io.File(outDir).getAbsolutePath)
     System.setProperty("graft.oracle.runstart", System.currentTimeMillis().toString)
     new java.io.File(outDir).mkdirs()
-    // dev-only subset knob: SPARK_GRAFT_ONLY=q269_x,q270_y dumps just those
-    // queries (plus their oracles) for a fast pre-flight; the driver never
-    // sets it, so its runs remain the full dump
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // aux dump for the dump-derived retrieval oracles (after the loop so the
-    // q28 metadata dump the oracle joins is already on disk)
-    if (only.isEmpty)
-      try ops.LineageQueries.dumpRetrievalAux(spark, sfDir, outDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] aux_qa_vectors failed: ${e.getMessage}")
-      }
-    def q(s: String): String = Json.str(s)
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // aux dump for the dump-derived oracles (q26/q28/q29/q30/q44/q183/q184),
+    // on every run, subsets included: it is metadata-sized. After the loop
+    // so the q28 metadata dump the oracle joins is already on disk.
+    try ops.LineageQueries.dumpRetrievalAux(spark, sfDir, outDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] aux_qa_vectors failed: ${e.getMessage}")
+    }
+    val names = queries.map(_._1).toSet
+    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -2,8 +2,6 @@ package graft.extract
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.lineage.Lineage
 import graft.pipelines.Repo
 import graft.qa.QA
@@ -20,11 +18,7 @@ object LineageDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/root/repo/target/lineage_out")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     import spark.implicits._
 
     val ls = Repo.lineage(spark, sfDir)

@@ -154,11 +154,7 @@ object Ask {
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val question = if (rest.length > 1) rest.drop(1).mkString(" ")
       else "What is impacted downstream if `amount` changes?"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     if (flags.contains("--repl")) repl(spark, sfDir, flags.contains("--hybrid"), cfg)
     else answerOnce(spark, sfDir, question, flags.contains("--hybrid"), cfg)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot diagnostic for q259's exact-verify data mass (the stage that
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object VerifyMass {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-verifymass")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
     dirs.foreach { dir =>
       val docs = graft.Tables.documents(spark, dir)

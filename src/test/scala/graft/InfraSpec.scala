@@ -146,14 +146,10 @@ class InfraSpec extends AnyFunSuite {
     // DESIGN — they must be exactly as resident after pass 2 as after pass 1,
     // not duplicated. This is the regression gate for the BENCH_r06-style
     // blowup (accumulated barrier blocks under a memory-pressured driver).
-    def passAll(): Unit = SparkEntry.queries.toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        assert(fn(spark, sfDir).count() >= 0, s"$name failed")
-      }
-    passAll()
-    val after1 = spark.sparkContext.getPersistentRDDs.size
-    passAll()
-    val after2 = spark.sparkContext.getPersistentRDDs.size
+    // The two passes are the shared tier-1 fixture (FullSuitePasses).
+    val passes = FullSuitePasses.passes
+    val after1 = passes.persistentAfter1
+    val after2 = passes.persistentAfter2
     // ≤, not ==: Spark's ContextCleaner asynchronously unpersists RDDs whose
     // references were garbage-collected (e.g. GraphX Pregel internals from
     // earlier tests), so the count may legitimately SHRINK between passes.
@@ -238,6 +234,29 @@ class InfraSpec extends AnyFunSuite {
     assert(m.get.group(1).toInt === SparkEntry.queries.size,
       s"README says ${m.get.group(1)} but the registry holds " +
         s"${SparkEntry.queries.size} — update README.md's correctness contract")
+  }
+
+  test("Harness.select: empty selects every query sorted; an unknown name fails") {
+    assert(Harness.select(Nil).map(_._1) === SparkEntry.queries.keys.toSeq.sorted)
+    assert(Harness.select(Seq("q02_dim_latest")).map(_._1) === Seq("q02_dim_latest"))
+    // a mistyped SPARK_GRAFT_ONLY must fail the run, not dump nothing
+    val e = intercept[IllegalArgumentException](
+      Harness.select(Seq("q02_dim_latest", "q02_dim_lastest")))
+    assert(e.getMessage.contains("q02_dim_lastest"), e.getMessage)
+  }
+
+  test("every main builds its session through Harness: one SparkSession builder in src/main") {
+    // the core-count default and the session confs stay decided in one
+    // place; a hand-built session in a main would quietly diverge from it
+    import scala.jdk.CollectionConverters._
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val n = "SparkSession\\.builder".r
+          .findAllMatchIn(java.nio.file.Files.readString(p)).size
+        if (n > 0) Some(p.getFileName.toString -> n) else None
+      }
+    assert(builders === Seq("Harness.scala" -> 1), builders.toString)
   }
 
   test("materializeCtes hints non-recursive CTEs and skips self-referencing ones") {

@@ -4,27 +4,38 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
   val sfDir = "/root/testdata/sf0.001"
+}
+
+/** The tier-1 full-suite passes, run once and shared: PipelinesSpec's gate
+  * test reads pass 1 (rows and enforced plan-gate violations per query),
+  * InfraSpec's persistent-RDD test reads the persisted-RDD counts after
+  * pass 1 and after pass 2. Both passes run back to back, so no other test
+  * sits between the two counts. */
+object FullSuitePasses {
+  import SparkTestSession._
+
+  final case class Passes(pass1: Seq[(String, Long, Seq[String])],
+      persistentAfter1: Int, persistentAfter2: Int)
+
+  lazy val passes: Passes = {
+    val queries = Harness.select(Nil)
+    val pass1 = queries.map { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      val rows = df.count()
+      (name, rows, PlanGates.enforcedViolations(name, df))
+    }
+    val after1 = spark.sparkContext.getPersistentRDDs.size
+    queries.foreach { case (name, fn) =>
+      assert(fn(spark, sfDir).count() >= 0, s"$name failed")
+    }
+    Passes(pass1, after1, spark.sparkContext.getPersistentRDDs.size)
+  }
 }
 
 class PipelinesSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  /** The documented FactBroadcastHint exceptions live in
-    * [[PlanGates.broadcastHintExceptions]] (main source, r15) so the
-    * PlanGateAudit CLI at sf0.01/sf0.1 enforces the SAME map as this spec. */
-  private def broadcastHintExceptions = PlanGates.broadcastHintExceptions
 
   test("every declared query runs, returns rows, and passes the plan gates") {
     // mechanized anti-pattern gates (r13 cartesian; r14 the other two
@@ -40,17 +51,14 @@ class PipelinesSpec extends AnyFunSuite {
     //       fact-table scan unreduced (on the ANALYZED plan — AQE's
     //       size-based auto-broadcasts are self-gating at scale and not
     //       audited), except the documented workload-model broadcasts
-    //       above.
+    //       in PlanGates.broadcastHintExceptions (the same map the
+    //       PlanGateAudit CLI enforces at sf0.01/sf0.1).
     // Deliberate tiny cross joins (threshold grids, 1-row totals, 256-row
     // LUTs) plan as BroadcastNestedLoopJoin and stay allowed.
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val df = fn(spark, sfDir)
-        assert(df.count() > 0, s"$name returned 0 rows")
-        PlanGates.violations(df)
-          .filterNot(v => v.startsWith("FactBroadcastHint") &&
-            broadcastHintExceptions.contains(name))
-          .map(v => s"$name: $v")
+    val violations = FullSuitePasses.passes.pass1.flatMap {
+      case (name, rows, vs) =>
+        assert(rows > 0, s"$name returned 0 rows")
+        vs.map(v => s"$name: $v")
     }
     assert(violations.isEmpty,
       s"plan-gate violations:\n${violations.mkString("\n")}")
