@@ -29,8 +29,10 @@ import org.apache.spark.sql.types._
   * (`l ≤ Long.Max − a·b`). Any row failing the guards folds the register
   * into the decimal side exactly (`d' = d + l + a·b` in DECIMAL) and the
   * register stays 0 from then on, so register + decimal ≡ the true sum at
-  * every step. All guard predicates short-circuit (Catalyst `And`/`Or`/
-  * `If`), so no overflowing LONG op is ever evaluated — ANSI-safe.
+  * every step. The LONG product and the guard's division each sit in an
+  * `If` branch under their own guard, so no overflowing or dividing-by-zero
+  * LONG op is evaluated whatever order Catalyst evaluates `And`/`Or`
+  * operands in (subexpression elimination included) — ANSI-safe.
   * Everything is expression-level (DeclarativeAggregate), so the aggregate
   * stays inside whole-stage codegen with a fixed-width UnsafeRow buffer.
   */
@@ -75,13 +77,15 @@ case class SumProdLong(left: Expression, right: Expression)
     val a = left
     val b = right
     val inNull = Or(IsNull(a), IsNull(b))
-    // product fits LONG: non-negative inputs and a ≤ Long.Max div b.
-    // Or/And short-circuit, so the division never sees b = 0 and the
-    // multiply below is only ever evaluated under this predicate.
+    // product fits LONG: non-negative inputs and a ≤ Long.Max div b. The
+    // divisor is never 0 (b = 0 passes through the EqualTo arm anyway) and
+    // the multiply is an If branch under the predicate; a row failing the
+    // guard reads prod = 0, which the escape below never uses.
+    val bIsZero = EqualTo(b, lit0)
     val prodSafe = And(
       And(GreaterThanOrEqual(a, lit0), GreaterThanOrEqual(b, lit0)),
-      Or(EqualTo(b, lit0), LessThanOrEqual(a, IntegralDivide(maxL, b))))
-    val prod = Multiply(a, b)
+      Or(bIsZero, LessThanOrEqual(a, IntegralDivide(maxL, If(bIsZero, Literal(1L), b)))))
+    val prod = If(prodSafe, Multiply(a, b), lit0)
     val fast = And(And(IsNull(dsum), prodSafe),
       LessThanOrEqual(lsum, Subtract(maxL, prod)))
     // escape: fold the register in exactly once, decimal-multiply this row

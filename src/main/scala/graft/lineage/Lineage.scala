@@ -1,6 +1,6 @@
 package graft.lineage
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -87,47 +87,54 @@ object Lineage {
     * driver memory and scheduling a Spark job per BFS level is pure
     * overhead (measured: ~15 tiny jobs to walk a 130-edge graph). The
     * distributed loop below stays the path for graphs that outgrow this. */
-  private[graft] val DriverBfsMaxEdges = 65536
+  private val DriverBfsMaxEdges = 65536
 
-  /** Downstream transitive closure from a start column (A19): BFS with
-    * min-depth semantics, capped — qa/ask.py:211-223 (limit 2000).
-    *
-    * Adaptive execution: one bounded probe (`limit(threshold+1).collect`)
-    * decides the path — a complete in-memory edge list runs the BFS on the
-    * driver ([[driverClosure]]); a larger graph runs the iterative
-    * frontier-join loop ([[distributedClosure]], checkpoint-per-iteration
-    * at scale). Both implement identical semantics, asserted against each
-    * other in InfraSpec. */
-  def downstreamClosure(spark: SparkSession, graph: DataFrame, start: String,
-      limit: Int = 2000, maxDepth: Int = 20): DataFrame = {
-    val edgePlan = graph.select(col("src"), col("dst")).distinct()
-    val probe = edgePlan.limit(DriverBfsMaxEdges + 1).collect()
-    if (probe.length <= DriverBfsMaxEdges)
-      driverClosure(spark, probe.map(r => (r.getString(0), r.getString(1))),
-        start, limit, maxDepth)
-    else distributedClosure(spark, edgePlan, start, limit, maxDepth)
+  /** The one bounded read that decides driver vs distributed for every
+    * lineage consumer: `df`'s rows when it has at most [[DriverBfsMaxEdges]]
+    * of them, None when it outgrows the driver. */
+  private[graft] def collectIfSmall(df: DataFrame): Option[Array[Row]] = {
+    val rows = df.limit(DriverBfsMaxEdges + 1).collect()
+    if (rows.length <= DriverBfsMaxEdges) Some(rows) else None
   }
 
-  /** Driver BFS over a complete in-memory edge list — the metadata-sized
-    * path. Level-synchronous with the same cap truncation (complete levels,
-    * then alphabetical fill of the overflowing level) as the distributed
-    * loop. */
-  private[graft] def driverClosure(spark: SparkSession, edges: Seq[(String, String)],
-      start: String, limit: Int = 2000, maxDepth: Int = 20): DataFrame =
-    localDepthFrame(spark, driverClosureSeq(edges, start, limit, maxDepth), "column")
+  /** Downstream transitive closure from a start column (A19): BFS with
+    * min-depth semantics, capped — qa/ask.py:211-223 (limit 2000). */
+  def downstreamClosure(spark: SparkSession, graph: DataFrame, start: String,
+      limit: Int = 2000, maxDepth: Int = 20): DataFrame =
+    closure(spark, graph.select(col("src"), col("dst")).distinct(), Seq(start),
+      includeSeeds = false, limit, maxDepth, "column")
 
-  /** Seq core of [[driverClosure]] — also consumed directly by the evidence
-    * assembly (qa.Ask), which merges several candidates' closures without
-    * round-tripping each through a frame. */
-  private[graft] def driverClosureSeq(edges: Seq[(String, String)],
-      start: String, limit: Int = 2000, maxDepth: Int = 20): Seq[(String, Int)] =
-    driverBfsSeq(edges, Seq(start), includeSeeds = false, limit, maxDepth)
+  /** Script-level downstream BFS over stitched links (A21). */
+  def downstreamScripts(spark: SparkSession, links: Dataset[RepoLink],
+      seeds: Seq[String], maxDepth: Int = 20): DataFrame =
+    closure(spark, links.select(col("fromScript").as("src"), col("toScript").as("dst"))
+      .distinct(), seeds, includeSeeds = true, Long.MaxValue, maxDepth, "script")
 
-  /** The ONE driver-side level-synchronous BFS — single- and multi-seed
-    * closures ([[driverClosureSeq]], [[downstreamScripts]]) both delegate
-    * here so cap/min-depth semantics cannot drift between them. Cap
-    * truncation keeps complete levels, then alphabetical fill of the
-    * overflowing level (see downstreamClosure's boundary note). */
+  /** The one closure behind A19 and A21: (key, depth) rows sorted by
+    * (depth, key), seeds at depth 0 when `includeSeeds`. `limit` counts the
+    * seeds; a level that overflows it keeps complete levels, then fills
+    * alphabetically. The reference (qa/ask.py:211-223) stops in BFS
+    * discovery order instead, so at the cap boundary the retained subset
+    * can differ; below the cap the closures are identical.
+    *
+    * Adaptive execution: one bounded read of the (src, dst) `pairs`
+    * ([[collectIfSmall]]) decides the path — a complete in-memory edge list
+    * runs [[driverBfsSeq]]; a larger graph runs the frontier-join loop
+    * ([[distributedClosure]]). Both paths are asserted identical in
+    * InfraSpec. */
+  private[graft] def closure(spark: SparkSession, pairs: DataFrame, seeds: Seq[String],
+      includeSeeds: Boolean, limit: Long, maxDepth: Int, key: String): DataFrame =
+    collectIfSmall(pairs) match {
+      case Some(rows) => localDepthFrame(spark, driverBfsSeq(
+        rows.toSeq.map(r => (r.getString(0), r.getString(1))),
+        seeds, includeSeeds, limit, maxDepth), key)
+      case None =>
+        distributedClosure(spark, pairs, seeds, includeSeeds, limit, maxDepth, key)
+    }
+
+  /** The ONE driver-side level-synchronous BFS — [[closure]]'s driver path
+    * and qa.Ask's multi-candidate evidence both run it, so cap/min-depth
+    * semantics cannot drift between them. */
   private[graft] def driverBfsSeq(edges: Seq[(String, String)], seeds: Seq[String],
       includeSeeds: Boolean, limit: Long = Long.MaxValue,
       maxDepth: Int = 20): Seq[(String, Int)] = {
@@ -171,8 +178,8 @@ object Lineage {
           org.apache.spark.sql.types.IntegerType))))
   }
 
-  /** Iterative frontier-join closure — the path for graphs too large to
-    * collect. Same loop is checkpoint-per-iteration at scale.
+  /** Iterative frontier-join closure — [[closure]]'s path for graphs too
+    * large to collect. Same loop is checkpoint-per-iteration at scale.
     *
     * Checkpoint lifecycle (round-7 audit): each round's barriers are freed
     * as soon as the next round's barrier is materialized (only the newest
@@ -181,14 +188,16 @@ object Lineage {
     * the end so the final barriers release too — repeated invocations leave
     * zero persisted RDDs behind. */
   private[graft] def distributedClosure(spark: SparkSession, edgePlan: DataFrame,
-      start: String, limit: Int = 2000, maxDepth: Int = 20): DataFrame = {
+      seeds: Seq[String], includeSeeds: Boolean, limit: Long, maxDepth: Int,
+      key: String): DataFrame = {
     import spark.implicits._
     val edges = edgePlan.cache()
-    var result = Seq((start, 0)).toDF("column", "depth")
+    val ds = seeds.distinct
+    var result = ds.map((_, 0)).toDF(key, "depth")
     var frontier = result
     var liveCks = Seq.empty[DataFrame] // barriers the current round still reads
     var depth = 0
-    var have = 1L // running |result| — avoids a recount job every depth
+    var have = ds.size.toLong // running |result| — avoids a recount job every depth
     var done = false
     try {
       while (!done && depth < maxDepth) {
@@ -196,21 +205,18 @@ object Lineage {
         // localCheckpoint truncates the logical plan each iteration — without
         // it the union+anti-join recursion doubles the plan per depth (2^d
         // nodes); on a cluster this is checkpoint()-per-iteration
-        val next = graft.Ckpt.eager(frontier.select(col("column").as("fcol")).as("f")
-          .join(edges.as("e"), col("fcol") === col("e.src"))
-          .select(col("e.dst").as("column"), lit(depth).as("depth"))
+        val next = graft.Ckpt.eager(frontier.select(col(key).as("fkey"))
+          .join(edges.as("e"), col("fkey") === col("e.src"))
+          .select(col("e.dst").as(key), lit(depth).as("depth"))
           .distinct()
-          .join(result.select(col("column").as("seen")), col("column") === col("seen"), "left_anti"))
+          .join(result.select(col(key).as("seen")), col(key) === col("seen"), "left_anti"))
         val cnt = next.count()
         if (cnt == 0) { graft.Ckpt.free(next); done = true }
         else if (have + cnt > limit) {
           // truncate the overflowing level to exactly `limit` total nodes,
-          // deterministically (ordered by column name). The reference
-          // (qa/ask.py:211-223) stops in BFS discovery order (per-parent
-          // sorted-neighbor queue), so at the cap boundary the retained
-          // subset can differ; below the cap the closures are identical.
+          // deterministically (ordered by key)
           val capped = graft.Ckpt.eager(result
-            .unionByName(next.orderBy(col("column")).limit((limit - have).toInt)))
+            .unionByName(next.orderBy(col(key)).limit((limit - have).toInt)))
           graft.Ckpt.free(next)
           liveCks.foreach(graft.Ckpt.free)
           liveCks = Seq(capped)
@@ -227,101 +233,10 @@ object Lineage {
       }
       // the closure is ≤ `limit` rows by construction — collect into a local
       // relation so the last round's barriers release with everything else
-      val outPlan = result.filter(col("column") =!= start)
-        .orderBy(col("depth"), col("column"))
+      val outPlan = (if (includeSeeds) result else result.filter(col("depth") > 0))
+        .orderBy(col("depth"), col(key))
       val rows = outPlan.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), outPlan.schema)
-    } finally {
-      liveCks.foreach(graft.Ckpt.free)
-      edges.unpersist()
-    }
-  }
-
-  /** GraphX/Pregel variant of the downstream closure — the shape to prefer
-    * when the lineage graph itself is huge (iterative joins re-shuffle per
-    * hop; Pregel keeps the partitioned graph resident across supersteps).
-    * spark-graphx ships in /opt/spark/jars. Equivalence with the iterative
-    * join version is asserted in tests. */
-  def downstreamClosureGraphX(spark: SparkSession, graph: DataFrame, start: String,
-      maxDepth: Int = 20): DataFrame = {
-    import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph, EdgeTriplet, Pregel}
-    import spark.implicits._
-    // vertex ids are derived distributively as xxhash64(name) — deterministic
-    // under recomputation (zipWithUniqueId could assign different ids when
-    // the shuffle behind it re-executes for the vertex vs edge jobs), with no
-    // driver-side edge collect, so the lineage graph can exceed driver
-    // memory. 64-bit collisions over a column-name vocabulary are negligible.
-    val edgePairs = graph.select(col("src"), col("dst")).distinct()
-    val edges = edgePairs
-      .select(xxhash64(col("src")).as("src_vid"), xxhash64(col("dst")).as("dst_vid"))
-      .as[(Long, Long)]
-      .rdd.map { case (s, d) => GxEdge(s, d, 1) }
-    // vertex attr carries (name, dist) so the result maps back to names
-    // without a driver-side id→name table
-    val vertices = edgePairs.select(col("src").as("name"))
-      .unionByName(edgePairs.select(col("dst").as("name")))
-      .distinct()
-      .select(xxhash64(col("name")).as("vid"), col("name"))
-      .as[(Long, String)]
-      .rdd.map { case (id, n) =>
-        (id, (n, if (n == start) 0 else Int.MaxValue))
-      }
-    val g = GxGraph(vertices, edges)
-    val res = Pregel(g, Int.MaxValue, maxIterations = maxDepth)(
-      (_, attr, msg) => (attr._1, math.min(attr._2, msg)),
-      (t: EdgeTriplet[(String, Int), Int]) =>
-        if (t.srcAttr._2 != Int.MaxValue && t.srcAttr._2 + 1 < t.dstAttr._2)
-          Iterator((t.dstId, t.srcAttr._2 + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
-    res.vertices
-      .flatMap { case (_, (name, d)) =>
-        if (d != Int.MaxValue && d > 0) Some((name, d)) else None }
-      .toDF("column", "depth")
-  }
-
-  /** Script-level downstream BFS over stitched links (A21). */
-  def downstreamScripts(spark: SparkSession, links: Dataset[RepoLink],
-      seeds: Seq[String], maxDepth: Int = 20): DataFrame = {
-    // adaptive like downstreamClosure: the script graph is one node per
-    // analyzed job, so in practice this always takes the driver path; the
-    // frontier-join loop below remains for a repo that outgrows the probe
-    val edgePlan = links
-      .select(col("fromScript").as("src"), col("toScript").as("dst")).distinct()
-    val probe = edgePlan.limit(DriverBfsMaxEdges + 1).collect()
-    if (probe.length <= DriverBfsMaxEdges)
-      return localDepthFrame(spark,
-        driverBfsSeq(probe.map(r => (r.getString(0), r.getString(1))).toSeq,
-          seeds, includeSeeds = true, maxDepth = maxDepth),
-        "script")
-    import spark.implicits._
-    val edges = edgePlan.cache()
-    var result = seeds.distinct.map((_, 0)).toDF("script", "depth")
-    var frontier = result
-    var liveCks = Seq.empty[DataFrame]
-    var depth = 0
-    var done = false
-    try {
-      while (!done && depth < maxDepth) {
-        depth += 1
-        val next = graft.Ckpt.eager(frontier.select(col("script").as("fscript")).as("f")
-          .join(edges.as("e"), col("fscript") === col("e.src"))
-          .select(col("e.dst").as("script"), lit(depth).as("depth"))
-          .distinct()
-          .join(result.select(col("script").as("seen")), col("script") === col("seen"), "left_anti"))
-        if (next.count() == 0) { graft.Ckpt.free(next); done = true }
-        else {
-          val merged = graft.Ckpt.eager(result.unionByName(next))
-          liveCks.foreach(graft.Ckpt.free)
-          liveCks = Seq(merged, next)
-          result = merged
-          frontier = next
-        }
-      }
-      // script universe is small by construction (one row per analyzed job):
-      // collect into a local relation so the last round's barriers release
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
     } finally {
       liveCks.foreach(graft.Ckpt.free)
       edges.unpersist()

@@ -114,19 +114,13 @@ object LineageQueries {
   def dumpRetrievalAux(s: SparkSession, dir: String, outDir: String): Unit = {
     import s.implicits._
     val ls = lineages(s, dir)
-    val docs = graft.PlanCache.cached(s, "qa_corpus", dir, dir) {
-      QA.corpus(s, ls, Lineage.edges(s, ls)).toDF()
-    }
-    val docVecs = graft.PlanCache.cached(s, "qa_docvecs", dir, dir) {
-      QA.embed(docs, "text")
-    }
     val qVecs = QA.embed((Seq(
       "question::q29" -> RetrievalQuestion,
       "question::q44" -> SimpleQuestion,
       "question::q30" -> EvidenceQuestion) ++
       QA.Questions.zipWithIndex.map { case (q, i) => s"question::qa$i" -> q })
       .toDF("id", "text"), "text")
-    docVecs.select("id", "v").unionByName(qVecs.select("id", "v"))
+    QA.Kb.docVecs(s, dir).select("id", "v").unionByName(qVecs.select("id", "v"))
       .select(col("id"),
         concat_ws(",", expr("transform(v, x -> CAST(x AS STRING))")).as("v_csv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/aux_qa_vectors")
@@ -293,7 +287,7 @@ object LineageQueries {
     * alphabetical fill, exactly what downstreamClosure applies. The
     * reference (qa/ask.py:211-223) instead stops in BFS discovery order, so
     * AT the cap boundary the retained subset can differ (documented at
-    * Lineage.downstreamClosure); below the cap the closures are identical.
+    * Lineage.closure); below the cap the closures are identical.
     * This puts the BFS semantics under the driver's hard rows+schema+hash
     * gate rather than only the self-refereed suite. */
   val impactClosure: Q = Q(
@@ -434,19 +428,10 @@ object LineageQueries {
     "q29_qa_retrieval",
     (s, dir) => {
       import s.implicits._
-      val ls = lineages(s, dir)
-      // one bounded persisted copy per (session, dir) — PlanCache replaces
-      // (and unpersists) the entry when the repo inputs change, so repeated
-      // driver invocations reuse instead of accumulating cache entries
-      val docs = graft.PlanCache.cached(s, "qa_corpus", dir, dir) {
-        QA.corpus(s, ls, Lineage.edges(s, ls)).toDF()
-      }
-      val docVecs = graft.PlanCache.cached(s, "qa_docvecs", dir, dir) {
-        QA.embed(docs, "text")
-      }
       val qVec = QA.embed(Seq(("question", RetrievalQuestion)).toDF("id", "text"), "text")
-      QA.retrieve(s, docVecs, qVec)
-        .join(docs.select(col("id").as("doc_id"), col("docType"), col("script")), "doc_id")
+      QA.retrieve(s, QA.Kb.docVecs(s, dir), qVec)
+        .join(QA.Kb.corpus(s, dir)
+          .select(col("id").as("doc_id"), col("docType"), col("script")), "doc_id")
         .select("rank", "doc_id", "dist", "docType", "script")
         .orderBy("rank")
     },
@@ -603,18 +588,11 @@ object LineageQueries {
     "q44_qa_retrieval_simple",
     (s, dir) => {
       import s.implicits._
-      val ls = lineages(s, dir)
-      // shares q29's bounded cached corpus (same name key) — see q29
-      val docs = graft.PlanCache.cached(s, "qa_corpus", dir, dir) {
-        QA.corpus(s, ls, Lineage.edges(s, ls)).toDF()
-      }
-      val docVecs = graft.PlanCache.cached(s, "qa_docvecs", dir, dir) {
-        QA.embed(docs, "text")
-      }
       val qVec = QA.embed(
         Seq(("question", SimpleQuestion)).toDF("id", "text"), "text")
-      QA.retrieve(s, docVecs, qVec, k = 6)
-        .join(docs.select(col("id").as("doc_id"), col("docType"), col("script")), "doc_id")
+      QA.retrieve(s, QA.Kb.docVecs(s, dir), qVec, k = 6)
+        .join(QA.Kb.corpus(s, dir)
+          .select(col("id").as("doc_id"), col("docType"), col("script")), "doc_id")
         .select("rank", "doc_id", "dist", "docType", "script")
         .orderBy("rank")
     },
@@ -622,9 +600,9 @@ object LineageQueries {
     oracleDyn = retrievalOracleDyn("question::q44", 6))
 
   /** q169: the q27 impact closure computed by Spark 4's native
-    * `WITH RECURSIVE` — the third independent implementation of the
-    * closure contract (adaptive driver/distributed BFS in q27, GraphX
-    * Pregel in InfraSpec, recursive SQL here), all hash-gated to agree.
+    * `WITH RECURSIVE` — a second, independent implementation of the
+    * closure contract (the adaptive driver/distributed BFS in q27,
+    * recursive SQL here), both hash-gated to agree.
     * Spark's recursion is UNION ALL-only, so termination and boundedness
     * come from the depth guard plus a DISTINCT in the recursive arm: each
     * step emits ≤ |columns| rows regardless of path multiplicity (a cycle

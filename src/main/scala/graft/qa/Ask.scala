@@ -27,64 +27,56 @@ object Ask {
 
   /** Evidence DataFrame + extracted candidates + a cleanup that unpersists
     * the per-QUESTION cache once the evidence has been materialized. The
-    * question-independent FRAMES (lineage edges, QA corpus, corpus
-    * embeddings) go through PlanCache — one bounded persisted copy per
-    * (session, sf-dir), shared with q29/q44 and warm across repeated
-    * questions. The question-dependent work (impact closure, script BFS,
-    * gold outputs, retrieval hits) still runs per question; only the hits
-    * frame is persisted, and the returned cleanup releases it. */
+    * question-independent frames come from the knowledge base ([[QA.Kb]]).
+    * The question-dependent work (impact closure, script BFS, gold outputs,
+    * retrieval hits) still runs per question; only the hits frame is
+    * persisted, and the returned cleanup releases it. */
   private[graft] def evidenceFrameManaged(spark: SparkSession, sfDir: String,
       question: String, cfg: QaConfig = QaConfig.default)
       : (DataFrame, Seq[String], () => Unit) = {
     import spark.implicits._
     val ls: Seq[ScriptLineage] = Repo.cachedLineage(spark, sfDir)
-    val edges = graft.PlanCache.cached(spark, "qa_edges", sfDir, sfDir) {
-      Lineage.edges(spark, ls).toDF()
-    }.as[graft.model.Edge]
-    // ONE bounded probe of the column-edge table replaces the per-question
+    val edges = QA.Kb.edges(spark, sfDir)
+    // ONE bounded read of the column-edge table replaces the per-question
     // known-columns / impact-closure / seed-script jobs: column lineage is
     // repo METADATA (O(scripts × columns), the sha1-pinned q25 table), so at
     // any plausible repo size the full edge list fits on the driver and the
-    // BFS/set work is instant Scala. A repo that outgrows the probe falls
-    // back to the distributed frames (the pre-round-7 path).
-    val probe = edges.select("srcCol", "targetCol", "script")
-      .limit(Lineage.DriverBfsMaxEdges + 1).collect()
-    val haveAllEdges = probe.length <= Lineage.DriverBfsMaxEdges
-    val known =
-      if (haveAllEdges) probe.iterator.flatMap(r => Seq(r.getString(0), r.getString(1))).toSet
-      else edges.select("targetCol").distinct().collect().map(_.getString(0)).toSet ++
-        edges.select("srcCol").distinct().collect().map(_.getString(0)).toSet
-    val cands = QA.candidateColumns(question, known, cfg.maxImpactCols)
-    val impact: DataFrame =
-      if (haveAllEdges) {
-        // columnGraph's closure-relevant content is the (src, dst) pairs
-        // minus self-loops; min-depth merge across candidates mirrors the
-        // frame-side groupBy(column).min(depth)
-        val pairs = probe.iterator.map(r => (r.getString(0), r.getString(1)))
-          .filter(p => p._1 != p._2).toSeq.distinct
-        val merged = cands.flatMap(Lineage.driverClosureSeq(pairs, _))
-          .groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).min) }.toSeq
-        Lineage.localDepthFrame(spark, merged, "column")
-      } else cands.map(Lineage.downstreamClosure(spark, Lineage.columnGraph(edges), _))
-        .reduceOption(_ unionByName _)
-        .getOrElse(Seq.empty[(String, Int)].toDF("column", "depth"))
-        .groupBy("column").agg(min("depth").as("depth"))
+    // BFS/set work is instant Scala. A repo that outgrows the read falls
+    // back to the distributed frames.
+    val (cands, impact, seeds) =
+      Lineage.collectIfSmall(edges.select("srcCol", "targetCol", "script")) match {
+        case Some(rows) =>
+          val cands = QA.candidateColumns(question,
+            rows.iterator.flatMap(r => Seq(r.getString(0), r.getString(1))).toSet,
+            cfg.maxImpactCols)
+          // columnGraph's closure-relevant content is the (src, dst) pairs
+          // minus self-loops; min-depth merge across candidates mirrors the
+          // frame-side groupBy(column).min(depth)
+          val pairs = rows.iterator.map(r => (r.getString(0), r.getString(1)))
+            .filter(p => p._1 != p._2).toSeq.distinct
+          val merged = cands.flatMap(c =>
+              Lineage.driverBfsSeq(pairs, Seq(c), includeSeeds = false, limit = 2000))
+            .groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).min) }.toSeq
+          val seeds = cands.flatMap { c =>
+            rows.iterator.filter(r => r.getString(0) == c || r.getString(1) == c)
+              .map(_.getString(2)).toSeq.distinct.sorted
+          }.distinct
+          (cands, Lineage.localDepthFrame(spark, merged, "column"), seeds)
+        case None =>
+          val cands = QA.candidateColumns(question, QA.knownColumns(edges),
+            cfg.maxImpactCols)
+          val impact = cands
+            .map(Lineage.downstreamClosure(spark, Lineage.columnGraph(edges), _))
+            .reduceOption(_ unionByName _)
+            .getOrElse(Seq.empty[(String, Int)].toDF("column", "depth"))
+            .groupBy("column").agg(min("depth").as("depth"))
+          (cands, impact, cands.flatMap(Lineage.seedScriptsForColumn(edges, _)).distinct)
+      }
     val links = Lineage.stitch(spark, ls)
-    val seeds =
-      if (haveAllEdges) cands.flatMap { c =>
-        probe.iterator.filter(r => r.getString(0) == c || r.getString(1) == c)
-          .map(_.getString(2)).toSeq.distinct.sorted
-      }.distinct
-      else cands.flatMap(Lineage.seedScriptsForColumn(edges, _)).distinct
     val scripts = Lineage.downstreamScripts(spark, links, seeds)
     val gold = Lineage.goldOutputs(spark, ls, scripts)
-    val docs = graft.PlanCache.cached(spark, "qa_corpus", sfDir, sfDir) {
-      QA.corpus(spark, ls, edges).toDF()
-    }
-    val docVecs = graft.PlanCache.cached(spark, "qa_docvecs", sfDir, sfDir) {
-      QA.embed(docs, "text")
-    }
-    val hits = QA.retrieve(spark, docVecs,
+    val docs = QA.Kb.corpus(spark, sfDir)
+    val hits = QA.retrieve(spark, QA.Kb.docVecs(spark, sfDir),
       QA.embed(Seq(("question", question)).toDF("id", "text"), "text"),
       k = cfg.topK).cache()
     val cleanup = () => { hits.unpersist(); () }

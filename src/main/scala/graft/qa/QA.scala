@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.lineage.Lineage
 import graft.model._
+import graft.pipelines.Repo
 
 /** Lineage Q&A layer — corpus build, deterministic embeddings, exact top-k
   * retrieval, candidate extraction, evidence assembly and grounded answering
@@ -29,6 +31,43 @@ object QA {
     "What is impacted downstream if `amount` changes?",
     "Where does avg_daily_spend come from?",
     "Which scripts reference total_spend?")
+
+  /** The question-independent knowledge base of an sf dir — lineage edges,
+    * column graph, corpus and corpus embeddings — each defined once here and
+    * held by PlanCache: one bounded persisted copy per (session, sf dir),
+    * shared by Ask, Query and the q29/q44 queries and warm across repeated
+    * questions. The corpus is built from the cached edges and the
+    * embeddings from the cached corpus, so an entry holds the same plan
+    * whichever consumer installs it first. */
+  object Kb {
+    def edges(spark: SparkSession, sfDir: String): Dataset[Edge] = {
+      import spark.implicits._
+      graft.PlanCache.cached(spark, "qa_edges", sfDir, sfDir) {
+        Lineage.edges(spark, Repo.cachedLineage(spark, sfDir)).toDF()
+      }.as[Edge]
+    }
+
+    def graph(spark: SparkSession, sfDir: String): DataFrame =
+      graft.PlanCache.cached(spark, "qa_graph", sfDir, sfDir) {
+        Lineage.columnGraph(edges(spark, sfDir))
+      }
+
+    def corpus(spark: SparkSession, sfDir: String): DataFrame =
+      graft.PlanCache.cached(spark, "qa_corpus", sfDir, sfDir) {
+        QA.corpus(spark, Repo.cachedLineage(spark, sfDir), edges(spark, sfDir)).toDF()
+      }
+
+    def docVecs(spark: SparkSession, sfDir: String): DataFrame =
+      graft.PlanCache.cached(spark, "qa_docvecs", sfDir, sfDir) {
+        embed(corpus(spark, sfDir), "text")
+      }
+  }
+
+  /** Every column an edge names, as source or target — the known-column set
+    * candidate extraction filters against, in one job. */
+  def knownColumns(edges: Dataset[Edge]): Set[String] =
+    edges.select(explode(array(col("srcCol"), col("targetCol")))).distinct()
+      .collect().map(_.getString(0)).toSet
 
   /** Corpus docs with stable sha1 ids (A14; qa/build_corpus.py:50-198). */
   def corpus(spark: SparkSession, lineages: Seq[ScriptLineage],

@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lineage.Lineage
-import graft.model.ScriptLineage
-import graft.pipelines.Repo
 
 /** The reference's third Q&A entry point, `qa/query.py` — the "HYBRID always"
   * variant. Differs from ask.py (graft.qa.Ask) in three observable ways, all
@@ -24,10 +22,11 @@ import graft.pipelines.Repo
   *    blank line, with candidate_cols / retrieved_docs debug counters —
   *    implemented in graft.qa.Ask's --repl mode on top of this evidence.
   *
-  * All graph/retrieval work is the same distributed plumbing Ask uses
-  * (closures are iterative Dataset joins, retrieval is broadcast-query
-  * window top-k); only the final capped formatting is driver-side, matching
-  * the reference's role for this layer.
+  * All graph/retrieval work is the same plumbing Ask uses (the knowledge
+  * base in [[QA.Kb]]; closures are adaptive — a driver BFS over a
+  * metadata-sized edge list, a frontier-join loop past it; retrieval is
+  * broadcast-query window top-k); only the final capped formatting is
+  * driver-side, matching the reference's role for this layer.
   */
 object Query {
 
@@ -45,22 +44,12 @@ object Query {
   def hybridEvidence(spark: SparkSession, sfDir: String, question: String,
       cfg: QaConfig = QaConfig.default): Hybrid = {
     import spark.implicits._
-    val ls: Seq[ScriptLineage] = Repo.cachedLineage(spark, sfDir)
-    // all question-independent frames (edges, dependency graph, corpus,
-    // corpus embeddings) via PlanCache: bounded, shared with Ask and
-    // q29/q44, warm across REPL questions — nothing per-question is cached
-    val edges = graft.PlanCache.cached(spark, "qa_edges", sfDir, sfDir) {
-      Lineage.edges(spark, ls).toDF()
-    }.as[graft.model.Edge]
-    val known = edges.select("targetCol").distinct().collect().map(_.getString(0)).toSet ++
-      edges.select("srcCol").distinct().collect().map(_.getString(0)).toSet
-    val cands = QA.candidateColumns(question, known, cfg.maxImpactCols)
-    val graph = graft.PlanCache.cached(spark, "qa_graph", sfDir, sfDir) {
-      Lineage.columnGraph(edges)
-    }
-    val docs = graft.PlanCache.cached(spark, "qa_corpus", sfDir, sfDir) {
-      QA.corpus(spark, ls, edges).toDF()
-    }
+    // all question-independent frames come from the knowledge base
+    // (QA.Kb); nothing per-question is cached
+    val cands = QA.candidateColumns(question,
+      QA.knownColumns(QA.Kb.edges(spark, sfDir)), cfg.maxImpactCols)
+    val graph = QA.Kb.graph(spark, sfDir)
+    val docs = QA.Kb.corpus(spark, sfDir)
 
     val parts = Seq.newBuilder[String]
     parts += "=== DETERMINISTIC IMPACT (GRAPH TRAVERSAL) ==="
@@ -88,10 +77,7 @@ object Query {
     }
 
     parts += "\n=== RETRIEVED LINEAGE FACTS (FAISS TOP-K) ==="
-    val docVecs = graft.PlanCache.cached(spark, "qa_docvecs", sfDir, sfDir) {
-      QA.embed(docs, "text")
-    }
-    val hits = QA.retrieve(spark, docVecs,
+    val hits = QA.retrieve(spark, QA.Kb.docVecs(spark, sfDir),
       QA.embed(Seq(("question", question)).toDF("id", "text"), "text"),
       k = cfg.topK)
       .join(docs.select(col("id").as("doc_id"), col("text")), "doc_id")

@@ -8,7 +8,8 @@ import graft.lineage.Lineage
 import graft.ops.Skew
 
 /** Cluster-infrastructure mechanics: runtime write capture, skew salting,
-  * GraphX closure equivalence, bucketed shuffle-free joins. */
+  * driver/distributed closure equivalence, bucketed shuffle-free joins, and
+  * source scans that keep shared decisions in one module. */
 class InfraSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -62,35 +63,47 @@ class InfraSpec extends AnyFunSuite {
     }
   }
 
-  test("GraphX Pregel closure matches the iterative-join closure") {
-    import spark.implicits._
-    val chain = ((0 until 10).map(i => (s"c$i", s"c${i + 1}", "r")) ++
-      Seq(("c3", "x1", "r"), ("x1", "c7", "r"))).toDF("src", "dst", "reason")
-    val viaJoins = Lineage.downstreamClosure(spark, chain, "c0", limit = 2000, maxDepth = 30)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val viaGx = Lineage.downstreamClosureGraphX(spark, chain, "c0", maxDepth = 30)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(viaGx === viaJoins)
-  }
-
   test("driver-BFS closure path is identical to the distributed loop, cap included") {
     import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    // both paths of Lineage.closure on one input: the small graph takes the
+    // driver path, the frontier-join loop is called directly
+    def bothPaths(edges: org.apache.spark.sql.DataFrame, seeds: Seq[String],
+        includeSeeds: Boolean, limit: Long, maxDepth: Int, key: String) = {
+      val pairs = edges.select(col("src"), col("dst")).distinct()
+      val viaDriver = rows(Lineage.closure(spark, pairs, seeds, includeSeeds,
+        limit, maxDepth, key))
+      val viaLoop = rows(Lineage.distributedClosure(spark, pairs, seeds,
+        includeSeeds, limit, maxDepth, key))
+      val what = s"seeds=$seeds includeSeeds=$includeSeeds limit=$limit"
+      assert(viaDriver === viaLoop, s"paths diverge: $what")
+      assert(viaDriver === viaDriver.sortBy { case (k, d) => (d, k) },
+        s"rows not sorted by (depth, $key): $what")
+      viaDriver
+    }
     // a diamond + chain + an overflowing level to exercise min-depth AND the
     // complete-levels-then-alphabetical-fill cap on BOTH paths
     val edges = ((0 until 6).map(i => (s"c$i", s"c${i + 1}")) ++
       Seq(("c1", "c4"), ("c2", "b1"), ("c2", "b2"), ("c2", "b3"), ("c2", "a1")))
       .toDF("src", "dst")
-    for (cap <- Seq(2000, 6)) {
-      val viaDriver = Lineage.driverClosure(spark,
-        edges.collect().map(r => (r.getString(0), r.getString(1))).toSeq,
-        "c0", limit = cap, maxDepth = 20)
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-      val viaLoop = Lineage.distributedClosure(spark,
-        edges.select(col("src"), col("dst")).distinct(),
-        "c0", limit = cap, maxDepth = 20)
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-      assert(viaDriver === viaLoop, s"paths diverge at cap=$cap")
+    for (cap <- Seq(2000L, 6L)) {
+      val out = bothPaths(edges, Seq("c0"), includeSeeds = false, cap, 20, "column")
+      assert(out.size === math.min(cap - 1, 10L), s"cap=$cap: $out")
     }
+    // the script-closure shape (downstreamScripts): several seeds, one
+    // reachable from another and one repeated, seeds kept at depth 0, no cap
+    val multi = bothPaths(edges, Seq("c3", "c1", "zz", "c1"), includeSeeds = true,
+      Long.MaxValue, 20, "script")
+    assert(multi === Seq("c1" -> 0, "c3" -> 0, "zz" -> 0, "c2" -> 1, "c4" -> 1,
+      "a1" -> 2, "b1" -> 2, "b2" -> 2, "b3" -> 2, "c5" -> 2, "c6" -> 3))
+    // a chain with a shortcut (c3 -> x1 -> c7): c7 and everything past it
+    // take the shorter path's depth
+    val chain = ((0 until 10).map(i => (s"c$i", s"c${i + 1}")) ++
+      Seq(("c3", "x1"), ("x1", "c7"))).toDF("src", "dst")
+    val viaShortcut = bothPaths(chain, Seq("c0"), includeSeeds = false, 2000L, 30, "column")
+    assert(viaShortcut.toMap === Map("c1" -> 1, "c2" -> 2, "c3" -> 3, "c4" -> 4,
+      "x1" -> 4, "c5" -> 5, "c7" -> 5, "c6" -> 6, "c8" -> 6, "c9" -> 7, "c10" -> 8))
   }
 
   test("per-row operators compile to zero-shuffle plans") {
@@ -151,8 +164,8 @@ class InfraSpec extends AnyFunSuite {
     val after1 = passes.persistentAfter1
     val after2 = passes.persistentAfter2
     // ≤, not ==: Spark's ContextCleaner asynchronously unpersists RDDs whose
-    // references were garbage-collected (e.g. GraphX Pregel internals from
-    // earlier tests), so the count may legitimately SHRINK between passes.
+    // references were garbage-collected (e.g. internals of earlier tests),
+    // so the count may legitimately SHRINK between passes.
     // Growth is the leak signature this gates — the pre-round-7 code added
     // dozens of never-released checkpoint RDDs per pass.
     assert(after2 <= after1,
@@ -257,6 +270,21 @@ class InfraSpec extends AnyFunSuite {
         if (n > 0) Some(p.getFileName.toString -> n) else None
       }
     assert(builders === Seq("Harness.scala" -> 1), builders.toString)
+  }
+
+  test("qa_* cache installs live only in qa/QA.scala, DriverBfsMaxEdges only in lineage/Lineage.scala") {
+    // the four qa_* knowledge-base frames are defined once (QA.Kb), so an
+    // entry's plan cannot depend on which consumer installed it first; the
+    // driver-or-distributed edge threshold is decided in Lineage alone
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val sources = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
+    def filesMatching(re: String) = sources.collect {
+      case (f, text) if re.r.findFirstIn(text).isDefined => f }.sorted
+    assert(filesMatching("""PlanCache\.cached\(\s*\w+\s*,\s*"qa_""") === Seq("qa/QA.scala"))
+    assert(filesMatching("DriverBfsMaxEdges") === Seq("lineage/Lineage.scala"))
   }
 
   test("materializeCtes hints non-recursive CTEs and skips self-referencing ones") {
