@@ -16,8 +16,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Freeing is safe ONLY after the frame's last action — a localCheckpoint'd
   * RDD cannot be recomputed, so an action after `free` fails rather than
   * silently recomputing. All call sites therefore free in `finally` blocks
-  * after the terminal action (collect / parquet publish), mirroring
-  * q30's managed-evidence pattern.
+  * after the terminal action (collect / parquet publish).
   */
 object Ckpt {
 

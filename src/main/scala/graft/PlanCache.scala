@@ -99,10 +99,9 @@ object PlanCache {
       entries.get(key) match {
         case Some(e) if e.fp == fp =>
           // self-heal: CacheManager uncaches by canonicalized plan, so an
-          // unrelated unpersist of an equivalent plan (e.g. q30's managed
-          // evidence cleanup sharing the QA-corpus subtree) can evict this
-          // entry out from under us — re-persist rather than silently
-          // recomputing per action forever
+          // unrelated unpersist of an equivalent plan can evict this entry
+          // out from under us — re-persist rather than silently recomputing
+          // per action forever
           if (e.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
             recordSelfHeal(key._2); e.df.persist()
           }

@@ -107,6 +107,20 @@ object VectorFunctions {
       copy(left = l, right = r)
   }
 
+  /** [[VecL2Sq]]'s sequential fold over two plain arrays, for driver-side
+    * callers that must agree with it bit for bit. */
+  def l2sq(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      val d = a(i) - b(i)
+      s += d * d
+      i += 1
+    }
+    s
+  }
+
   /** All LSH band keys of a vector in one fused loop:
     * `vec_band_keys(v, planes, bandBits)` → array<bigint> of
     * `planes.length / bandBits` keys, where bit j (most-significant first) of
@@ -188,12 +202,16 @@ object VectorFunctions {
     "sum_prod_long" -> (es => SumProdLong.build(es)))
 
   /** Idempotent per-session SQL registration, after which the functions are
-    * usable from expr()/spark.sql. */
-  def register(spark: SparkSession): Unit =
+    * usable from expr()/spark.sql. A name the session already has (an
+    * earlier call, or [[GraftExtensions]]) is left as it is, so repeated
+    * calls change nothing in the registry. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
 /** SparkSessionExtensions entry point: enables

@@ -8,9 +8,13 @@ import graft.model._
 /** Canonical lineage edges, repo stitching, dependency graphs and BFS closures
   * — the reference's postprocess/stitch/QA-graph layer
   * (lineage_postprocess.py:12-121, stitch_repo.py:4-30, qa/ask.py:167-341) as
-  * Dataset transformations. All inputs/outputs are flat Datasets, so at 100 TB
-  * of lineage metadata every step is a shuffle-partitioned join/groupBy, not a
-  * driver-side dict walk.
+  * Dataset transformations. Edges, links and graphs are flat Datasets built
+  * by shuffle-partitioned joins and groupBys; a closure walks them on the
+  * driver while the edge list fits [[collectIfSmall]]'s bound and as a
+  * frontier-join loop past it. Q&A ([[graft.qa.Ask]]) does not run these
+  * frames per question: it walks a driver-resident snapshot of the same
+  * edges and links ([[graft.qa.QA.Kb.snapshot]]) with [[driverBfsSeq]], and
+  * fails past the bound instead of distributing.
   */
 object Lineage {
 
@@ -86,16 +90,25 @@ object Lineage {
     * volume — so at any plausible repo size the complete edge list fits in
     * driver memory and scheduling a Spark job per BFS level is pure
     * overhead (measured: ~15 tiny jobs to walk a 130-edge graph). The
-    * distributed loop below stays the path for graphs that outgrow this. */
+    * distributed loop below stays the closure's path for graphs that
+    * outgrow this; the Q&A snapshot, which has no distributed path, fails
+    * past it ([[collectSmall]]). */
   private val DriverBfsMaxEdges = 65536
 
   /** The one bounded read that decides driver vs distributed for every
     * lineage consumer: `df`'s rows when it has at most [[DriverBfsMaxEdges]]
     * of them, None when it outgrows the driver. */
-  private[graft] def collectIfSmall(df: DataFrame): Option[Array[Row]] = {
+  private def collectIfSmall(df: DataFrame): Option[Array[Row]] = {
     val rows = df.limit(DriverBfsMaxEdges + 1).collect()
     if (rows.length <= DriverBfsMaxEdges) Some(rows) else None
   }
+
+  /** [[collectIfSmall]] for a consumer with no distributed path: `df`'s rows,
+    * or a loud failure naming the bound and `what` when it outgrows the
+    * driver. */
+  private[graft] def collectSmall(df: DataFrame, what: String): Array[Row] =
+    collectIfSmall(df).getOrElse(throw new IllegalStateException(
+      s"$what: more than $DriverBfsMaxEdges rows, past the driver-side bound"))
 
   /** Downstream transitive closure from a start column (A19): BFS with
     * min-depth semantics, capped — qa/ask.py:211-223 (limit 2000). */
@@ -104,13 +117,7 @@ object Lineage {
     closure(spark, graph.select(col("src"), col("dst")).distinct(), Seq(start),
       includeSeeds = false, limit, maxDepth, "column")
 
-  /** Script-level downstream BFS over stitched links (A21). */
-  def downstreamScripts(spark: SparkSession, links: Dataset[RepoLink],
-      seeds: Seq[String], maxDepth: Int = 20): DataFrame =
-    closure(spark, links.select(col("fromScript").as("src"), col("toScript").as("dst"))
-      .distinct(), seeds, includeSeeds = true, Long.MaxValue, maxDepth, "script")
-
-  /** The one closure behind A19 and A21: (key, depth) rows sorted by
+  /** The one closure frame behind A19: (key, depth) rows sorted by
     * (depth, key), seeds at depth 0 when `includeSeeds`. `limit` counts the
     * seeds; a level that overflows it keeps complete levels, then fills
     * alphabetically. The reference (qa/ask.py:211-223) stops in BFS
@@ -133,8 +140,8 @@ object Lineage {
     }
 
   /** The ONE driver-side level-synchronous BFS — [[closure]]'s driver path
-    * and qa.Ask's multi-candidate evidence both run it, so cap/min-depth
-    * semantics cannot drift between them. */
+    * and qa.Ask's column (A19) and script (A21) closures all run it, so
+    * cap/min-depth semantics cannot drift between them. */
   private[graft] def driverBfsSeq(edges: Seq[(String, String)], seeds: Seq[String],
       includeSeeds: Boolean, limit: Long = Long.MaxValue,
       maxDepth: Int = 20): Seq[(String, Int)] = {
@@ -166,7 +173,7 @@ object Lineage {
 
   /** (key, depth) pairs → a sorted local relation — the shared scaffolding
     * for every driver-path closure result. */
-  private[graft] def localDepthFrame(spark: SparkSession,
+  private def localDepthFrame(spark: SparkSession,
       pairs: Seq[(String, Int)], keyName: String): DataFrame = {
     val rows = pairs.sortBy { case (k, d) => (d, k) }
       .map { case (k, d) => org.apache.spark.sql.Row(k, d) }
@@ -241,22 +248,5 @@ object Lineage {
       liveCks.foreach(graft.Ckpt.free)
       edges.unpersist()
     }
-  }
-
-  /** Scripts whose lineage mentions a column (A21 seed set). */
-  def seedScriptsForColumn(edges: Dataset[Edge], column: String): Seq[String] =
-    edges.filter(col("targetCol") === column || col("srcCol") === column)
-      .select("script").distinct().collect().map(_.getString(0)).toSeq.sorted
-
-  /** Gold outputs among impacted scripts (A22): writes with a 'gold' path
-    * segment — qa/ask.py:343-360. */
-  def goldOutputs(spark: SparkSession, lineages: Seq[ScriptLineage],
-      impacted: DataFrame): DataFrame = {
-    import spark.implicits._
-    val writes = spark.createDataset(lineages.flatMap(_.assets))
-      .filter(col("direction") === "write")
-      .filter(array_contains(split(col("path"), "/"), "gold"))
-      .select(col("script"), col("path"))
-    writes.join(impacted, "script").select(col("script"), col("path")).distinct()
   }
 }

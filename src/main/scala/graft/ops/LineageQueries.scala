@@ -458,14 +458,7 @@ object LineageQueries {
     "q30_qa_evidence",
     (s, dir) => {
       import s.implicits._
-      // evidence is capped driver-side assembly (A23): materialize eagerly so
-      // the per-question caches can be released — repeated driver invocations
-      // must not accumulate persisted plans
-      val (ev, _, cleanup) = graft.qa.Ask.evidenceFrameManaged(s, dir, EvidenceQuestion)
-      val rows = try ev.orderBy("sec", "ord").collect()
-        .map(r => (r.getAs[String]("section"), r.getAs[String]("line"))).toSeq
-        finally cleanup()
-      rows.toDF("section", "line")
+      graft.qa.Ask.ask(s, dir, EvidenceQuestion).evidence.toDF("section", "line")
     },
     None,
     oracleDyn = Some(() => sys.props.get("graft.oracle.outdir")
@@ -480,7 +473,7 @@ object LineageQueries {
   /** Parenthesized DuckDB subquery re-deriving ONE question's capped
     * evidence lines — (sec, ord, section, line), sec = section ordinal,
     * ord = 1-based rank under the section's canonical sort, both matching
-    * [[QA.evidence]] — from this run's dumps. Shared by the q30 evidence
+    * [[graft.qa.Ask.ask]]'s evidence order — from this run's dumps. Shared by the q30 evidence
     * oracle and the per-question folds of the q183 grounded-answer oracle.
     * `vecId` names the question's embedding row in aux_qa_vectors. */
   private def evidenceLinesSubquery(out: String, question: String,
@@ -661,16 +654,9 @@ object LineageQueries {
     "q183_grounded_answers",
     (s, dir) => {
       import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // the three question pipelines are independent and overhead-bound
-      // (many tiny jobs on metadata-scale frames) — run them as concurrent
-      // Spark job groups; PlanCache serializes the shared corpus builds
-      val fs = QA.Questions.zipWithIndex.map { case (q, i) =>
-        Future((s"qa$i", graft.qa.Ask.ask(s, dir, q).answer))
-      }
-      fs.map(Await.result(_, Duration.Inf)).toDF("question_id", "answer")
+      QA.Questions.zipWithIndex.map { case (q, i) =>
+        (s"qa$i", graft.qa.Ask.ask(s, dir, q).answer)
+      }.toDF("question_id", "answer")
     },
     None,
     oracleDyn = Some(() => sys.props.get("graft.oracle.outdir")

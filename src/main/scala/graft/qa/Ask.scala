@@ -1,17 +1,21 @@
 package graft.qa
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 import graft.lineage.Lineage
-import graft.model.ScriptLineage
-import graft.pipelines.Repo
 
 /** Hybrid lineage Q&A — the reference's `qa/ask.py` entry point end-to-end:
   * candidate-column extraction → downstream column closure → script BFS →
   * gold outputs → vector retrieval → capped evidence → grounded answer.
   * Deterministic offline answerer by default; plug an LLM via QA.AnswerClient
   * without touching the truth path.
+  *
+  * A question runs no Spark job once its dir's knowledge base is warm: every
+  * step walks the driver-resident [[QA.Kb.snapshot]], as the reference walks
+  * its in-memory dict graph and flat index. The snapshot is built (a few
+  * bounded collects) on the first question about a dir and again when the
+  * dir's files change; a repo whose knowledge base outgrows the driver-side
+  * bound fails there, naming the bound and the dir.
   *
   * One-shot: sbt "runMain graft.qa.Ask <sfDir> <question...>"
   * REPL (qa/ask.py:377-388,476-519 / qa/query.py:424-474 — multiline
@@ -25,72 +29,36 @@ object Ask {
   final case class Result(answer: String, evidence: Seq[(String, String)],
       candidates: Seq[String])
 
-  /** Evidence DataFrame + extracted candidates + a cleanup that unpersists
-    * the per-QUESTION cache once the evidence has been materialized. The
-    * question-independent frames come from the knowledge base ([[QA.Kb]]).
-    * The question-dependent work (impact closure, script BFS, gold outputs,
-    * retrieval hits) still runs per question; only the hits frame is
-    * persisted, and the returned cleanup releases it. */
-  private[graft] def evidenceFrameManaged(spark: SparkSession, sfDir: String,
-      question: String, cfg: QaConfig = QaConfig.default)
-      : (DataFrame, Seq[String], () => Unit) = {
-    import spark.implicits._
-    val ls: Seq[ScriptLineage] = Repo.cachedLineage(spark, sfDir)
-    val edges = QA.Kb.edges(spark, sfDir)
-    // ONE bounded read of the column-edge table replaces the per-question
-    // known-columns / impact-closure / seed-script jobs: column lineage is
-    // repo METADATA (O(scripts × columns), the sha1-pinned q25 table), so at
-    // any plausible repo size the full edge list fits on the driver and the
-    // BFS/set work is instant Scala. A repo that outgrows the read falls
-    // back to the distributed frames.
-    val (cands, impact, seeds) =
-      Lineage.collectIfSmall(edges.select("srcCol", "targetCol", "script")) match {
-        case Some(rows) =>
-          val cands = QA.candidateColumns(question,
-            rows.iterator.flatMap(r => Seq(r.getString(0), r.getString(1))).toSet,
-            cfg.maxImpactCols)
-          // columnGraph's closure-relevant content is the (src, dst) pairs
-          // minus self-loops; min-depth merge across candidates mirrors the
-          // frame-side groupBy(column).min(depth)
-          val pairs = rows.iterator.map(r => (r.getString(0), r.getString(1)))
-            .filter(p => p._1 != p._2).toSeq.distinct
-          val merged = cands.flatMap(c =>
-              Lineage.driverBfsSeq(pairs, Seq(c), includeSeeds = false, limit = 2000))
-            .groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).min) }.toSeq
-          val seeds = cands.flatMap { c =>
-            rows.iterator.filter(r => r.getString(0) == c || r.getString(1) == c)
-              .map(_.getString(2)).toSeq.distinct.sorted
-          }.distinct
-          (cands, Lineage.localDepthFrame(spark, merged, "column"), seeds)
-        case None =>
-          val cands = QA.candidateColumns(question, QA.knownColumns(edges),
-            cfg.maxImpactCols)
-          val impact = cands
-            .map(Lineage.downstreamClosure(spark, Lineage.columnGraph(edges), _))
-            .reduceOption(_ unionByName _)
-            .getOrElse(Seq.empty[(String, Int)].toDF("column", "depth"))
-            .groupBy("column").agg(min("depth").as("depth"))
-          (cands, impact, cands.flatMap(Lineage.seedScriptsForColumn(edges, _)).distinct)
-      }
-    val links = Lineage.stitch(spark, ls)
-    val scripts = Lineage.downstreamScripts(spark, links, seeds)
-    val gold = Lineage.goldOutputs(spark, ls, scripts)
-    val docs = QA.Kb.corpus(spark, sfDir)
-    val hits = QA.retrieve(spark, QA.Kb.docVecs(spark, sfDir),
-      QA.embed(Seq(("question", question)).toDF("id", "text"), "text"),
-      k = cfg.topK).cache()
-    val cleanup = () => { hits.unpersist(); () }
-    (QA.evidence(spark, impact, scripts, gold, hits,
-      docs.as[graft.model.CorpusDoc], cfg), cands, cleanup)
-  }
-
+  /** Answer `question` from the knowledge-base snapshot of `sfDir`. The
+    * evidence (A23; qa/ask.py:391-450) is four sections in fixed order, each
+    * sorted by its canonical key and cut at its [[QaConfig]] cap:
+    * IMPACTED_COLUMN by (depth, column), the min depth over the candidates'
+    * closures (A19, 2000 nodes each); IMPACTED_SCRIPT by (depth, script),
+    * the closure of the candidates' scripts over the stitched links (A21,
+    * seeds at depth 0); GOLD_OUTPUT by (path, script), the gold writes of
+    * every impacted script, before the script cap (A22); FACT by rank, the
+    * top-k docs by L2 distance (A16/A17). */
   def ask(spark: SparkSession, sfDir: String, question: String,
       answerer: QA.AnswerClient = QA.DeterministicAnswerer,
       cfg: QaConfig = QaConfig.default): Result = {
-    val (ev, cands, cleanup) = evidenceFrameManaged(spark, sfDir, question, cfg)
-    val evidence = try ev.orderBy("sec", "ord").collect()
-      .map(r => (r.getAs[String]("section"), r.getAs[String]("line"))).toSeq
-      finally cleanup()
+    val kb = QA.Kb.snapshot(spark, sfDir)
+    val cands = QA.candidateColumns(question, kb.scriptsByCol.keySet, cfg.maxImpactCols)
+    val impact = cands
+      .flatMap(c => Lineage.driverBfsSeq(kb.colPairs, Seq(c), includeSeeds = false, limit = 2000))
+      .groupMapReduce(_._1)(_._2)(math.min).toSeq
+    val scripts = Lineage.driverBfsSeq(kb.links,
+      cands.flatMap(kb.scriptsByCol.getOrElse(_, Nil)).distinct, includeSeeds = true)
+    val impacted = scripts.map(_._1).toSet
+    val hits = QA.embedLocal(question).toSeq.flatMap(QA.retrieveLocal(kb.vecs, _, cfg.topK))
+    val evidence =
+      impact.sortBy { case (c, d) => (d, c) }.take(cfg.maxImpactShow)
+        .map { case (c, d) => "IMPACTED_COLUMN" -> s"$c (depth $d)" } ++
+      scripts.sortBy { case (sc, d) => (d, sc) }.take(cfg.maxScriptsShow)
+        .map { case (sc, _) => "IMPACTED_SCRIPT" -> sc } ++
+      kb.goldWrites.filter(w => impacted(w._1)).sortBy { case (sc, p) => (p, sc) }
+        .take(cfg.maxGoldShow).map { case (sc, p) => "GOLD_OUTPUT" -> s"$sc -> $p" } ++
+      hits.flatMap { case (id, rank) =>
+        kb.texts.getOrElse(id, Nil).map(t => "FACT" -> s"[$rank] $t") }
     Result(answerer.answer(question, evidence), evidence, cands)
   }
 

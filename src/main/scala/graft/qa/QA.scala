@@ -35,10 +35,14 @@ object QA {
   /** The question-independent knowledge base of an sf dir — lineage edges,
     * column graph, corpus and corpus embeddings — each defined once here and
     * held by PlanCache: one bounded persisted copy per (session, sf dir),
-    * shared by Ask, Query and the q29/q44 queries and warm across repeated
-    * questions. The corpus is built from the cached edges and the
-    * embeddings from the cached corpus, so an entry holds the same plan
-    * whichever consumer installs it first. */
+    * shared by Query, the q29/q44 queries and the retrieval aux dump, and
+    * warm across repeated questions. The corpus is built from the cached
+    * edges and the embeddings from the cached corpus, so an entry holds the
+    * same plan whichever consumer installs it first.
+    *
+    * [[Kb.snapshot]] collects the same knowledge base into driver values,
+    * the reference's in-memory dict graph plus flat index: Ask answers from
+    * it with no Spark job. */
   object Kb {
     def edges(spark: SparkSession, sfDir: String): Dataset[Edge] = {
       import spark.implicits._
@@ -61,6 +65,78 @@ object QA {
       graft.PlanCache.cached(spark, "qa_docvecs", sfDir, sfDir) {
         embed(corpus(spark, sfDir), "text")
       }
+
+    /** The knowledge base as driver values:
+      *  - `colPairs`: the column graph's distinct (src, dst) pairs, self-loops
+      *    dropped, as [[Lineage.columnGraph]] keeps them;
+      *  - `scriptsByCol`: each column an edge names, as source or target, to
+      *    the sorted scripts of those edges (the A21 seed sets); its keys are
+      *    the known-column set;
+      *  - `links`: the stitched (fromScript, toScript) pairs;
+      *  - `goldWrites`: the (script, path) writes with a `gold` path segment
+      *    (A22; qa/ask.py:343-360);
+      *  - `texts` and `vecs`: corpus text and embedding by doc id. */
+    final case class Snapshot(
+        colPairs: Seq[(String, String)],
+        scriptsByCol: Map[String, Seq[String]],
+        links: Seq[(String, String)],
+        goldWrites: Seq[(String, String)],
+        texts: Map[String, Seq[String]],
+        vecs: IndexedSeq[(String, Array[Double])])
+
+    private val snapshots =
+      scala.collection.concurrent.TrieMap.empty[String, (Long, Snapshot)]
+    private val snapshotLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
+    private val builds = new java.util.concurrent.atomic.AtomicLong
+
+    /** The [[Snapshot]] of `sfDir`, collected once from the frames above
+      * and rebuilt when the dir's fingerprint changes — the staleness rule
+      * of the `qa_*` entries. Concurrent callers on a cold dir build it
+      * once, under that dir's lock. Every collect is bounded
+      * ([[Lineage.collectSmall]]): a knowledge base past the bound fails
+      * here, naming the dir. */
+    def snapshot(spark: SparkSession, sfDir: String): Snapshot = {
+      def fresh(fp: Long) = snapshots.get(sfDir).collect { case (`fp`, kb) => kb }
+      fresh(graft.ops.Artifacts.fingerprint(spark, sfDir)).getOrElse {
+        snapshotLocks.getOrElseUpdate(sfDir, new Object).synchronized {
+          val fp = graft.ops.Artifacts.fingerprint(spark, sfDir)
+          fresh(fp).getOrElse {
+            val kb = buildSnapshot(spark, sfDir)
+            builds.incrementAndGet()
+            snapshots.put(sfDir, (fp, kb))
+            kb
+          }
+        }
+      }
+    }
+
+    /** Snapshots built so far in this JVM, and a way to make a dir cold —
+      * for tests of the build-once contract. */
+    private[graft] def snapshotBuilds: Long = builds.get
+    private[graft] def dropSnapshot(sfDir: String): Unit = snapshots.remove(sfDir)
+
+    private def buildSnapshot(spark: SparkSession, sfDir: String): Snapshot = {
+      val ls = Repo.cachedLineage(spark, sfDir)
+      def rows(df: DataFrame, what: String) = Lineage.collectSmall(df, s"$what of $sfDir").toSeq
+      val edgeRows = rows(edges(spark, sfDir).select("srcCol", "targetCol", "script"),
+        "the lineage edges").map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      val links = rows(Lineage.stitch(spark, ls).select("fromScript", "toScript").distinct(),
+        "the stitched links").map(r => (r.getString(0), r.getString(1)))
+      val texts = rows(corpus(spark, sfDir).select("id", "text"), "the corpus")
+        .groupMap(_.getString(0))(_.getString(1))
+      val vecs = rows(docVecs(spark, sfDir), "the corpus embeddings")
+        .map(r => (r.getString(0), r.getSeq[Double](1).toArray)).toIndexedSeq
+      Snapshot(
+        colPairs = edgeRows.collect { case (s, t, _) if s != t => (s, t) }.distinct,
+        scriptsByCol = edgeRows.flatMap { case (s, t, sc) => Seq(s -> sc, t -> sc) }
+          .groupMap(_._1)(_._2).view.mapValues(_.distinct.sorted).toMap,
+        links = links,
+        goldWrites = ls.flatMap(_.assets)
+          .filter(a => a.direction == "write" && a.path.split("/", -1).contains("gold"))
+          .map(a => (a.script, a.path)).distinct,
+        texts = texts,
+        vecs = vecs)
+    }
   }
 
   /** Every column an edge names, as source or target — the known-column set
@@ -151,6 +227,39 @@ object QA {
       .select(col("q_id"), col("id").as("doc_id"), col("rank"), col("dist"))
   }
 
+  /** [[embed]] of one text on the driver, bit-identical to it: the same
+    * tokens, XXH64 (seed 42) buckets `pmod` `dim`, counts divided by the
+    * square root of their sequential sum of squares. None when the text has
+    * no token, where [[embed]] emits no row. */
+  def embedLocal(text: String, dim: Int = Dim): Option[Array[Double]] = {
+    // regexp_replace runs before lower, so lower only ever sees ASCII
+    val toks = s"$text ${text.replace('_', ' ')}".replaceAll("[^a-zA-Z0-9_]+", " ")
+      .toLowerCase(java.util.Locale.ROOT).split(" ", -1).filter(_.nonEmpty)
+    if (toks.isEmpty) None
+    else {
+      val v = new Array[Double](dim)
+      toks.foreach { t =>
+        val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+        v(Math.floorMod(h, dim.toLong).toInt) += 1.0
+      }
+      var ss = 0.0
+      v.foreach(x => ss += x * x)
+      val norm = math.sqrt(ss)
+      Some(v.map(_ / norm))
+    }
+  }
+
+  /** [[retrieve]] for one query vector on the driver: brute-force L2 over
+    * every doc vector (the `vec_l2sq` fold, then `sqrt`), ordered by
+    * (dist, id); the first `k` doc ids with their 1-based ranks. */
+  def retrieveLocal(docVecs: Seq[(String, Array[Double])], q: Array[Double],
+      k: Int = TopK): Seq[(String, Long)] =
+    docVecs.map { case (id, v) => (math.sqrt(graft.functions.VectorFunctions.l2sq(q, v)), id) }
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+      .take(k).zipWithIndex.map { case ((_, id), i) => (id, i + 1L) }
+
   /** Candidate column extraction from a question (A20; qa/ask.py:226-244):
     * backticked tokens first, then bare identifier tokens — BOTH filtered to
     * the known-column set, matching the reference (an unknown ticked token
@@ -159,39 +268,6 @@ object QA {
     val ticked = "`([A-Za-z0-9_]+)`".r.findAllMatchIn(question).map(_.group(1)).toSeq
     val idents = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(question).toSeq
     (ticked ++ idents).filter(known.contains).distinct.take(max)
-  }
-
-  /** Evidence assembly (A23; qa/ask.py:391-450): deterministic sections with
-    * the reference's caps (overridable via [[QaConfig]]), one row per
-    * evidence line. Each row carries an explicit (sec, ord) position — the
-    * section ordinal and the 1-based within-section rank under that
-    * section's canonical sort — so consumers (the grounded answerer's
-    * take-10, q183's line fold) order by columns instead of relying on
-    * collect-order, which Spark does not guarantee across a union. The
-    * caps are applied as rank filters over the same sort, identical to the
-    * previous orderBy+limit. */
-  def evidence(spark: SparkSession, impactCols: DataFrame, impactedScripts: DataFrame,
-      gold: DataFrame, hits: DataFrame, corpusDocs: Dataset[CorpusDoc],
-      cfg: QaConfig = QaConfig.default): DataFrame = {
-    // single-partition windows: every section frame is metadata-scale
-    // (display-capped at 80/50/60/25 rows) — the warning is acceptable
-    def ranked(df: DataFrame, sec: Int, cap: Int, order: Seq[org.apache.spark.sql.Column],
-        section: String, line: org.apache.spark.sql.Column): DataFrame =
-      df.withColumn("ord", row_number().over(Window.orderBy(order: _*)).cast("long"))
-        .filter(col("ord") <= cap)
-        .select(lit(sec).as("sec"), col("ord"), lit(section).as("section"), line.as("line"))
-    val impact = ranked(impactCols, 1, cfg.maxImpactShow,
-      Seq(col("depth"), col("column")), "IMPACTED_COLUMN",
-      concat(col("column"), lit(" (depth "), col("depth"), lit(")")))
-    val scripts = ranked(impactedScripts, 2, cfg.maxScriptsShow,
-      Seq(col("depth"), col("script")), "IMPACTED_SCRIPT", col("script"))
-    val goldLines = ranked(gold, 3, cfg.maxGoldShow,
-      Seq(col("path"), col("script")), "GOLD_OUTPUT",
-      concat(col("script"), lit(" -> "), col("path")))
-    val facts = hits.join(corpusDocs.select(col("id").as("doc_id"), col("text")), "doc_id")
-      .select(lit(4).as("sec"), col("rank").as("ord"), lit("FACT").as("section"),
-        concat(lit("["), col("rank"), lit("] "), col("text")).as("line"))
-    impact.unionByName(scripts).unionByName(goldLines).unionByName(facts)
   }
 
   /** Grounded answering (A24): pluggable; default is the deterministic offline

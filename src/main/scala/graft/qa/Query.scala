@@ -22,11 +22,11 @@ import graft.lineage.Lineage
   *    blank line, with candidate_cols / retrieved_docs debug counters —
   *    implemented in graft.qa.Ask's --repl mode on top of this evidence.
   *
-  * All graph/retrieval work is the same plumbing Ask uses (the knowledge
-  * base in [[QA.Kb]]; closures are adaptive — a driver BFS over a
-  * metadata-sized edge list, a frontier-join loop past it; retrieval is
-  * broadcast-query window top-k); only the final capped formatting is
-  * driver-side, matching the reference's role for this layer.
+  * All graph/retrieval work runs on the knowledge-base frames ([[QA.Kb]]):
+  * closures are adaptive — a driver BFS over a metadata-sized edge list, a
+  * frontier-join loop past it; retrieval is broadcast-query window top-k;
+  * only the final capped formatting is driver-side. (Ask answers from the
+  * driver-resident snapshot of the same knowledge base instead.)
   */
 object Query {
 

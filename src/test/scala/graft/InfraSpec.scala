@@ -91,7 +91,7 @@ class InfraSpec extends AnyFunSuite {
       val out = bothPaths(edges, Seq("c0"), includeSeeds = false, cap, 20, "column")
       assert(out.size === math.min(cap - 1, 10L), s"cap=$cap: $out")
     }
-    // the script-closure shape (downstreamScripts): several seeds, one
+    // the script-closure shape (Ask's A21 walk): several seeds, one
     // reachable from another and one repeated, seeds kept at depth 0, no cap
     val multi = bothPaths(edges, Seq("c3", "c1", "zz", "c1"), includeSeeds = true,
       Long.MaxValue, 20, "script")

@@ -79,13 +79,11 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("script BFS + gold outputs for amount") {
-    val links = Lineage.stitch(spark, lineages)
-    val seeds = Lineage.seedScriptsForColumn(edges, "amount")
-    val scripts = Lineage.downstreamScripts(spark, links, seeds)
-    val names = scripts.collect().map(_.getString(0)).toSet
+    val ev = graft.qa.Ask.ask(spark, sfDir, "What is impacted downstream if `amount` changes?")
+      .evidence
+    val names = ev.collect { case ("IMPACTED_SCRIPT", l) => l }.toSet
     assert(names.contains("script_10_mart_customer_value"))
-    val gold = Lineage.goldOutputs(spark, lineages, scripts)
-      .collect().map(_.getString(1)).toSet
+    val gold = ev.collect { case ("GOLD_OUTPUT", l) => l.split(" -> ", 2)(1) }.toSet
     assert(gold.contains("gold/mart_customer_value"))
     assert(gold.contains("gold/fact_orders_enriched"))
   }
@@ -111,6 +109,115 @@ class LineageSpec extends AnyFunSuite {
     val top = hits.orderBy("rank").join(docs.select(col("id").as("doc_id"), col("text")), "doc_id")
       .limit(5).collect().map(_.getAs[String]("text"))
     assert(top.exists(_.contains("avg_daily_spend")), top.mkString("\n---\n"))
+  }
+
+  /** Every question the local embedding must match: the acceptance
+    * questions, each of their three templates over every lineage column
+    * (the benchmark's question stream), one with underscores and non-ASCII
+    * text, and one with no token at all. */
+  private val NoTokenQuestion = "¿¡ — … ?!"
+  private lazy val embedQuestions: Seq[String] = {
+    val cols = edges.toDF().select("srcCol", "targetCol").collect()
+      .flatMap(r => Seq(r.getString(0), r.getString(1)))
+      .filter(_.matches("[A-Za-z_][A-Za-z0-9_]*")).distinct.sorted.toSeq
+    val templates = QA.Questions.zip(Seq("`amount`", "avg_daily_spend", "total_spend"))
+    QA.Questions ++
+      cols.flatMap(c => templates.map { case (q, t) =>
+        q.replace(t, if (t.startsWith("`")) s"`$c`" else c) }) ++
+      Seq("Où va `total_spend` — straße_Ümlaut naïve_col 日本語 ∑x²?", NoTokenQuestion)
+  }
+  /** QA.embed of [[embedQuestions]], by question index. */
+  private lazy val sparkQuestionVecs: Map[Int, Array[Double]] = {
+    import spark.implicits._
+    QA.embed(embedQuestions.zipWithIndex.map { case (q, i) => (s"$i", q) }
+      .toDF("id", "text"), "text").collect()
+      .map(r => r.getString(0).toInt -> r.getSeq[Double](1).toArray).toMap
+  }
+
+  test("the driver-side question embedding is bit-identical to QA.embed") {
+    assert(embedQuestions.size > 3 * 50, embedQuestions.size)
+    def bits(v: Array[Double]) = v.map(java.lang.Double.doubleToRawLongBits).toSeq
+    embedQuestions.zipWithIndex.foreach { case (q, i) =>
+      assert(QA.embedLocal(q).map(bits) === sparkQuestionVecs.get(i).map(bits), q)
+    }
+    // no token, no vector on either side, so no FACT lines
+    assert(QA.embedLocal(NoTokenQuestion).isEmpty)
+    assert(!graft.qa.Ask.ask(spark, sfDir, NoTokenQuestion).evidence.exists(_._1 == "FACT"))
+  }
+
+  test("the driver-side top-k equals QA.retrieve's (doc_id, rank) for k = 25 and 6") {
+    import spark.implicits._
+    val docVecs = QA.Kb.docVecs(spark, sfDir)
+    val local = docVecs.collect().map(r => (r.getString(0), r.getSeq[Double](1).toArray)).toSeq
+    val qs = sparkQuestionVecs.toSeq.map { case (i, v) => (s"$i", v.toSeq) }
+    for (k <- Seq(25, 6)) {
+      val viaSpark = QA.retrieve(spark, docVecs, qs.toDF("id", "v"), k).collect()
+        .groupMap(_.getString(0))(r => (r.getString(1), r.getLong(2)))
+        .view.mapValues(_.sortBy(_._2).toSeq).toMap
+      assert(viaSpark.size === qs.size)
+      qs.foreach { case (i, v) =>
+        assert(QA.retrieveLocal(local, v.toArray, k) === viaSpark(i),
+          s"k=$k: ${embedQuestions(i.toInt)}")
+      }
+    }
+  }
+
+  test("a warm Ask.ask fires no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val q = QA.Questions.head
+    graft.qa.Ask.ask(spark, sfDir, q) // warms the knowledge-base snapshot
+    val group = "lineagespec-warm-ask"
+    val marker = "lineagespec-warm-ask-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "warm ask")
+      val r = graft.qa.Ask.ask(spark, sfDir, q)
+      // the listener bus delivers in order: once the marker job's start has
+      // arrived, every job the ask fired has been counted
+      sc.setJobGroup(marker, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(2, java.util.concurrent.TimeUnit.MINUTES))
+      assert(jobs.get === 0)
+      assert(r.evidence.exists(_._1 == "FACT") && r.evidence.exists(_._1 == "IMPACTED_COLUMN"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("four concurrent asks on a cold dir build one snapshot and agree") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      QA.Kb.dropSnapshot(sfDir)
+      val before = QA.Kb.snapshotBuilds
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val fs = (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[graft.qa.Ask.Result] {
+        def call() = { start.await(); graft.qa.Ask.ask(spark, sfDir, QA.Questions(1)) }
+      }))
+      start.countDown()
+      val rs = fs.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(QA.Kb.snapshotBuilds - before === 1)
+      assert(rs.distinct.size === 1)
+      assert(rs.head.evidence.nonEmpty)
+    } finally pool.shutdown()
+  }
+
+  test("a bounded driver collect past DriverBfsMaxEdges fails, naming the bound and what") {
+    assert(Lineage.collectSmall(spark.range(65536).toDF(), "small").length === 65536)
+    val e = intercept[IllegalStateException](
+      Lineage.collectSmall(spark.range(65537).toDF(), "the lineage edges of /x/sf"))
+    assert(e.getMessage.contains("65536") && e.getMessage.contains("/x/sf"), e.getMessage)
   }
 
   test("candidate extraction: known backticks first, then known identifiers, max 3") {

@@ -53,6 +53,21 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("bandBits"))
   }
 
+  test("a second register leaves the registry unchanged") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    VectorFunctions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("vec_dot", "vec_l2sq", "vec_band_keys", "kmv_minset",
+      "kmv_minarray", "priority_topk", "sum_prod_long")
+    def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    val before = infos
+    assert(before.forall(_.isDefined), names.zip(before).toString)
+    VectorFunctions.register(spark)
+    // a re-registration installs a fresh ExpressionInfo under the same name
+    names.zip(before).zip(infos).foreach { case ((n, b), a) =>
+      assert(a.get eq b.get, s"$n was re-registered") }
+  }
+
   test("vec_dot is usable from SQL after registration") {
     VectorFunctions.register(spark)
     val r = spark.sql("SELECT vec_dot(array(1D, 2D, 3D), array(4D, 5D, 6D)) AS d").head().getDouble(0)
