@@ -114,11 +114,11 @@ object PlanCache {
     * when `dir`'s backing files changed since the cached copy was built. */
   def cached(s: SparkSession, name: String, dir: String, fingerprintPath: String)
       (build: => DataFrame): DataFrame = {
-    // The fingerprint is a recursive filesystem-metadata walk (for qa_*
-    // entries, over the whole sf dir) — run it with no lock held so
-    // concurrent query threads don't serialize on FS round-trips on cache
-    // hits. The lock-free value is trusted only for a pure HIT (entry fp
-    // matches); the install path below re-walks under its key lock.
+    // The fingerprint is a recursive filesystem-metadata walk — run it
+    // with no lock held so concurrent query threads don't serialize on FS
+    // round-trips on cache hits. The lock-free value is trusted only for a
+    // pure HIT (entry fp matches); the install path below re-walks under
+    // its key lock.
     val key = (s, name, dir)
     hit(key, ops.Artifacts.fingerprint(s, fingerprintPath)) getOrElse {
       val kl = buildLocks.getOrElseUpdate(key, new Object)

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Loaders for the driver-provided testdata tables (see /root/repo/TESTDATA.md).
+/** Loaders for the driver-provided testdata tables (see TESTDATA.md) and
+  * the repo DAG's materialized assets ([[graft.pipelines.Repo]]): one
+  * catalog for every parquet read.
   *
   * All reads are plain parquet scans so Catalyst predicate pushdown / column
   * pruning reach the file source; callers must NOT cache or collect here.
@@ -47,9 +49,13 @@ object Tables {
     }
   }
 
+  /** The memoized parquet relation at `path`: a testdata table or a
+    * materialized [[graft.pipelines.Repo]] asset. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    memoized(spark, path)(spark.read.parquet(path))
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    memoized(spark, s"$dir/$name.parquet")(
-      spark.read.parquet(s"$dir/$name.parquet"))
+    parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -9,8 +9,9 @@ import graft.render.Mermaid
 
 /** Batch lineage-artifact dump — the reference's chained CLI pipeline
   * (static_extract → enrich → postprocess → stitch → build_html,
-  * README.md:183-237) as one Spark job: per-script lineage JSON, canonical
-  * edges, stitched repo graph, corpus docs, and the mermaid HTML report.
+  * README.md:183-237) as one run: per-script lineage JSON, canonical
+  * edges, stitched repo graph, corpus docs, and the mermaid HTML report,
+  * all derived on the driver from one extraction.
   *
   * Run: sbt "runMain graft.extract.LineageDump <sfDir> <outDir>"
   */
@@ -22,20 +23,20 @@ object LineageDump {
     import spark.implicits._
 
     val ls = Repo.lineage(spark, sfDir)
-    val edges = Lineage.edges(spark, ls).cache()
-    val links = Lineage.stitch(spark, ls).cache()
-    val docs = QA.corpus(spark, ls, edges)
+    val edges = Lineage.edges(ls)
+    val links = Lineage.stitch(ls)
+    val docs = QA.corpus(ls, edges).toDF()
 
     spark.createDataset(ls).coalesce(1).write.mode("overwrite")
       .json(s"$outDir/script_lineage")
-    edges.coalesce(1).write.mode("overwrite").json(s"$outDir/edges")
-    links.coalesce(1).write.mode("overwrite").json(s"$outDir/repo_graph")
+    edges.toDS().coalesce(1).write.mode("overwrite").json(s"$outDir/edges")
+    links.toDS().coalesce(1).write.mode("overwrite").json(s"$outDir/repo_graph")
     docs.coalesce(1).write.mode("overwrite").json(s"$outDir/corpus")
     // persisted vector index (id + embedding), the embed_index.py artifact
-    QA.embed(docs.toDF(), "text").coalesce(1)
+    QA.embed(docs, "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/index")
 
-    val html = Mermaid.html(ls, links.collect().toSeq, edges.collect().toSeq)
+    val html = Mermaid.html(ls, links, edges)
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/lineage_repo.html"), html)
     // reference-schema per-script JSON (drop-in for tooling against outputs/)
@@ -44,7 +45,7 @@ object LineageDump {
     ls.foreach(sl => Files.writeString(
       refDir.resolve(s"${sl.script}.json"), ReferenceJson.render(sl)))
     println(s"lineage artifacts written to $outDir " +
-      s"(${ls.size} scripts, ${edges.count()} edges, ${links.count()} links)")
+      s"(${ls.size} scripts, ${edges.size} edges, ${links.size} links)")
     spark.stop()
   }
 }

@@ -7,30 +7,26 @@ import graft.model._
 
 /** Canonical lineage edges, repo stitching, dependency graphs and BFS closures
   * — the reference's postprocess/stitch/QA-graph layer
-  * (lineage_postprocess.py:12-121, stitch_repo.py:4-30, qa/ask.py:167-341) as
-  * Dataset transformations. Edges, links and graphs are flat Datasets built
-  * by shuffle-partitioned joins and groupBys; a closure walks them on the
-  * driver while the edge list fits [[collectIfSmall]]'s bound and as a
-  * frontier-join loop past it. Q&A ([[graft.qa.Ask]]) does not run these
-  * frames per question: it walks a driver-resident snapshot of the same
-  * edges and links ([[graft.qa.QA.Kb.snapshot]]) with [[driverBfsSeq]], and
-  * fails past the bound instead of distributing.
+  * (lineage_postprocess.py:12-121, stitch_repo.py:4-30, qa/ask.py:167-341).
+  * Edges and links are plain Scala over the extracted `Seq[ScriptLineage]`,
+  * which already lives on the driver: repo metadata, O(scripts × columns).
+  * Their Dataset forms are local relations, so no Spark job runs before a
+  * consumer's own action. The column graph and the closure stay frames: a
+  * closure walks the graph on the driver while its edge list fits
+  * [[collectIfSmall]]'s bound and as a frontier-join loop past it. Q&A
+  * ([[graft.qa.Ask]], [[graft.qa.Query]]) walks the knowledge-base snapshot
+  * ([[graft.qa.QA.Kb.snapshot]]) with [[driverBfsSeq]] and runs no job.
   */
 object Lineage {
 
   /** Canonical column edges from extracted lineage (A11). Dedup key mirrors
     * the reference: (df, target, sorted sources) — lineage_postprocess.py:106-118.
-    *
-    * Dedup keeps the FIRST occurrence in plan-walk order (r13): the prior
-    * `dropDuplicates` delegates to a `first()` aggregate whose surviving
-    * `reason` is whatever row the shuffle read first — deterministic for a
-    * fixed local relation but unspecified under repartitioning. The
-    * explicit ordinal window pins the semantics ("earliest plan node wins",
-    * the reference's insertion-order dict behavior) so the q25 DuckDB
-    * oracle can recompose the exact rows from the raw plan-node dump. */
-  def edges(spark: SparkSession, lineages: Seq[ScriptLineage]): Dataset[Edge] = {
-    import spark.implicits._
-    val raw = for {
+    * The FIRST occurrence in plan-walk order wins per
+    * (script, df, targetCol, srcDf, srcCol) — "earliest plan node wins", the
+    * reference's insertion-order dict behavior — so the q25 DuckDB oracle can
+    * recompose the exact rows from the raw plan-node dump. */
+  def edges(lineages: Seq[ScriptLineage]): Seq[Edge] =
+    (for {
       sl <- lineages
       df <- sl.dfs
       cd <- df.columns
@@ -41,34 +37,29 @@ object Lineage {
         case (c, _) => ("", c)
       }
       Edge(sl.script, df.name, cd.name, srcDf, srcCol, cd.transformation)
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("script", "df", "targetCol", "srcDf", "srcCol")
-      .orderBy(col("ord"))
-    spark.createDataset(raw.zipWithIndex.map { case (e, i) => (e, i.toLong) })
-      .select(col("_1.*"), col("_2").as("ord"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("ord", "rn")
-      .as[Edge]
+    }).distinctBy(e => (e.script, e.df, e.targetCol, e.srcDf, e.srcCol))
+
+  /** [[edges]] as a local Dataset. */
+  def edges(spark: SparkSession, lineages: Seq[ScriptLineage]): Dataset[Edge] = {
+    import spark.implicits._
+    spark.createDataset(edges(lineages))
   }
 
   /** Writer→reader stitching on shared (already-normalized) asset paths (A12):
-    * an equi-join of writes against reads, trailing slashes stripped —
-    * stitch_repo.py:4-30. */
+    * writes matched to reads of the same path, trailing slashes stripped,
+    * self-links dropped, distinct — stitch_repo.py:4-30. */
+  def stitch(lineages: Seq[ScriptLineage]): Seq[RepoLink] = {
+    val assets = lineages.flatMap(_.assets).map(a => a.copy(path = a.path.replaceAll("/+$", "")))
+    val readers = assets.filter(_.direction == "read").groupMap(_.path)(_.script)
+    assets.filter(_.direction == "write").flatMap { w =>
+      readers.getOrElse(w.path, Nil).filter(_ != w.script).map(RepoLink(w.script, _, w.path))
+    }.distinct
+  }
+
+  /** [[stitch]] as a local Dataset. */
   def stitch(spark: SparkSession, lineages: Seq[ScriptLineage]): Dataset[RepoLink] = {
     import spark.implicits._
-    val assets = spark.createDataset(lineages.flatMap(_.assets))
-      .withColumn("norm", regexp_replace(col("path"), "/+$", ""))
-    val writes = assets.filter(col("direction") === "write")
-      .select(col("script").as("fromScript"), col("norm"))
-    val reads = assets.filter(col("direction") === "read")
-      .select(col("script").as("toScript"), col("norm"))
-    writes.join(reads, "norm")
-      .filter(col("fromScript") =!= col("toScript"))
-      .select(col("fromScript"), col("toScript"), col("norm").as("asset"))
-      .distinct()
-      .as[RepoLink]
+    spark.createDataset(stitch(lineages))
   }
 
   /** Global column dependency graph (A18): name-level src→dst with reasons —
@@ -91,24 +82,16 @@ object Lineage {
     * driver memory and scheduling a Spark job per BFS level is pure
     * overhead (measured: ~15 tiny jobs to walk a 130-edge graph). The
     * distributed loop below stays the closure's path for graphs that
-    * outgrow this; the Q&A snapshot, which has no distributed path, fails
-    * past it ([[collectSmall]]). */
+    * outgrow this. */
   private val DriverBfsMaxEdges = 65536
 
-  /** The one bounded read that decides driver vs distributed for every
-    * lineage consumer: `df`'s rows when it has at most [[DriverBfsMaxEdges]]
-    * of them, None when it outgrows the driver. */
+  /** The one bounded read that decides driver vs distributed for a closure:
+    * `df`'s rows when it has at most [[DriverBfsMaxEdges]] of them, None when
+    * it outgrows the driver. */
   private def collectIfSmall(df: DataFrame): Option[Array[Row]] = {
     val rows = df.limit(DriverBfsMaxEdges + 1).collect()
     if (rows.length <= DriverBfsMaxEdges) Some(rows) else None
   }
-
-  /** [[collectIfSmall]] for a consumer with no distributed path: `df`'s rows,
-    * or a loud failure naming the bound and `what` when it outgrows the
-    * driver. */
-  private[graft] def collectSmall(df: DataFrame, what: String): Array[Row] =
-    collectIfSmall(df).getOrElse(throw new IllegalStateException(
-      s"$what: more than $DriverBfsMaxEdges rows, past the driver-side bound"))
 
   /** Downstream transitive closure from a start column (A19): BFS with
     * min-depth semantics, capped — qa/ask.py:211-223 (limit 2000). */
@@ -139,9 +122,10 @@ object Lineage {
         distributedClosure(spark, pairs, seeds, includeSeeds, limit, maxDepth, key)
     }
 
-  /** The ONE driver-side level-synchronous BFS — [[closure]]'s driver path
-    * and qa.Ask's column (A19) and script (A21) closures all run it, so
-    * cap/min-depth semantics cannot drift between them. */
+  /** The ONE driver-side level-synchronous BFS — [[closure]]'s driver path,
+    * qa.Ask's column (A19) and script (A21) closures and qa.Query's column
+    * closure all run it, so cap/min-depth semantics cannot drift between
+    * them. */
   private[graft] def driverBfsSeq(edges: Seq[(String, String)], seeds: Seq[String],
       includeSeeds: Boolean, limit: Long = Long.MaxValue,
       maxDepth: Int = 20): Seq[(String, Int)] = {

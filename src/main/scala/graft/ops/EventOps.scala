@@ -888,7 +888,7 @@ object EventOps {
         .withColumn("day", col("pday") - col("lag"))
         .join(clicks, "day")
         .groupBy("lag").agg(sum(col("c") * col("p")).as("score"))
-      val full = broadcast(lags).join(scores, Seq("lag"), "left")
+      val full = lags.join(scores, Seq("lag"), "left")
         .withColumn("score", coalesce(col("score"), lit(0L)))
       full.withColumn("is_best",
         row_number().over(Window.orderBy(col("score").desc, col("lag"))) === 1)

@@ -339,12 +339,9 @@ object LineageQueries {
     * compare fails. */
   val corpusDocs: Q = Q(
     "q28_corpus_docs",
-    (s, dir) => {
-      val ls = lineages(s, dir)
-      QA.corpus(s, ls, Lineage.edges(s, ls)).toDF()
+    (s, dir) => QA.Kb.corpus(s, dir)
         .select("id", "docType", "script", "df", "column", "text")
-        .orderBy("docType", "script", "df", "column", "id")
-    },
+        .orderBy("docType", "script", "df", "column", "id"),
     None,
     oracleDyn = Some(() => sys.props.get("graft.oracle.outdir")
       .filter(out => freshDump(out, "aux_corpus_parts").isDefined &&
@@ -706,10 +703,8 @@ object LineageQueries {
     (s, dir) => {
       import s.implicits._
       val ls = lineages(s, dir).sortBy(_.script)
-      val links = Lineage.stitch(s, ls).collect().toSeq
-        .sortBy(l => (l.fromScript, l.toScript, l.asset))
-      val edges = Lineage.edges(s, ls).collect().toSeq
-        .sortBy(e => (e.srcDf, e.srcCol, e.df, e.targetCol, e.reason))
+      val links = Lineage.stitch(ls).sortBy(l => (l.fromScript, l.toScript, l.asset))
+      val edges = Lineage.edges(ls).sortBy(e => (e.srcDf, e.srcCol, e.df, e.targetCol, e.reason))
       val over = graft.render.Mermaid.overview(ls, links)
         .linesIterator.zipWithIndex
         .map { case (l, n) => ("overview", n.toLong, l) }.toSeq

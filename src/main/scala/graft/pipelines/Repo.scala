@@ -17,8 +17,11 @@ import graft.model._
   *
   * `materialize` runs the DAG (writing parquet per asset, partitioned where the
   * reference partitions); `lineage` re-binds every stage to its upstream assets
-  * and extracts plan-based column lineage (PlanLineage) — giving the Dataset
-  * inputs for edges/stitching/graphs/corpus downstream.
+  * and extracts plan-based column lineage (PlanLineage) — the driver values
+  * that edges, stitching, the column graph and the Q&A knowledge base
+  * ([[graft.qa.QA.Kb]]) derive from. Every stage reads through
+  * [[graft.Tables]], so a warm extraction only analyzes plans: it runs no
+  * Spark job.
   */
 object Repo {
 
@@ -27,12 +30,18 @@ object Repo {
       writeAsset: String,
       partitionBy: Seq[String],
       sqlBlocks: Seq[String],
-      build: (SparkSession, String => String) => DataFrame)
+      build: (SparkSession, String => DataFrame) => DataFrame)
 
-  /** Logical asset name → "raw/<table>" resolves to the sf dir. */
-  private def resolver(sfDir: String, repoDir: String)(asset: String): String =
-    if (asset.startsWith("raw/")) s"$sfDir/${asset.stripPrefix("raw/")}.parquet"
-    else s"$repoDir/$asset"
+  /** Logical asset name → its relation, read through [[graft.Tables]]'
+    * fingerprint-keyed catalog: "raw/<table>" is the sf dir's table (events
+    * through its layout-adaptive reader), anything else the materialized
+    * repo's asset. A warm read repeats no schema inference. */
+  private def reader(s: SparkSession, sfDir: String, repoDir: String)(asset: String): DataFrame =
+    asset.split("/", 2) match {
+      case Array("raw", "events") => graft.Tables.events(s, sfDir)
+      case Array("raw", t) => graft.Tables.table(s, sfDir, t)
+      case _ => graft.Tables.parquet(s, s"$repoDir/$asset")
+    }
 
   private val dimProductSql =
     """WITH typed AS (
@@ -82,7 +91,7 @@ object Repo {
 
   val stages: Seq[Stage] = Seq(
     Stage("script_01_bronze_ingest_orders", "bronze/orders", Seq("amount_bucket"), Nil,
-      (s, r) => s.read.parquet(r("raw/orders"))
+      (s, r) => r("raw/orders")
         .filter(col("o_totalprice") >= 0 && col("o_orderdate").isNotNull)
         .select(
           col("o_orderkey"), col("o_custkey"),
@@ -98,7 +107,7 @@ object Repo {
       (s, r) => {
         val w = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-        s.read.parquet(r("raw/orders"))
+        r("raw/orders")
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn")
           .select(
@@ -113,8 +122,8 @@ object Repo {
 
     Stage("script_03_fact_orders_enriched", "gold/fact_orders_enriched", Seq("value_tier"), Nil,
       (s, r) => {
-        val o = s.read.parquet(r("bronze/orders")).alias("o")
-        val c = s.read.parquet(r("silver/dim_customer")).alias("c")
+        val o = r("bronze/orders").alias("o")
+        val c = r("silver/dim_customer").alias("c")
         val w = Window.partitionBy(col("o_custkey")).orderBy(col("order_date"), col("o_orderkey"))
         o.join(c, col("o.o_custkey") === col("c.customer_id"), "left")
           .select(col("o.o_orderkey"), col("o.o_custkey"), col("o.order_date"),
@@ -126,16 +135,16 @@ object Repo {
 
     Stage("script_04_dim_product_sql_cte", "silver/dim_product", Nil, Seq(dimProductSql),
       (s, r) => {
-        s.read.parquet(r("raw/part")).createOrReplaceTempView("raw_part")
+        r("raw/part").createOrReplaceTempView("raw_part")
         s.sql(dimProductSql)
       }),
 
     Stage("script_05_sales_margin_rank", "gold/sales_margin", Nil, Nil,
       (s, r) => {
-        val fact = s.read.parquet(r("gold/fact_orders_enriched"))
+        val fact = r("gold/fact_orders_enriched")
           .withColumn("band", when(col("amount_bucket") === "low", "value")
             .when(col("amount_bucket") === "mid", "standard").otherwise("premium"))
-        val bands = s.read.parquet(r("silver/dim_product"))
+        val bands = r("silver/dim_product")
           .groupBy(col("price_band"))
           .agg(round(sum(col("price")), 2).as("band_price"), count(lit(1)).as("band_products"))
         val w = Window.partitionBy(col("band")).orderBy(col("margin").desc)
@@ -150,7 +159,7 @@ object Repo {
 
     Stage("script_06_web_sessionization", "gold/web_sessions", Nil, Nil,
       (s, r) => {
-        val ev = graft.Tables.eventsAt(s, r("raw/events"))
+        val ev = r("raw/events")
         val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         ev.withColumn("prev_ts", lag(col("ts"), 1).over(w))
           .withColumn("is_new_session",
@@ -165,8 +174,8 @@ object Repo {
 
     Stage("script_07_fraud_scoring", "gold/fact_orders_risk_scored", Nil, Nil,
       (s, r) => {
-        val fact = s.read.parquet(r("gold/fact_orders_enriched"))
-        val userStats = s.read.parquet(r("gold/web_sessions"))
+        val fact = r("gold/fact_orders_enriched")
+        val userStats = r("gold/web_sessions")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_sessions"), sum(col("events_n")).as("n_events"))
         val joined = fact.withColumn("uid", pmod(col("o_custkey"), lit(1000)))
@@ -191,8 +200,8 @@ object Repo {
 
     Stage("script_08_delta_merge_scd1_customer", "delta/dim_customer_scd1", Nil, Nil,
       (s, r) => {
-        val target = s.read.parquet(r("silver/dim_customer"))
-        val updates = s.read.parquet(r("raw/customer"))
+        val target = r("silver/dim_customer")
+        val updates = r("raw/customer")
           .filter(col("c_custkey") % 2 === 0)
           .select(col("c_custkey").as("u_custkey"), col("c_name").as("u_name"),
             (col("c_acctbal") * lit(1.1)).as("u_acctbal"))
@@ -209,7 +218,7 @@ object Repo {
 
     Stage("script_09_sql_merge_inventory", "delta/inventory", Nil, Seq(inventoryMergeSql),
       (s, r) => {
-        val ev = graft.Tables.eventsAt(s, r("raw/events"))
+        val ev = r("raw/events")
         val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
         def latest(df: DataFrame) =
           df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
@@ -228,14 +237,14 @@ object Repo {
 
     Stage("script_10_mart_customer_value", "gold/mart_customer_value", Nil, Seq(martSql),
       (s, r) => {
-        s.read.parquet(r("gold/fact_orders_enriched")).createOrReplaceTempView("fact_orders_enriched")
-        s.read.parquet(r("gold/fact_orders_risk_scored")).createOrReplaceTempView("fact_orders_risk_scored")
-        s.read.parquet(r("silver/dim_customer")).createOrReplaceTempView("dim_customer")
+        r("gold/fact_orders_enriched").createOrReplaceTempView("fact_orders_enriched")
+        r("gold/fact_orders_risk_scored").createOrReplaceTempView("fact_orders_risk_scored")
+        r("silver/dim_customer").createOrReplaceTempView("dim_customer")
         s.sql(martSql)
       }),
 
     Stage("script_a_customer_agg", "curated/customer_agg", Nil, Nil,
-      (s, r) => s.read.parquet(r("raw/lineitem"))
+      (s, r) => r("raw/lineitem")
         .groupBy(col("l_suppkey"), col("l_returnflag"))
         .agg(round(sum(col("l_quantity")), 2).as("total_qty"),
           round(sum(col("l_extendedprice")), 2).as("total_price"),
@@ -244,8 +253,8 @@ object Repo {
 
     Stage("script_b_join_products", "curated/joined_products", Nil, Nil,
       (s, r) => {
-        val agg = s.read.parquet(r("curated/customer_agg"))
-        val p = s.read.parquet(r("raw/part"))
+        val agg = r("curated/customer_agg")
+        val p = r("raw/part")
         agg.join(p, agg("l_suppkey") === p("p_partkey"), "left")
           .select(col("l_suppkey"), col("l_returnflag"), col("total_qty"),
             col("p_name"), col("p_retailprice"),
@@ -277,7 +286,7 @@ object Repo {
     val stamp = s"$sfDir fp=${graft.ops.Artifacts.fingerprint(spark, sfDir)} v=$dagVersion"
     val fresh = Files.exists(marker) && Files.readString(marker) == stamp
     if (!fresh) {
-      val r = resolver(sfDir, dir) _
+      val r = reader(spark, sfDir, dir) _
       stages.foreach { st =>
         val df = st.build(spark, r)
         val w = df.write.mode("overwrite")
@@ -295,7 +304,7 @@ object Repo {
     * asset using its logical path. */
   def lineage(spark: SparkSession, sfDir: String): Seq[ScriptLineage] = {
     val dir = materialize(spark, sfDir)
-    val r = resolver(sfDir, dir) _
+    val r = reader(spark, sfDir, dir) _
     stages.map { st =>
       val df = st.build(spark, r)
       val base = PlanLineage.extract(st.script, df, st.sqlBlocks)
@@ -318,7 +327,8 @@ object Repo {
     scala.collection.concurrent.TrieMap.empty[String, Seq[ScriptLineage]]
 
   /** Memoized [[lineage]] per sf-dir: the repo DAG is extracted once per JVM
-    * and shared by every consumer (q25–q30/q44, Ask, Query). In a real
+    * and shared by every consumer (q25–q30/q44, q169, q183, q184, and
+    * through the knowledge-base snapshot Ask and Query). In a real
     * deployment extraction is an offline artifact maintained beside the repo,
     * not per-question work. */
   def cachedLineage(spark: SparkSession, sfDir: String): Seq[ScriptLineage] =

@@ -10,12 +10,11 @@ import graft.lineage.Lineage
   * Deterministic offline answerer by default; plug an LLM via QA.AnswerClient
   * without touching the truth path.
   *
-  * A question runs no Spark job once its dir's knowledge base is warm: every
+  * A question runs no Spark job once its dir's lineage is extracted: every
   * step walks the driver-resident [[QA.Kb.snapshot]], as the reference walks
-  * its in-memory dict graph and flat index. The snapshot is built (a few
-  * bounded collects) on the first question about a dir and again when the
-  * dir's files change; a repo whose knowledge base outgrows the driver-side
-  * bound fails there, naming the bound and the dir.
+  * its in-memory dict graph and flat index. The snapshot is derived in plain
+  * Scala from [[graft.pipelines.Repo.cachedLineage]] on the first question
+  * about a dir.
   *
   * One-shot: sbt "runMain graft.qa.Ask <sfDir> <question...>"
   * REPL (qa/ask.py:377-388,476-519 / qa/query.py:424-474 — multiline

@@ -1,6 +1,6 @@
 package graft.qa
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -32,78 +32,60 @@ object QA {
     "Where does avg_daily_spend come from?",
     "Which scripts reference total_spend?")
 
-  /** The question-independent knowledge base of an sf dir — lineage edges,
-    * column graph, corpus and corpus embeddings — each defined once here and
-    * held by PlanCache: one bounded persisted copy per (session, sf dir),
-    * shared by Query, the q29/q44 queries and the retrieval aux dump, and
-    * warm across repeated questions. The corpus is built from the cached
-    * edges and the embeddings from the cached corpus, so an entry holds the
-    * same plan whichever consumer installs it first.
-    *
-    * [[Kb.snapshot]] collects the same knowledge base into driver values,
-    * the reference's in-memory dict graph plus flat index: Ask answers from
-    * it with no Spark job. */
+  /** The question-independent knowledge base of an sf dir, the reference's
+    * in-memory dict graph plus flat index: plain Scala values derived once
+    * from [[Repo.cachedLineage]], with no Spark job. Ask and Query answer
+    * from its [[Kb.snapshot]]; q28, q29, q44 and the retrieval aux dump read
+    * its corpus and vectors as local Datasets. */
   object Kb {
-    def edges(spark: SparkSession, sfDir: String): Dataset[Edge] = {
-      import spark.implicits._
-      graft.PlanCache.cached(spark, "qa_edges", sfDir, sfDir) {
-        Lineage.edges(spark, Repo.cachedLineage(spark, sfDir)).toDF()
-      }.as[Edge]
-    }
 
-    def graph(spark: SparkSession, sfDir: String): DataFrame =
-      graft.PlanCache.cached(spark, "qa_graph", sfDir, sfDir) {
-        Lineage.columnGraph(edges(spark, sfDir))
-      }
-
-    def corpus(spark: SparkSession, sfDir: String): DataFrame =
-      graft.PlanCache.cached(spark, "qa_corpus", sfDir, sfDir) {
-        QA.corpus(spark, Repo.cachedLineage(spark, sfDir), edges(spark, sfDir)).toDF()
-      }
-
-    def docVecs(spark: SparkSession, sfDir: String): DataFrame =
-      graft.PlanCache.cached(spark, "qa_docvecs", sfDir, sfDir) {
-        embed(corpus(spark, sfDir), "text")
-      }
-
-    /** The knowledge base as driver values:
+    /** The knowledge base derived from one extraction (`lineages`):
+      *  - `edges` and `links`: [[Lineage.edges]] and the distinct
+      *    (fromScript, toScript) pairs of [[Lineage.stitch]];
       *  - `colPairs`: the column graph's distinct (src, dst) pairs, self-loops
       *    dropped, as [[Lineage.columnGraph]] keeps them;
       *  - `scriptsByCol`: each column an edge names, as source or target, to
       *    the sorted scripts of those edges (the A21 seed sets); its keys are
       *    the known-column set;
-      *  - `links`: the stitched (fromScript, toScript) pairs;
       *  - `goldWrites`: the (script, path) writes with a `gold` path segment
       *    (A22; qa/ask.py:343-360);
-      *  - `texts` and `vecs`: corpus text and embedding by doc id. */
-    final case class Snapshot(
-        colPairs: Seq[(String, String)],
-        scriptsByCol: Map[String, Seq[String]],
-        links: Seq[(String, String)],
-        goldWrites: Seq[(String, String)],
-        texts: Map[String, Seq[String]],
-        vecs: IndexedSeq[(String, Array[Double])])
+      *  - `docs`, `texts` and `vecs`: the corpus, its texts by doc id and one
+      *    [[embedLocal]] vector per distinct doc id. */
+    final class Snapshot private[Kb] (private[Kb] val lineages: Seq[ScriptLineage]) {
+      val edges: Seq[Edge] = Lineage.edges(lineages)
+      val links: Seq[(String, String)] =
+        Lineage.stitch(lineages).map(l => (l.fromScript, l.toScript)).distinct
+      val colPairs: Seq[(String, String)] =
+        edges.collect { case e if e.srcCol != e.targetCol => (e.srcCol, e.targetCol) }.distinct
+      val scriptsByCol: Map[String, Seq[String]] =
+        edges.flatMap(e => Seq(e.srcCol -> e.script, e.targetCol -> e.script))
+          .groupMap(_._1)(_._2).view.mapValues(_.distinct.sorted).toMap
+      val goldWrites: Seq[(String, String)] = lineages.flatMap(_.assets)
+        .filter(a => a.direction == "write" && a.path.split("/", -1).contains("gold"))
+        .map(a => (a.script, a.path)).distinct
+      val docs: Seq[CorpusDoc] = QA.corpus(lineages, edges)
+      val texts: Map[String, Seq[String]] = docs.groupMap(_.id)(_.text)
+      val vecs: IndexedSeq[(String, Array[Double])] = docs.distinctBy(_.id)
+        .flatMap(d => embedLocal(d.text).map(d.id -> _)).toIndexedSeq
+    }
 
-    private val snapshots =
-      scala.collection.concurrent.TrieMap.empty[String, (Long, Snapshot)]
+    private val snapshots = scala.collection.concurrent.TrieMap.empty[String, Snapshot]
     private val snapshotLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
     private val builds = new java.util.concurrent.atomic.AtomicLong
 
-    /** The [[Snapshot]] of `sfDir`, collected once from the frames above
-      * and rebuilt when the dir's fingerprint changes — the staleness rule
-      * of the `qa_*` entries. Concurrent callers on a cold dir build it
-      * once, under that dir's lock. Every collect is bounded
-      * ([[Lineage.collectSmall]]): a knowledge base past the bound fails
-      * here, naming the dir. */
+    /** The [[Snapshot]] of `sfDir`, derived once from the dir's
+      * [[Repo.cachedLineage]] and again only if that extraction is replaced.
+      * Concurrent callers on a cold dir build it once, under that dir's
+      * lock. */
     def snapshot(spark: SparkSession, sfDir: String): Snapshot = {
-      def fresh(fp: Long) = snapshots.get(sfDir).collect { case (`fp`, kb) => kb }
-      fresh(graft.ops.Artifacts.fingerprint(spark, sfDir)).getOrElse {
+      val ls = Repo.cachedLineage(spark, sfDir)
+      def fresh = snapshots.get(sfDir).filter(_.lineages eq ls)
+      fresh.getOrElse {
         snapshotLocks.getOrElseUpdate(sfDir, new Object).synchronized {
-          val fp = graft.ops.Artifacts.fingerprint(spark, sfDir)
-          fresh(fp).getOrElse {
-            val kb = buildSnapshot(spark, sfDir)
+          fresh.getOrElse {
+            val kb = new Snapshot(ls)
             builds.incrementAndGet()
-            snapshots.put(sfDir, (fp, kb))
+            snapshots.put(sfDir, kb)
             kb
           }
         }
@@ -115,40 +97,24 @@ object QA {
     private[graft] def snapshotBuilds: Long = builds.get
     private[graft] def dropSnapshot(sfDir: String): Unit = snapshots.remove(sfDir)
 
-    private def buildSnapshot(spark: SparkSession, sfDir: String): Snapshot = {
-      val ls = Repo.cachedLineage(spark, sfDir)
-      def rows(df: DataFrame, what: String) = Lineage.collectSmall(df, s"$what of $sfDir").toSeq
-      val edgeRows = rows(edges(spark, sfDir).select("srcCol", "targetCol", "script"),
-        "the lineage edges").map(r => (r.getString(0), r.getString(1), r.getString(2)))
-      val links = rows(Lineage.stitch(spark, ls).select("fromScript", "toScript").distinct(),
-        "the stitched links").map(r => (r.getString(0), r.getString(1)))
-      val texts = rows(corpus(spark, sfDir).select("id", "text"), "the corpus")
-        .groupMap(_.getString(0))(_.getString(1))
-      val vecs = rows(docVecs(spark, sfDir), "the corpus embeddings")
-        .map(r => (r.getString(0), r.getSeq[Double](1).toArray)).toIndexedSeq
-      Snapshot(
-        colPairs = edgeRows.collect { case (s, t, _) if s != t => (s, t) }.distinct,
-        scriptsByCol = edgeRows.flatMap { case (s, t, sc) => Seq(s -> sc, t -> sc) }
-          .groupMap(_._1)(_._2).view.mapValues(_.distinct.sorted).toMap,
-        links = links,
-        goldWrites = ls.flatMap(_.assets)
-          .filter(a => a.direction == "write" && a.path.split("/", -1).contains("gold"))
-          .map(a => (a.script, a.path)).distinct,
-        texts = texts,
-        vecs = vecs)
+    /** The snapshot's corpus as a local Dataset, [[CorpusDoc]]'s columns. */
+    def corpus(spark: SparkSession, sfDir: String): DataFrame =
+      spark.createDataFrame(snapshot(spark, sfDir).docs)
+
+    /** The snapshot's doc vectors as a local (id, v) Dataset, the shape
+      * [[embed]] gives. */
+    def docVecs(spark: SparkSession, sfDir: String): DataFrame = {
+      import spark.implicits._
+      snapshot(spark, sfDir).vecs.map { case (id, v) => (id, v.toSeq) }.toDF("id", "v")
     }
   }
 
-  /** Every column an edge names, as source or target — the known-column set
-    * candidate extraction filters against, in one job. */
-  def knownColumns(edges: Dataset[Edge]): Set[String] =
-    edges.select(explode(array(col("srcCol"), col("targetCol")))).distinct()
-      .collect().map(_.getString(0)).toSet
-
-  /** Corpus docs with stable sha1 ids (A14; qa/build_corpus.py:50-198). */
-  def corpus(spark: SparkSession, lineages: Seq[ScriptLineage],
-      edges: Dataset[Edge]): Dataset[CorpusDoc] = {
-    import spark.implicits._
+  /** Corpus docs (A14; qa/build_corpus.py:50-198): script, derived-column,
+    * aggregation and join cards from the extraction, then one card per
+    * canonical edge. A doc's id is the lowercase SHA-1 hex of the UTF-8
+    * bytes of `docType||script||df||column||text`, which Spark's
+    * `sha1(concat_ws("||", …))` gives too. */
+  def corpus(lineages: Seq[ScriptLineage], edges: Seq[Edge]): Seq[CorpusDoc] = {
     val scriptDocs = lineages.map { sl =>
       val reads = sl.assets.filter(_.direction == "read").map(a => s"- ${a.format} ${a.path}")
       val writes = sl.assets.filter(_.direction == "write").map(a => s"- ${a.df} -> ${a.format} ${a.path}")
@@ -178,18 +144,18 @@ object QA {
           s"RIGHT: ${j.rightCols.mkString("[", ", ", "]")}",
         "join", j.script, j.df, "")
     }
-    val local = spark.createDataset(scriptDocs ++ derivedDocs ++ aggDocs ++ joinDocs)
-    val edgeDocs = edges.select(
-      lit("").as("id"),
-      concat(lit("SCRIPT: "), col("script"), lit("\nLINEAGE_EDGE: "),
-        col("srcDf"), lit("."), col("srcCol"), lit(" -> "),
-        col("df"), lit("."), col("targetCol"), lit("\nREASON: "), col("reason")).as("text"),
-      lit("lineage_edge").as("docType"),
-      col("script"), col("df"), col("targetCol").as("column")).as[CorpusDoc]
-    local.unionByName(edgeDocs)
-      .withColumn("id", sha1(concat_ws("||", col("docType"), col("script"),
-        col("df"), col("column"), col("text"))))
-      .as[CorpusDoc]
+    val edgeDocs = edges.map { e =>
+      CorpusDoc("",
+        s"SCRIPT: ${e.script}\nLINEAGE_EDGE: ${e.srcDf}.${e.srcCol} -> ${e.df}.${e.targetCol}\n" +
+          s"REASON: ${e.reason}",
+        "lineage_edge", e.script, e.df, e.targetCol)
+    }
+    (scriptDocs ++ derivedDocs ++ aggDocs ++ joinDocs ++ edgeDocs).map { d =>
+      val key = Seq(d.docType, d.script, d.df, d.column, d.text).filter(_ != null).mkString("||")
+      val sha = java.security.MessageDigest.getInstance("SHA-1")
+        .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      d.copy(id = sha.map(b => f"$b%02x").mkString)
+    }
   }
 
   /** Deterministic hashed bag-of-tokens embedding (A15 stand-in for the remote

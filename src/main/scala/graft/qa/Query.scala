@@ -1,7 +1,6 @@
 package graft.qa
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.lineage.Lineage
 
@@ -22,11 +21,10 @@ import graft.lineage.Lineage
   *    blank line, with candidate_cols / retrieved_docs debug counters —
   *    implemented in graft.qa.Ask's --repl mode on top of this evidence.
   *
-  * All graph/retrieval work runs on the knowledge-base frames ([[QA.Kb]]):
-  * closures are adaptive — a driver BFS over a metadata-sized edge list, a
-  * frontier-join loop past it; retrieval is broadcast-query window top-k;
-  * only the final capped formatting is driver-side. (Ask answers from the
-  * driver-resident snapshot of the same knowledge base instead.)
+  * It answers from the same driver-resident knowledge base as Ask
+  * ([[QA.Kb.snapshot]]): the column closure by [[Lineage.driverBfsSeq]],
+  * the 1-hop reasons from the snapshot's edges, retrieval by
+  * [[QA.embedLocal]] / [[QA.retrieveLocal]]. A question runs no Spark job.
   */
 object Query {
 
@@ -43,13 +41,8 @@ object Query {
   /** Build the query.py-shaped evidence for one question. */
   def hybridEvidence(spark: SparkSession, sfDir: String, question: String,
       cfg: QaConfig = QaConfig.default): Hybrid = {
-    import spark.implicits._
-    // all question-independent frames come from the knowledge base
-    // (QA.Kb); nothing per-question is cached
-    val cands = QA.candidateColumns(question,
-      QA.knownColumns(QA.Kb.edges(spark, sfDir)), cfg.maxImpactCols)
-    val graph = QA.Kb.graph(spark, sfDir)
-    val docs = QA.Kb.corpus(spark, sfDir)
+    val kb = QA.Kb.snapshot(spark, sfDir)
+    val cands = QA.candidateColumns(question, kb.scriptsByCol.keySet, cfg.maxImpactCols)
 
     val parts = Seq.newBuilder[String]
     parts += "=== DETERMINISTIC IMPACT (GRAPH TRAVERSAL) ==="
@@ -57,9 +50,8 @@ object Query {
       parts += "No explicit column found in question to run impact traversal."
     else cands.foreach { c =>
       parts += s"Start column: $c"
-      val impacted = Lineage.downstreamClosure(spark, graph, c)
-        .orderBy(col("depth"), col("column"))
-        .collect().map(_.getString(0)).toSeq
+      val impacted = Lineage.driverBfsSeq(kb.colPairs, Seq(c), includeSeeds = false, limit = 2000)
+        .sortBy { case (k, d) => (d, k) }.map(_._1)
       if (impacted.isEmpty)
         parts += "  No downstream impacted columns found from available lineage."
       else {
@@ -67,28 +59,23 @@ object Query {
         impacted.take(60).foreach(x => parts += s"   - $x")
         if (impacted.size > 60) parts += s"   - ... (${impacted.size - 60} more)"
         parts += "  Direct (1-hop) edges with reasons:"
-        graph.filter(col("src") === c)
-          .groupBy(col("dst"))
-          .agg(array_join(sort_array(collect_set(col("reason"))), "; ").as("why"))
-          .orderBy(col("dst")).limit(15)
-          .collect()
-          .foreach(r => parts += s"   - $c -> ${r.getString(0)}: ${r.getString(1)}")
+        // the reason text of Lineage.columnGraph, per distinct target
+        kb.edges.filter(e => e.srcCol == c && e.targetCol != c)
+          .groupMap(_.targetCol)(e => s"${e.script}: ${e.srcDf}.${e.srcCol} -> " +
+            s"${e.df}.${e.targetCol} (${e.reason})")
+          .toSeq.sortBy(_._1).take(15)
+          .foreach { case (dst, why) => parts += s"   - $c -> $dst: ${why.distinct.sorted.mkString("; ")}" }
       }
     }
 
     parts += "\n=== RETRIEVED LINEAGE FACTS (FAISS TOP-K) ==="
-    val hits = QA.retrieve(spark, QA.Kb.docVecs(spark, sfDir),
-      QA.embed(Seq(("question", question)).toDF("id", "text"), "text"),
-      k = cfg.topK)
-      .join(docs.select(col("id").as("doc_id"), col("text")), "doc_id")
-      .orderBy(col("rank"))
-      .select(col("rank"), col("doc_id"), col("text"))
-      .collect()
-    hits.foreach { r =>
-      val collapsed = r.getString(2).trim.split("\\s+").mkString(" ")
-      parts += f"${r.getLong(0)}%02d. ${r.getString(1)} :: $collapsed"
+    val hits = QA.embedLocal(question).toSeq.flatMap(QA.retrieveLocal(kb.vecs, _, cfg.topK))
+      .flatMap { case (id, rank) => kb.texts.getOrElse(id, Nil).map((rank, id, _)) }
+    hits.foreach { case (rank, id, text) =>
+      val collapsed = text.trim.split("\\s+").mkString(" ")
+      parts += f"$rank%02d. $id :: $collapsed"
     }
-    Hybrid(parts.result().mkString("\n"), cands, hits.length.toLong)
+    Hybrid(parts.result().mkString("\n"), cands, hits.size.toLong)
   }
 
   private def jsonEscape(s: String): String = s.flatMap {

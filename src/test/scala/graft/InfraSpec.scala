@@ -272,10 +272,11 @@ class InfraSpec extends AnyFunSuite {
     assert(builders === Seq("Harness.scala" -> 1), builders.toString)
   }
 
-  test("qa_* cache installs live only in qa/QA.scala, DriverBfsMaxEdges only in lineage/Lineage.scala") {
-    // the four qa_* knowledge-base frames are defined once (QA.Kb), so an
-    // entry's plan cannot depend on which consumer installed it first; the
-    // driver-or-distributed edge threshold is decided in Lineage alone
+  test("source scan: no qa_* cache entry, no read.parquet in Repo, one edge bound") {
+    // the Q&A knowledge base is plain Scala over the extraction (QA.Kb), so
+    // no consumer can install a qa_* frame; Repo reads through the Tables
+    // catalog; the driver-or-distributed edge threshold is decided in
+    // Lineage alone
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val sources = java.nio.file.Files.walk(root).iterator.asScala
@@ -283,7 +284,8 @@ class InfraSpec extends AnyFunSuite {
       .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
     def filesMatching(re: String) = sources.collect {
       case (f, text) if re.r.findFirstIn(text).isDefined => f }.sorted
-    assert(filesMatching("""PlanCache\.cached\(\s*\w+\s*,\s*"qa_""") === Seq("qa/QA.scala"))
+    assert(filesMatching("""PlanCache\.cached\([^"]*"qa_""") === Nil)
+    assert(!sources.toMap.apply("pipelines/Repo.scala").contains("read.parquet"))
     assert(filesMatching("DriverBfsMaxEdges") === Seq("lineage/Lineage.scala"))
   }
 

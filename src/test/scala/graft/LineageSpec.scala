@@ -88,19 +88,24 @@ class LineageSpec extends AnyFunSuite {
     assert(gold.contains("gold/fact_orders_enriched"))
   }
 
+  /** The corpus as a frame, for the Spark-side embedding and retrieval. */
+  private lazy val corpusDocs = QA.corpus(lineages, Lineage.edges(lineages))
+  private lazy val corpusFrame = spark.createDataFrame(corpusDocs)
+
   test("corpus has all five doc types incl. lineage_edge (reference emits 0)") {
-    val docs = QA.corpus(spark, lineages, edges)
-    val types = docs.groupBy("docType").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val types = corpusDocs.groupMapReduce(_.docType)(_ => 1L)(_ + _)
     assert(types.keySet === Set("script", "derived", "aggregation", "join", "lineage_edge"))
     assert(types("script") === 12)
     assert(types("lineage_edge") > 0)
-    // ids are stable and unique
-    assert(docs.select("id").distinct().count() === docs.count())
+    // ids are stable and unique, and equal Spark's sha1 of the same key
+    assert(corpusDocs.map(_.id).distinct.size === corpusDocs.size)
+    val viaSpark = corpusFrame.select(sha1(concat_ws("||", col("docType"), col("script"),
+      col("df"), col("column"), col("text")))).collect().map(_.getString(0)).toSeq
+    assert(viaSpark === corpusDocs.map(_.id))
   }
 
   test("retrieval returns top-25 ranked docs for a question") {
-    val docs = QA.corpus(spark, lineages, edges).toDF()
+    val docs = corpusFrame
     val vecs = QA.embed(docs, "text")
     import spark.implicits._
     val qv = QA.embed(Seq(("q", "where does avg_daily_spend come from")).toDF("id", "text"), "text")
@@ -111,10 +116,11 @@ class LineageSpec extends AnyFunSuite {
     assert(top.exists(_.contains("avg_daily_spend")), top.mkString("\n---\n"))
   }
 
-  /** Every question the local embedding must match: the acceptance
-    * questions, each of their three templates over every lineage column
-    * (the benchmark's question stream), one with underscores and non-ASCII
-    * text, and one with no token at all. */
+  /** Every text the local embedding must match: the acceptance questions,
+    * each of their three templates over every lineage column (the
+    * benchmark's question stream), one with underscores and non-ASCII text,
+    * one with no token at all, and every corpus doc text (the knowledge
+    * base's doc vectors). */
   private val NoTokenQuestion = "¿¡ — … ?!"
   private lazy val embedQuestions: Seq[String] = {
     val cols = edges.toDF().select("srcCol", "targetCol").collect()
@@ -124,7 +130,8 @@ class LineageSpec extends AnyFunSuite {
     QA.Questions ++
       cols.flatMap(c => templates.map { case (q, t) =>
         q.replace(t, if (t.startsWith("`")) s"`$c`" else c) }) ++
-      Seq("Où va `total_spend` — straße_Ümlaut naïve_col 日本語 ∑x²?", NoTokenQuestion)
+      Seq("Où va `total_spend` — straße_Ümlaut naïve_col 日本語 ∑x²?", NoTokenQuestion) ++
+      corpusDocs.map(_.text)
   }
   /** QA.embed of [[embedQuestions]], by question index. */
   private lazy val sparkQuestionVecs: Map[Int, Array[Double]] = {
@@ -147,8 +154,8 @@ class LineageSpec extends AnyFunSuite {
 
   test("the driver-side top-k equals QA.retrieve's (doc_id, rank) for k = 25 and 6") {
     import spark.implicits._
-    val docVecs = QA.Kb.docVecs(spark, sfDir)
-    val local = docVecs.collect().map(r => (r.getString(0), r.getSeq[Double](1).toArray)).toSeq
+    val docVecs = QA.embed(corpusFrame, "text")
+    val local = QA.Kb.snapshot(spark, sfDir).vecs
     val qs = sparkQuestionVecs.toSeq.map { case (i, v) => (s"$i", v.toSeq) }
     for (k <- Seq(25, 6)) {
       val viaSpark = QA.retrieve(spark, docVecs, qs.toDF("id", "v"), k).collect()
@@ -162,12 +169,13 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm Ask.ask fires no Spark job") {
+  /** `body`'s result and the Spark jobs it fired, counted by a listener on
+    * its job group. The listener bus delivers in order: once a marker job's
+    * start has arrived, every job `body` fired has been counted. */
+  private def jobsFiredBy[T](body: => T): (T, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val q = QA.Questions.head
-    graft.qa.Ask.ask(spark, sfDir, q) // warms the knowledge-base snapshot
-    val group = "lineagespec-warm-ask"
-    val marker = "lineagespec-warm-ask-drained"
+    val group = "lineagespec-counted"
+    val marker = "lineagespec-counted-drained"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -181,19 +189,36 @@ class LineageSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "warm ask")
-      val r = graft.qa.Ask.ask(spark, sfDir, q)
-      // the listener bus delivers in order: once the marker job's start has
-      // arrived, every job the ask fired has been counted
+      sc.setJobGroup(group, "counted")
+      val r = body
       sc.setJobGroup(marker, "drain")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(2, java.util.concurrent.TimeUnit.MINUTES))
-      assert(jobs.get === 0)
-      assert(r.evidence.exists(_._1 == "FACT") && r.evidence.exists(_._1 == "IMPACTED_COLUMN"))
+      (r, jobs.get)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("a warm Ask.ask fires no Spark job") {
+    val q = QA.Questions.head
+    graft.qa.Ask.ask(spark, sfDir, q) // warms the extraction and the snapshot
+    val (warm, warmJobs) = jobsFiredBy(graft.qa.Ask.ask(spark, sfDir, q))
+    assert(warmJobs === 0)
+    assert(warm.evidence.exists(_._1 == "FACT") && warm.evidence.exists(_._1 == "IMPACTED_COLUMN"))
+    // a cold snapshot over a warm extraction is derived on the driver too
+    QA.Kb.dropSnapshot(sfDir)
+    val (cold, coldJobs) = jobsFiredBy(graft.qa.Ask.ask(spark, sfDir, q))
+    assert(coldJobs === 0)
+    assert(cold === warm)
+  }
+
+  test("a warm Repo.lineage fires no Spark job") {
+    val before = Repo.lineage(spark, sfDir) // warms the Tables catalog
+    val (after, jobs) = jobsFiredBy(Repo.lineage(spark, sfDir))
+    assert(jobs === 0)
+    assert(after === before)
   }
 
   test("four concurrent asks on a cold dir build one snapshot and agree") {
@@ -211,13 +236,6 @@ class LineageSpec extends AnyFunSuite {
       assert(rs.distinct.size === 1)
       assert(rs.head.evidence.nonEmpty)
     } finally pool.shutdown()
-  }
-
-  test("a bounded driver collect past DriverBfsMaxEdges fails, naming the bound and what") {
-    assert(Lineage.collectSmall(spark.range(65536).toDF(), "small").length === 65536)
-    val e = intercept[IllegalStateException](
-      Lineage.collectSmall(spark.range(65537).toDF(), "the lineage edges of /x/sf"))
-    assert(e.getMessage.contains("65536") && e.getMessage.contains("/x/sf"), e.getMessage)
   }
 
   test("candidate extraction: known backticks first, then known identifiers, max 3") {
@@ -350,5 +368,16 @@ class LineageSpec extends AnyFunSuite {
       "3943a0530249bbd6f156462a6c540e56a38d297d", // q25: 130 column edges
       "fda313574b642b485a7ff9442c2c2a04bb8be805", // q26: the 11 stitched links
       "e1202f337a6e016a5acabf6546febb38c7f4b3eb")) // q28: 226 corpus docs
+    // Query.hybridEvidence's text for the three acceptance questions, pinned
+    // from the Spark frame pipeline the driver-side snapshot replaced
+    val hybrid = QA.Questions.map { q =>
+      java.security.MessageDigest.getInstance("SHA-1")
+        .digest(graft.qa.Query.hybridEvidence(spark, sfDir, q).evidenceText.getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+    }
+    assert(hybrid === Seq(
+      "96d5ecbc622556c9a1cfddd6b7b2d07ea74f713a",
+      "d074732774bd24ebad4a7bf8ec0b6c6da1057f6a",
+      "337c49e74252e96adaf03847dd28c261683655f4"))
   }
 }
