@@ -403,25 +403,34 @@ object Bench {
     math.max(0.0, math.round((db - ds) / (100.0 * dtSec) * 100) / 100.0)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Harness.session()
-    val queries = Harness.select(Nil)
-    // warmup: one untimed pass (JIT + codegen caches + repo materialization)
+  /** The untimed warm-up every timing main runs first: one pass over
+    * `queries` (JIT + codegen caches + repo materialization), then every
+    * PlanCache shared frame re-materialized on this UNTIMED line — a
+    * late-warmup unpersist of an equivalent canonicalized plan can evict a
+    * shared entry, and without the rewarm the timed pass's first consumer
+    * pays the rebuild (BENCH_r10: q148 7.29 s). Entries that were cold show
+    * up as multi-second rewarm times on stderr. Warm-up self-heals are
+    * expected (first materializations) and drained, so the timed pass
+    * starts from a clean forensic log. Returns the rewarm's per-entry
+    * seconds and its total. */
+  def warmup(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Double) = {
     runSuite(spark, sfDir, queries)
-    // re-materialize every PlanCache shared frame on this UNTIMED line: a
-    // late-warmup unpersist of an equivalent canonicalized plan can evict a
-    // shared entry, and without this the timed pass's first consumer pays
-    // the rebuild (BENCH_r10: q148 7.29 s). Entries that were cold here show
-    // up as multi-second rewarm times on stderr.
     val w0 = System.nanoTime()
     val warmed = PlanCache.rewarm(spark)
     val warmSharedSec = (System.nanoTime() - w0) / 1e9
     warmed.filter(_._2 > 0.2).foreach { case (n, sec) =>
       System.err.println(f"[bench] shared frame '$n' was COLD after warmup: rewarm took $sec%.2f s") }
-    // warmup-pass self-heals are expected (first materializations); drain so
-    // the timed pass starts from a clean forensic log
     PlanCache.drainSelfHeals()
+    (warmed, warmSharedSec)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Harness.session()
+    val queries = Harness.select(Nil)
+    val (warmed, warmSharedSec) = warmup(spark, sfDir, queries)
     // pins are recorded at ONE scale (the "_sf" tag in the file, e.g.
     // "sf0.1"); a run against any other sf dir skips the alarm — sf1 runs
     // would otherwise flag every data-proportional query against its

@@ -76,14 +76,13 @@ object PlanCache {
 
   /** Per-key build monitors: `build` thunks run holding ONLY their own
     * key's lock (single-flight per entry), never the PlanCache object
-    * monitor — some builders (q274_sel / q277_fit / q283_fit) execute a
-    * full driver-side greedy selection or Lloyd fit (many collect() jobs,
-    * seconds of wall clock), and evaluating those under the global lock
-    * stalled every concurrent PlanCache consumer (streaming micro-batch
-    * threads, parallel verify sessions) for the whole fit (ADVICE r17).
-    * Builders recurse into OTHER entries (q283_fit → q277_xq) — the
-    * dependency graph is a DAG keyed by distinct names, so keyed locks
-    * cannot cycle. */
+    * monitor — some builders (q249_mmr / q272_pat) run eager checkpoint
+    * jobs (seconds of wall clock), and evaluating a slow build under the
+    * global lock stalled every concurrent PlanCache consumer (streaming
+    * micro-batch threads, parallel verify sessions) for the whole build
+    * (ADVICE r17). Builders recurse into OTHER entries (linkage_cand →
+    * q14_ngr) — the dependency graph is a DAG keyed by distinct names, so
+    * keyed locks cannot cycle. */
   private val buildLocks =
     new scala.collection.concurrent.TrieMap[(SparkSession, String, String), Object]()
 

@@ -22,9 +22,7 @@ object PlanProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val queries = Harness.select(args.toSeq)
     val spark = Harness.session()
-    // warmup identical to Bench: one untimed pass + shared-frame rewarm
-    queries.foreach { case (_, fn) => fn(spark, sfDir).count() }
-    PlanCache.rewarm(spark)
+    Bench.warmup(spark, sfDir, queries)
     queries.foreach { case (n, fn) =>
       // isolated readings carry the same load precondition the suite
       // artifact does (VERDICT r15 #2): external busy cores measured

@@ -35,13 +35,7 @@ object Bpe {
 
   private[graft] val nMerges = 12
 
-  private val mem =
-    new scala.collection.concurrent.TrieMap[(String, Long), Seq[(String, String)]]()
-  private val lastByDir =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]()
-  @volatile private var lastDir: Option[String] = None
-  private def forOracle: Option[Seq[(String, String)]] =
-    sys.props.get("graft.oracle.sfdir").orElse(lastDir).flatMap(lastByDir.get)
+  private val merges = graft.Fit[Seq[(String, String)]]("documents.parquet")
 
   /** lower → non-alphanumeric runs to '#' → strip edge markers. */
   private def normCol(c: Column): Column =
@@ -53,9 +47,8 @@ object Bpe {
   /** Learn K merges from the corpus vocabulary. Deterministic: pair counts
     * are exact integers; selection totally ordered. Memoized per (dir,
     * corpus fingerprint) — train once, tokenize anywhere. */
-  private[graft] def learnMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val fp = Artifacts.fingerprint(s, s"$dir/documents.parquet")
-    val ms = mem.getOrElseUpdate((dir, fp), {
+  private[graft] def learnMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    merges(s, dir) {
       val vocab = Tables.documents(s, dir)
         .select(explode(split(normCol(col("text")), "#")).as("w"))
         .filter(length(col("w")) > 0)
@@ -90,11 +83,7 @@ object Bpe {
         }
         out.toSeq
       } finally vocab.unpersist()
-    })
-    lastByDir.put(dir, ms)
-    lastDir = Some(dir)
-    ms
-  }
+    }
 
   /** q134: tokenize every document with the corpus-trained merges. Output is
     * integer-exact: BPE token count, base symbol count, and one fixed-shape
@@ -124,7 +113,7 @@ object Bpe {
             .as("compression"))
     },
     None,
-    Some(() => forOracle.map(tokenizeOracleSql)))
+    Some(() => merges.forOracle.map(tokenizeOracleSql)))
 
   /** q134's oracle body for a given merge list — shared with q158, whose
     * oracle embeds the same tokenization as a CTE. */
@@ -179,7 +168,7 @@ object Bpe {
           col("total_base_symbols").cast("double") / col("total_bpe_tokens").cast("double"))
     },
     None,
-    Some(() => forOracle.map { ms =>
+    Some(() => merges.forOracle.map { ms =>
       s"""WITH b AS (${tokenizeOracleSql(ms)})
       SELECT d.lang, count(1) AS n_docs,
              CAST(SUM(len(string_split(d.text, ' '))) AS BIGINT) AS total_words,

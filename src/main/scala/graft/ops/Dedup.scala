@@ -3000,11 +3000,6 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
-  /** q262's scoring stages GIVEN a candidate frame — shared verbatim by the
-    * streaming variant (q268), whose candidates come from the incrementally
-    * maintained shingle registry instead of the batch blocker. Everything
-    * from field agreement through m/u estimation to the λ verdict lives
-    * here, so batch and streaming provably score identically. */
   /** Per-doc comparison fields for the linkage decision models (q262's FS
     * scoring, q272's EM fit, q268's streamed registry tail): lang, source,
     * a 100-char length bucket, and the first token. */
@@ -3028,6 +3023,19 @@ object Dedup {
         (col("ba") === col("bb")).cast("long").as("a_len"),
         (col("ta") === col("tb")).cast("long").as("a_tok"))
 
+  /** q262's scoring stages GIVEN a candidate frame — shared verbatim by the
+    * streaming variant (q268), whose candidates come from the incrementally
+    * maintained shingle registry instead of the batch blocker. Everything
+    * from field agreement through m/u estimation to the λ verdict lives
+    * here, so batch and streaming provably score identically.
+    *
+    * Precondition: every q14 match pair (m) is a pair of `cand`. The m-side
+    * agreement flags are computed over m directly, which equals the
+    * `m ⋈ cand` restriction only when m ⊆ cand. Both candidate frames in use
+    * hold it by construction — [[linkageCandidates]] and q268's
+    * [[graft.streaming.StreamingSessions.registryCandidates]] re-derive the
+    * q14_ngr rare index q14 mines its pairs from — and R19OpsSpec checks it
+    * for both with a left-anti join. */
   private[graft] def fsScoreOf(s: SparkSession, dir: String,
       cand: DataFrame): DataFrame = {
       val fields = linkFieldsOf(s, dir)

@@ -272,24 +272,14 @@ object Similarity {
     /** Cells probed per query — the recall/scan-cost dial (recall@5 ≈ 0.72 on
       * the near-random synthetic embeddings; OpsSpec floor 0.7). */
     val nProbes = 4
-    private val mem = new scala.collection.concurrent.TrieMap[(String, Long), Seq[Seq[Double]]]()
+    /** Fitted once per corpus ([[graft.Fit]]); the dynamic q34 oracle, which
+      * Verify evaluates after the queries ran, embeds the same centroids
+      * (the run and its oracle must share one quantizer). */
+    private[ops] val fit = graft.Fit[Seq[Seq[Double]]]("embeddings.parquet")
 
-    /** Latest centroids per sf-dir, plus the most recent dir — consulted by
-      * the dynamic q34 oracle, which Verify evaluates after the queries ran
-      * (the run and its oracle must share one quantizer). Verify pins the
-      * dump's dir via the `graft.oracle.sfdir` system property so another
-      * dir's fit between the q34 run and the dump cannot leak into the
-      * oracle; last-dir is only the fallback when the property is unset. */
-    private[ops] val lastByDir =
-      new scala.collection.concurrent.TrieMap[String, Seq[Seq[Double]]]()
-    @volatile private[ops] var lastDir: Option[String] = None
-
-    private[ops] def forOracle: Option[Seq[Seq[Double]]] =
-      sys.props.get("graft.oracle.sfdir").orElse(lastDir).flatMap(lastByDir.get)
-
-    def centroids(s: SparkSession, dir: String): Seq[Seq[Double]] = {
-      val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
-      val cents = mem.getOrElseUpdate((dir, fp), {
+    def centroids(s: SparkSession, dir: String): Seq[Seq[Double]] =
+      fit(s, dir) {
+        val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
         val tag = dir.replaceAll("[^a-zA-Z0-9.]", "_")
         val df = Artifacts.loadOrBuild(s, s"${Artifacts.root(s)}/graft_ivf/${tag}_k$nCells", fp) {
           import org.apache.spark.ml.clustering.KMeans
@@ -303,11 +293,7 @@ object Similarity {
         }
         df.select("cell", "cvec").orderBy("cell").collect()
           .map(_.getSeq[Double](1)).toSeq
-      })
-      lastByDir.put(dir, cents)
-      lastDir = Some(dir)
-      cents
-    }
+      }
   }
 
   /** (vec_id, v, norm, cdists, cell) with IVF cell assignment as a pure
@@ -393,7 +379,7 @@ object Similarity {
     * probe lists (both tie-broken by (distance, cell), matching array_min /
     * array_sort first-index semantics) and the exact cosine re-rank. None
     * until a q34 run has loaded/fitted the quantizer (→ rows-only check). */
-  private def ivfOracle: Option[String] = IvfIndex.forOracle.map { cents =>
+  private def ivfOracle: Option[String] = IvfIndex.fit.forOracle.map { cents =>
     ivfOracleBase(cents) + s""", probes AS (
         SELECT vec_id AS q_id, cell FROM ranked
         WHERE vec_id % $queryMod = 0 AND rn <= ${IvfIndex.nProbes}
@@ -461,7 +447,7 @@ object Similarity {
           coalesce(col("max_cos"), lit(-2.0d)).as("max_cos"))
     },
     None,
-    Some(() => IvfIndex.forOracle.map { cents =>
+    Some(() => IvfIndex.fit.forOracle.map { cents =>
       ivfOracleBase(cents) + s""", av AS (
         SELECT a.vec_id, a.cell, n.v, n.norm FROM assigned a JOIN n USING (vec_id)
       ), pairs AS (
@@ -544,7 +530,7 @@ object Similarity {
     // CTE materialization: the CC rounds reference their predecessors
     // multiply; un-hinted, DuckDB re-inlines the whole assignment subtree
     // per round (measured 12.8 s vs 0.4 s at sf0.1, identical rows)
-    Some(() => IvfIndex.forOracle.map { cents =>
+    Some(() => IvfIndex.fit.forOracle.map { cents =>
       graft.OracleSql.materializeCtes(
       ivfOracleBase(cents, recursive = true) + s""", av AS (
         SELECT a.vec_id, a.cell, n.v, n.norm FROM assigned a JOIN n USING (vec_id)
@@ -679,18 +665,12 @@ object Similarity {
     val subspaces = 8
     val subDim = 8
     val codes = 16
-    private val mem =
-      new scala.collection.concurrent.TrieMap[(String, Long), Seq[Seq[Seq[Double]]]]()
-    private[ops] val lastByDir =
-      new scala.collection.concurrent.TrieMap[String, Seq[Seq[Seq[Double]]]]()
-    @volatile private[ops] var lastDir: Option[String] = None
-    private[ops] def forOracle: Option[Seq[Seq[Seq[Double]]]] =
-      sys.props.get("graft.oracle.sfdir").orElse(lastDir).flatMap(lastByDir.get)
+    private[ops] val fit = graft.Fit[Seq[Seq[Seq[Double]]]]("embeddings.parquet")
 
     /** codebooks(m)(code) = 8-dim centroid. */
-    def codebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] = {
-      val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
-      val cbs = mem.getOrElseUpdate((dir, fp), {
+    def codebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] =
+      fit(s, dir) {
+        val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
         val tag = dir.replaceAll("[^a-zA-Z0-9.]", "_")
         val df = Artifacts.loadOrBuild(s,
           s"${Artifacts.root(s)}/graft_pq/${tag}_m${subspaces}_k$codes", fp) {
@@ -712,11 +692,7 @@ object Similarity {
           .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
         (0 until subspaces).map(m =>
           collected.filter(_._1 == m).sortBy(_._2).map(_._3).toSeq)
-      })
-      lastByDir.put(dir, cbs)
-      lastDir = Some(dir)
-      cbs
-    }
+      }
   }
 
   /** q155: PQ-encode every embedding — per (vector, subspace): the assigned
@@ -752,7 +728,7 @@ object Similarity {
         .select(col("vec_id"), col("m").cast("long").as("m"), col("code"), col("d2"))
     },
     None,
-    Some(() => PqIndex.forOracle.map { cbs =>
+    Some(() => PqIndex.fit.forOracle.map { cbs =>
       val cbRows = cbs.zipWithIndex.flatMap { case (cb, m) =>
         cb.zipWithIndex.map { case (c, i) =>
           s"($m, $i, CAST(${graft.SqlLit.doubles(c)} AS DOUBLE[]))"
@@ -827,7 +803,7 @@ object Similarity {
           col("adc").cast("double").as("adc_d2"))
     },
     None,
-    Some(() => PqIndex.forOracle.map { cbs =>
+    Some(() => PqIndex.fit.forOracle.map { cbs =>
       val cbRows = cbs.zipWithIndex.flatMap { case (cb, m) =>
         cb.zipWithIndex.map { case (c, i) =>
           s"($m, $i, CAST(${graft.SqlLit.doubles(c)} AS DOUBLE[]))"
@@ -943,8 +919,8 @@ object Similarity {
     },
     None,
     Some(() => for {
-      cents <- IvfIndex.forOracle
-      cbs <- PqIndex.forOracle
+      cents <- IvfIndex.fit.forOracle
+      cbs <- PqIndex.fit.forOracle
     } yield {
       val cbRows = cbs.zipWithIndex.flatMap { case (cb, m) =>
         cb.zipWithIndex.map { case (c, i) =>
@@ -1657,95 +1633,92 @@ object Similarity {
     * global argmax over all rows, ties included), which also bounds the
     * refetch count — every refetch advances at least one round even when
     * ≥ M rows tie at the max. */
-  private[graft] def kcSelect(s: SparkSession, dir: String): Seq[(Long, Option[Long], Long)] = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
-    // min-over-centers quantized squared distance: per-dim
-    // floor((x−c)²·1e9) → BIGINT, summed by a left fold (long addition —
-    // order-independent), min across centers — arithmetic IDENTICAL to
-    // the former long-form groupBy(sum) + iterated-least formulation
-    val d2qMin = expr(
-      "array_min(transform(cs, c -> aggregate(zip_with(v, c, " +
-        "(x, cx) -> floor((x - cx) * (x - cx) * 1e9)), " +
-        "CAST(0 AS BIGINT), (acc, term) -> acc + term)))")
-    val seedRow = emb.orderBy(col("vec_id").asc).limit(1).collect().headOption
-    val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long], Long)]
-    val centers = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
-    seedRow.foreach { r =>
-      sel += ((r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)), 0L))
-      centers += r.getSeq[Double](2)
-    }
-    // driver replay of d2qMin's per-center term: same JVM doubles, same
-    // operation order (left-assoc multiply, Math.floor→long, long fold)
-    // — bit-equal to the codegen'd column by construction
-    def d2qDriver(v: Seq[Double], c: Seq[Double]): Long = {
-      var i = 0; var acc = 0L
-      while (i < v.length) {
-        val d = v(i) - c(i); acc += math.floor(d * d * 1e9).toLong; i += 1
+  private[graft] def kcSelect(s: SparkSession, dir: String): Seq[(Long, Option[Long], Long)] =
+    kcSelection(s, dir) {
+      import s.implicits._
+      val emb = Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("label").cast("long").as("label"),
+          expr("transform(embedding, x -> cast(x as double))").as("v"))
+      // min-over-centers quantized squared distance: per-dim
+      // floor((x−c)²·1e9) → BIGINT, summed by a left fold (long addition —
+      // order-independent), min across centers — arithmetic IDENTICAL to
+      // the former long-form groupBy(sum) + iterated-least formulation
+      val d2qMin = expr(
+        "array_min(transform(cs, c -> aggregate(zip_with(v, c, " +
+          "(x, cx) -> floor((x - cx) * (x - cx) * 1e9)), " +
+          "CAST(0 AS BIGINT), (acc, term) -> acc + term)))")
+      val seedRow = emb.orderBy(col("vec_id").asc).limit(1).collect().headOption
+      val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long], Long)]
+      val centers = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
+      seedRow.foreach { r =>
+        sel += ((r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)), 0L))
+        centers += r.getSeq[Double](2)
       }
-      acc
-    }
-    final case class Cand(id: Long, label: Option[Long], v: Seq[Double],
-      var w: Long)
-    var cands = Seq.empty[Cand]
-    var bound = 0L // M-th fetched value; 0 ⇒ window held ALL positive rows
-    var fresh = false // window untouched since fetch ⇒ its top row is exact
-    def refetch(): Unit = {
-      val centersDf = Seq(Tuple1(centers.toSeq)).toDF("cs")
-      val rows = emb.crossJoin(broadcast(centersDf))
-        .select(col("vec_id"), col("label"), col("v"), d2qMin.as("mind2q"))
-        .filter(col("mind2q") > 0)
-        .orderBy(col("mind2q").desc, col("vec_id").asc)
-        .limit(kcWindow).collect()
-      cands = rows.map(r => Cand(r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1)),
-        r.getSeq[Double](2), r.getLong(3))).toSeq
-      bound = if (rows.length == kcWindow) cands.last.w else 0L
-      fresh = true
-    }
-    var t = 1
-    var exhausted = seedRow.isEmpty
-    if (!exhausted) refetch()
-    while (t < kcK && !exhausted) {
-      val live = cands.filter(_.w > 0)
-      val best = live.sortBy(c => (-c.w, c.id)).headOption
-      best match {
-        case Some(b) if fresh || b.w > bound =>
-          sel += ((b.id, b.label, b.w))
-          centers += b.v
-          cands = cands.filter(_.id != b.id)
-          cands.foreach(c => c.w = math.min(c.w, d2qDriver(c.v, b.v)))
-          fresh = false
-          t += 1
-        case Some(_) => refetch() // tie or failed certificate: refresh
-        case None if bound > 0 => refetch() // outside rows may still be live
-        case None => exhausted = true // a full view showed no positive dist
+      // driver replay of d2qMin's per-center term: same JVM doubles, same
+      // operation order (left-assoc multiply, Math.floor→long, long fold)
+      // — bit-equal to the codegen'd column by construction
+      def d2qDriver(v: Seq[Double], c: Seq[Double]): Long = {
+        var i = 0; var acc = 0L
+        while (i < v.length) {
+          val d = v(i) - c(i); acc += math.floor(d * d * 1e9).toLong; i += 1
+        }
+        acc
       }
+      final case class Cand(id: Long, label: Option[Long], v: Seq[Double],
+        var w: Long)
+      var cands = Seq.empty[Cand]
+      var bound = 0L // M-th fetched value; 0 ⇒ window held ALL positive rows
+      var fresh = false // window untouched since fetch ⇒ its top row is exact
+      def refetch(): Unit = {
+        val centersDf = Seq(Tuple1(centers.toSeq)).toDF("cs")
+        val rows = emb.crossJoin(broadcast(centersDf))
+          .select(col("vec_id"), col("label"), col("v"), d2qMin.as("mind2q"))
+          .filter(col("mind2q") > 0)
+          .orderBy(col("mind2q").desc, col("vec_id").asc)
+          .limit(kcWindow).collect()
+        cands = rows.map(r => Cand(r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getLong(1)),
+          r.getSeq[Double](2), r.getLong(3))).toSeq
+        bound = if (rows.length == kcWindow) cands.last.w else 0L
+        fresh = true
+      }
+      var t = 1
+      var exhausted = seedRow.isEmpty
+      if (!exhausted) refetch()
+      while (t < kcK && !exhausted) {
+        val live = cands.filter(_.w > 0)
+        val best = live.sortBy(c => (-c.w, c.id)).headOption
+        best match {
+          case Some(b) if fresh || b.w > bound =>
+            sel += ((b.id, b.label, b.w))
+            centers += b.v
+            cands = cands.filter(_.id != b.id)
+            cands.foreach(c => c.w = math.min(c.w, d2qDriver(c.v, b.v)))
+            fresh = false
+            t += 1
+          case Some(_) => refetch() // tie or failed certificate: refresh
+          case None if bound > 0 => refetch() // outside rows may still be live
+          case None => exhausted = true // a full view showed no positive dist
+        }
+      }
+      sel.toSeq
     }
-    sel.toSeq
-  }
 
-  /** The PUBLISHED k-center selection — q274's output table, materialized
-    * once per (session, dir) under the PlanCache fingerprint discipline
-    * (r17): the selection is a deterministic function of the corpus, and
-    * both of its consumers (q274's report, q283's seeding) want the SAME
-    * table — computing the greedy per consumer is the report-suite
-    * anti-shape the q34 trained-quantizer artifact already retired for
-    * IVF. The builder runs the driver greedy once; the cached frame is a
-    * K-row local relation. */
-  private def kcSelTable(s: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.cached(s, "q274_sel", dir, s"$dir/embeddings.parquet") {
+  /** The PUBLISHED k-center selection, fitted once per corpus
+    * ([[graft.Fit]]): the selection is a deterministic function of the
+    * corpus, and both of its consumers (q274's report, q283's seeding) want
+    * the SAME one — computing the greedy per consumer is the report-suite
+    * anti-shape the q34 trained quantizer already retired for IVF. */
+  private val kcSelection = graft.Fit[Seq[(Long, Option[Long], Long)]]("embeddings.parquet")
+
+  val kcenterCoreset: Q = Q(
+    "q274_kcenter_coreset",
+    (s, dir) => {
       import s.implicits._
       kcSelect(s, dir).zipWithIndex
         .map { case ((id, lb, rad), rnd) => (rnd.toLong, id, lb, rad) }
         .toDF("round", "vec_id", "label", "radius2_q")
-    }
-
-  val kcenterCoreset: Q = Q(
-    "q274_kcenter_coreset",
-    (s, dir) => kcSelTable(s, dir),
+    },
     Some {
       graft.OracleSql.materializeCtes(s"""WITH ${kcSelCtes("")}
       SELECT CAST(s.round AS BIGINT) AS round, s.vec_id, e.label, s.radius2_q
@@ -1815,6 +1788,8 @@ object Similarity {
   private val kmK = 8
   private val kmT = 4
   private val kmSample = 32
+  /** q291's sweep; K = [[kmK]] is q277's fit. */
+  private val kmSweepKs = Seq(2, 4, 8, 16)
 
   /** Quantization scale AND domain shift for the k-means integer
     * arithmetic: coordinates become floor(x·10⁶)+10⁶ — exact BIGINTs, and
@@ -1875,9 +1850,32 @@ object Similarity {
     * stay under 2⁶³ to ~4.6·10¹² vectors per cluster — beyond any corpus
     * under discussion; past that the update sum takes the q259
     * DECIMAL(38,0) treatment. */
-  private[graft] def kmFit(s: SparkSession, dir: String): (Seq[Seq[Long]], Seq[Long]) =
-    kmFitSeeded(s, dir, kmXq(s, dir).orderBy(col("vec_id").asc).limit(kmK)
-      .collect().map(_.getSeq[Long](2)).toSeq)
+  private[graft] def kmFit(s: SparkSession, dir: String,
+      k: Int = kmK): (Seq[Seq[Long]], Seq[Long]) =
+    kmFits(k)(s, dir) {
+      kmFitSeeded(s, dir, kmXq(s, dir).orderBy(col("vec_id").asc).limit(k)
+        .collect().map(_.getSeq[Long](2)).toSeq)
+    }
+
+  /** The PUBLISHED id-seeded fits, one per sweep K, fitted once per corpus
+    * ([[graft.Fit]]): fit-once/consume-many is this stack's own contract
+    * (q281 serves arriving vectors against the published fit, q278 samples
+    * it, q279 audits it, q291 sweeps K), so every consumer takes the
+    * driver-held centroids instead of re-running [[kmT]] Lloyd iterations
+    * per report. */
+  private val kmFits = kmSweepKs.map(k =>
+    k -> graft.Fit[(Seq[Seq[Long]], Seq[Long])]("embeddings.parquet")).toMap
+
+  /** A fit in q277's long output form (cluster_id, d, centroid_q, size_n) —
+    * K·64 rows, a local Dataset. */
+  private def fitTable(s: SparkSession,
+      fit: (Seq[Seq[Long]], Seq[Long])): DataFrame = {
+    import s.implicits._
+    val (cents, sizes) = fit
+    cents.indices.flatMap(c => (0 until 64).map(d =>
+      (c.toLong, d.toLong, cents(c)(d) - kmShift, sizes(c))))
+      .toDF("cluster_id", "d", "centroid_q", "size_n")
+  }
 
   /** The Lloyd loop itself, seed-agnostic (q277 seeds by smallest vec_id,
     * q283 by q274's k-center greedy). Centroid division is truncating
@@ -1969,32 +1967,9 @@ object Similarity {
     * cross-engine and across parallelism geometries (FpStress member).
     * Output: the final centroid table in long form (cluster_id, d,
     * centroid_q, size_n) — [[kmK]]·64 rows. */
-  /** The PUBLISHED fit — q277's output table, materialized once per
-    * (session, dir) (r17): fit-once/consume-many is this stack's OWN
-    * contract (q281 serves arriving vectors against "the published fit",
-    * q278 samples it, q279 audits it), so the fit table is the artifact
-    * and every consumer reads it instead of re-running 4 Lloyd
-    * iterations per report. Staleness rides the PlanCache corpus
-    * fingerprint like every other shared frame. */
-  private[graft] def kmFitTable(s: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.cached(s, "q277_fit", dir, s"$dir/embeddings.parquet") {
-      import s.implicits._
-      val (cents, sizes) = kmFit(s, dir)
-      cents.indices.flatMap(c => (0 until 64).map(d =>
-        (c.toLong, d.toLong, cents(c)(d) - kmShift, sizes(c))))
-        .toDF("cluster_id", "d", "centroid_q", "size_n")
-    }
-
-  /** Shifted-domain centroid vectors read back from a published fit table
-    * (exact Long round-trip of the −[[kmShift]] the table applies). */
-  private[graft] def centsOfFit(fit: DataFrame): Seq[Seq[Long]] =
-    fit.collect().groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
-      rs.sortBy(_.getLong(1)).map(_.getLong(2) + kmShift).toSeq
-    }
-
   val kmeansCentroids: Q = Q(
     "q277_kmeans_centroids",
-    (s, dir) => kmFitTable(s, dir),
+    (s, dir) => fitTable(s, kmFit(s, dir)),
     Some {
       graft.OracleSql.materializeCtes(s"""WITH $kmCtes
       SELECT c.cid AS cluster_id, CAST(c.d - 1 AS BIGINT) AS d,
@@ -2020,8 +1995,7 @@ object Similarity {
   val clusterBalancedSample: Q = Q(
     "q278_cluster_balanced_sample",
     (s, dir) => {
-      val cents = centsOfFit(kmFitTable(s, dir))
-      kmAssign(s, kmXq(s, dir), cents)
+      kmAssign(s, kmXq(s, dir), kmFit(s, dir)._1)
         .withColumn("draw", Md5Draw.draw(12, lit("kmsample"), col("vec_id")))
         .withColumn("rk", row_number().over(
           Window.partitionBy("cid").orderBy(col("draw"), col("vec_id")))
@@ -2091,8 +2065,7 @@ object Similarity {
   val clusterQuality: Q = Q(
     "q279_cluster_quality",
     (s, dir) => {
-      val cents = centsOfFit(kmFitTable(s, dir))
-      val asg = kmAssign(s, kmXq(s, dir), cents)
+      val asg = kmAssign(s, kmXq(s, dir), kmFit(s, dir)._1)
       val base = asg.groupBy("cid").agg(count(lit(1)).as("size_n"),
         sum(col("mind2").cast("decimal(38,0)")).as("sse_dec"))
       // asc_nulls_last pins the count-tie order to the oracle's (DuckDB
@@ -2144,6 +2117,10 @@ object Similarity {
       FROM sse s JOIN lab l ON s.cid = l.cid""")
     })
 
+  /** q283's fit, once per corpus ([[graft.Fit]]). */
+  private val kcSeededFit =
+    graft.Fit[(Seq[Seq[Long]], Seq[Long])]("embeddings.parquet")
+
   /** q283: Lloyd's k-means seeded from q274's k-center greedy — the
     * composition VERDICT r16 #1 asked for: q277's smallest-vec_id seeds
     * are deterministic but ARBITRARY (on a real 100 TB corpus the first K
@@ -2168,28 +2145,19 @@ object Similarity {
     * vec_ids. */
   val kmeansKcSeeded: Q = Q(
     "q283_kmeans_kcenter_seeded",
-    (s, dir) => graft.PlanCache.cached(s, "q283_fit", dir,
-      s"$dir/embeddings.parquet") {
-      import s.implicits._
-      // seeds come from the PUBLISHED q274 selection table (one greedy
-      // run per corpus, shared with q274's own report)
-      val seedIds = kcSelTable(s, dir).orderBy(col("round").asc)
-        .collect().map(_.getLong(1)).toSeq
-      if (seedIds.isEmpty)
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("cluster_id", "d", "centroid_q", "size_n")
+    (s, dir) => fitTable(s, kcSeededFit(s, dir) {
+      // seeds: q274's published selection, in pick order
+      val seedIds = kcSelect(s, dir).map(_._1)
+      if (seedIds.isEmpty) (Nil, Nil)
       else {
         // ≤ K rows BY CONSTRUCTION (the q274 driver-state bound)
         val byId = kmXq(s, dir)
           .filter(col("vec_id").isin(seedIds: _*))
           .select(col("vec_id"), col("xq")).collect()
           .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-        val (cents, sizes) = kmFitSeeded(s, dir, seedIds.map(byId))
-        cents.indices.flatMap(c => (0 until 64).map(d =>
-          (c.toLong, d.toLong, cents(c)(d) - kmShift, sizes(c))))
-          .toDF("cluster_id", "d", "centroid_q", "size_n")
+        kmFitSeeded(s, dir, seedIds.map(byId))
       }
-    },
+    }),
     Some {
       graft.OracleSql.materializeCtes(s"""WITH ${kcSelCtes("kc")},
       ${kmCtesFrom(s"""seeds AS (
@@ -2203,25 +2171,6 @@ object Similarity {
     })
 
   // ---- q291: K-selection sweep for the clustering stack --------------------
-  private val kmSweepKs = Seq(2, 4, 8, 16)
-
-  /** Per-K published fit: K = [[kmK]] IS q277's cached fit table; the other
-    * sweep Ks get their own PlanCache entry (same id-seeded Lloyd chain,
-    * same staleness fingerprint), so the sweep re-reads fits instead of
-    * re-running 4 Lloyd iterations per report. */
-  private def kmFitTableK(s: SparkSession, dir: String, k: Int): DataFrame =
-    if (k == kmK) kmFitTable(s, dir)
-    else graft.PlanCache.cached(s, s"q291_fit_k$k", dir,
-      s"$dir/embeddings.parquet") {
-      import s.implicits._
-      val seeds = kmXq(s, dir).orderBy(col("vec_id").asc).limit(k)
-        .collect().map(_.getSeq[Long](2)).toSeq
-      val (cents, sizes) = kmFitSeeded(s, dir, seeds)
-      cents.indices.flatMap(c => (0 until 64).map(d =>
-        (c.toLong, d.toLong, cents(c)(d) - kmShift, sizes(c))))
-        .toDF("cluster_id", "d", "centroid_q", "size_n")
-    }
-
   /** One prefixed oracle replay of the id-seeded fit at cluster count `k`
     * ending in a `${p}sse` CTE (k, sse_q, n_vectors) — [[kmCtesFrom]]'s
     * chain with every CTE name prefixed so the sweep can unroll several
@@ -2278,8 +2227,8 @@ object Similarity {
     * #3) — the exact quantized k-means objective (q279's SSE, corpus-wide)
     * for K ∈ {2,4,8,16} id-seeded Lloyd fits, the elbow curve a pipeline
     * owner reads before trusting kmK=8. Integer-exact end to end: each
-    * fit is [[kmFitSeeded]]'s published-table chain (K=8 rides q277's
-    * cached fit verbatim; the other Ks get their own cached fits), each
+    * fit is [[kmFit]]'s published id-seeded fit (K=8 is q277's fit
+    * verbatim; each other K has its own), each
     * SSE is one assignment scan accumulating the row's own assigned
     * quantized distance in DECIMAL(38,0)/HUGEINT, reported as BIGINT
     * (exact to ~3.5·10⁴ corpus-spanning vectors — q279's reporting-width
@@ -2287,15 +2236,14 @@ object Similarity {
     *
     * Distributed shape: per K, one broadcast-centroid assignment scan
     * feeding a 2-aggregate global reduce (map-side combined; ONE row per
-    * K crosses the shuffle); fit cost amortizes to zero across reports
-    * via PlanCache. 4 rows out. */
+    * K crosses the shuffle); the fits are held on the driver, so their
+    * cost amortizes to zero across reports. 4 rows out. */
   val kmeansKSweep: Q = Q(
     "q291_kmeans_k_sweep",
     (s, dir) => {
       val xq = kmXq(s, dir)
       kmSweepKs.map { k =>
-        val cents = centsOfFit(kmFitTableK(s, dir, k))
-        kmAssign(s, xq, cents)
+        kmAssign(s, xq, kmFit(s, dir, k)._1)
           .agg(sum(col("mind2").cast("decimal(38,0)")).as("sse_dec"),
             count(lit(1)).as("n_vectors"))
           .select(lit(k.toLong).as("k"),

@@ -37,24 +37,15 @@ object Spectral {
   private val dims = 64
   private val iterations = 10
 
-  /** Converged direction per sf-dir for the dynamic oracle (same contract as
-    * [[Similarity.IvfIndex]]: Verify pins the dump's dir via the
-    * `graft.oracle.sfdir` system property; last-dir is the fallback). */
-  private val mem =
-    new scala.collection.concurrent.TrieMap[(String, Long), Seq[Double]]()
-  private val lastByDir =
-    new scala.collection.concurrent.TrieMap[String, Seq[Double]]()
-  @volatile private var lastDir: Option[String] = None
-
-  private def forOracle: Option[Seq[Double]] =
-    sys.props.get("graft.oracle.sfdir").orElse(lastDir).flatMap(lastByDir.get)
+  /** Converged direction, fitted once per corpus ([[graft.Fit]]); the q122
+    * dynamic oracle embeds the run's own direction. */
+  private val direction = graft.Fit[Seq[Double]]("embeddings.parquet")
 
   /** Train-once dominant direction: T power iterations from the exact
     * all-ones start (1/√64 = 0.125 is dyadic), each one distributed
     * Gram-vector pass. Memoized per (dir, corpus fingerprint). */
-  private[graft] def principalDirection(s: SparkSession, dir: String): Seq[Double] = {
-    val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
-    val u = mem.getOrElseUpdate((dir, fp), {
+  private[graft] def principalDirection(s: SparkSession, dir: String): Seq[Double] =
+    direction(s, dir) {
       graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, dir)
         .select(expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -82,11 +73,7 @@ object Spectral {
         }
       } finally e.unpersist()
       cur.toSeq
-    })
-    lastByDir.put(dir, u)
-    lastDir = Some(dir)
-    u
-  }
+    }
 
   /** q122: dominant principal direction + per-vector projection and rank.
     * The projection is the bit-exact sequential dot fold both engines share;
@@ -103,7 +90,7 @@ object Spectral {
         .select(col("vec_id"), expr("vec_dot(v, u)").as("proj"))
     },
     None,
-    Some(() => forOracle.map { u =>
+    Some(() => direction.forOracle.map { u =>
       val uLit = graft.SqlLit.doubles(u)
       s"""SELECT vec_id,
              list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -115,14 +102,7 @@ object Spectral {
   private val probeIters = 8
   private val probeEta = 0.05d
 
-  private val probeMem =
-    new scala.collection.concurrent.TrieMap[(String, Long), Seq[Double]]()
-  private val probeLastByDir =
-    new scala.collection.concurrent.TrieMap[String, Seq[Double]]()
-  @volatile private var probeLastDir: Option[String] = None
-  private def probeForOracle: Option[Seq[Double]] =
-    sys.props.get("graft.oracle.sfdir").orElse(probeLastDir)
-      .flatMap(probeLastByDir.get)
+  private val probe = graft.Fit[Seq[Double]]("documents.parquet")
 
   /** Train a 3-weight linear probe (bias, chars/1000, ws-tokens/100 →
     * is-English) by T full-batch gradient-descent passes — the fastText-class
@@ -139,9 +119,8 @@ object Spectral {
     * Scale shape: T scans of a 3-column projection (persisted), each
     * collapsing map-side to ≤3 decimal partials per partition — wire volume
     * independent of N. */
-  private[graft] def probeWeights(s: SparkSession, dir: String): Seq[Double] = {
-    val fp = Artifacts.fingerprint(s, s"$dir/documents.parquet")
-    val w = probeMem.getOrElseUpdate((dir, fp), {
+  private[graft] def probeWeights(s: SparkSession, dir: String): Seq[Double] =
+    probe(s, dir) {
       val feats = Tables.documents(s, dir).select(
         (col("n_chars").cast("double") / lit(1000.0d)).as("x1"),
         (size(split(col("text"), " ")).cast("double") / lit(100.0d)).as("x2"),
@@ -163,11 +142,7 @@ object Spectral {
         }
       } finally feats.unpersist()
       cur.toSeq
-    })
-    probeLastByDir.put(dir, w)
-    probeLastDir = Some(dir)
-    w
-  }
+    }
 
   /** q133: score every document with the trained probe. The scoring
     * expression is the identical fixed shape in both engines, with the
@@ -186,7 +161,7 @@ object Spectral {
         when(col("lang") === "en", 1).otherwise(0).as("label"))
     },
     None,
-    Some(() => probeForOracle.map { w =>
+    Some(() => probe.forOracle.map { w =>
       val Seq(w0, w1, w2) = w.map(graft.SqlLit.double)
       s"""WITH sc AS (
           SELECT doc_id,
@@ -203,14 +178,7 @@ object Spectral {
   // ---- q150: geometric median (Weiszfeld) ----------------------------------
   private val medianIters = 3
 
-  private val medMem =
-    new scala.collection.concurrent.TrieMap[(String, Long), Seq[Double]]()
-  private val medLastByDir =
-    new scala.collection.concurrent.TrieMap[String, Seq[Double]]()
-  @volatile private var medLastDir: Option[String] = None
-  private def medForOracle: Option[Seq[Double]] =
-    sys.props.get("graft.oracle.sfdir").orElse(medLastDir)
-      .flatMap(medLastByDir.get)
+  private val median = graft.Fit[Seq[Double]]("embeddings.parquet")
 
   /** The shared cross-engine distance shape: ‖v−m‖ as
     * √max(v·v − 2(v·m) + m·m, 0) — three sequential dot folds (the ONLY
@@ -238,9 +206,8 @@ object Spectral {
     * Scale shape: 1 + T scans of a persisted narrow projection, each
     * collapsing map-side to ≤65 decimal partials per partition — wire
     * volume independent of N. */
-  private[graft] def geometricMedian(s: SparkSession, dir: String): Seq[Double] = {
-    val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
-    val m = medMem.getOrElseUpdate((dir, fp), {
+  private[graft] def geometricMedian(s: SparkSession, dir: String): Seq[Double] =
+    median(s, dir) {
       graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, dir)
         .select(expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -270,11 +237,7 @@ object Spectral {
         }
         cur.toSeq
       } finally e.unpersist()
-    })
-    medLastByDir.put(dir, m)
-    medLastDir = Some(dir)
-    m
-  }
+    }
 
   /** q150: distance of every embedding to the corpus geometric median, with
     * a 2×-mean-distance outlier flag. Distances use the shared three-dot
@@ -306,7 +269,7 @@ object Spectral {
           (col("dist") > lit(2.0d) * col("mean_d")).as("is_outlier"))
     },
     None,
-    Some(() => medForOracle.map { m =>
+    Some(() => median.forOracle.map { m =>
       val mLit = graft.SqlLit.doubles(m)
       var mm = 0d; var j = 0
       while (j < m.length) { mm += m(j) * m(j); j += 1 }
@@ -501,7 +464,7 @@ object Spectral {
         .select("bucket", "n", "n_pos", "mean_score", "pos_rate")
     },
     None,
-    Some(() => probeForOracle.map { w =>
+    Some(() => probe.forOracle.map { w =>
       val Seq(w0, w1, w2) = w.map(graft.SqlLit.double)
       s"""WITH sc AS (
           SELECT doc_id,
@@ -565,7 +528,7 @@ object Spectral {
             .as("auc"))
     },
     None,
-    Some(() => probeForOracle.map { w =>
+    Some(() => probe.forOracle.map { w =>
       val Seq(w0, w1, w2) = w.map(graft.SqlLit.double)
       s"""WITH sc AS (
           SELECT ($w0 + $w1 * (CAST(n_chars AS DOUBLE) / 1000.0)

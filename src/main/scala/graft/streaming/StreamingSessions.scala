@@ -1075,30 +1075,36 @@ object StreamingSessions {
     * replays periodically — exactly this split. */
   val streamingFsLinkage: Q = Q(
     "q268_streaming_fs_linkage",
-    (s, dir) => {
-      graft.functions.VectorFunctions.register(s)
-      val k = graft.ops.Dedup.maxDf + 1
-      val registry = streamToArtifact(s, dir, "shingreg", "documents",
-        p => s.readStream.schema(docsSchema).parquet(p)
-          .select(col("doc_id"), split(col("text"), " ").as("words"))
-          .filter(size(col("words")) >= 3)
-          .select(col("doc_id"), explode(expr(
-            """array_distinct(transform(sequence(0, size(words) - 3),
-               i -> concat(words[i], ' ', words[i + 1], ' ', words[i + 2])))"""))
-            .as("ngram"))
-          .groupBy("ngram")
-          .agg(count(lit(1)).as("df"), expr(s"kmv_minarray(doc_id, $k)").as("mins")),
-        splitSourceFiles = 4)
-      // tail (batch, off the materialized registry): stop-shingles out,
-      // postings back from the exact min-sets, then the SHARED budgeted
-      // blocker + candidate + scoring stages — q262's plan from here on
-      val postings = registry
-        .filter(col("df") >= 2 && col("df") <= graft.ops.Dedup.maxDf)
-        .select(explode(col("mins")).as("doc_id"), col("ngram"))
-      graft.ops.Dedup.fsScoreOf(s, dir,
-        graft.ops.Dedup.candidatesFrom(graft.ops.Dedup.cappedRareOf(postings)))
-    },
+    (s, dir) => graft.ops.Dedup.fsScoreOf(s, dir, registryCandidates(s, dir)),
     graft.ops.Dedup.fsLinkage.oracle)
+
+  /** q268's candidate pairs: the streamed shingle registry, its rare
+    * postings recovered from the exact min-sets, then the batch blocker's
+    * budget and candidate stages — the frame q268 hands to
+    * [[graft.ops.Dedup.fsScoreOf]] in place of
+    * [[graft.ops.Dedup.linkageCandidates]]. */
+  private[graft] def registryCandidates(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.VectorFunctions.register(s)
+    val k = graft.ops.Dedup.maxDf + 1
+    val registry = streamToArtifact(s, dir, "shingreg", "documents",
+      p => s.readStream.schema(docsSchema).parquet(p)
+        .select(col("doc_id"), split(col("text"), " ").as("words"))
+        .filter(size(col("words")) >= 3)
+        .select(col("doc_id"), explode(expr(
+          """array_distinct(transform(sequence(0, size(words) - 3),
+             i -> concat(words[i], ' ', words[i + 1], ' ', words[i + 2])))"""))
+          .as("ngram"))
+        .groupBy("ngram")
+        .agg(count(lit(1)).as("df"), expr(s"kmv_minarray(doc_id, $k)").as("mins")),
+      splitSourceFiles = 4)
+    // tail (batch, off the materialized registry): stop-shingles out,
+    // postings back from the exact min-sets, then the SHARED budgeted
+    // blocker + candidate stages — q262's plan from here on
+    val postings = registry
+      .filter(col("df") >= 2 && col("df") <= graft.ops.Dedup.maxDf)
+      .select(explode(col("mins")).as("doc_id"), col("ngram"))
+    graft.ops.Dedup.candidatesFrom(graft.ops.Dedup.cappedRareOf(postings))
+  }
 
   /** q281: STREAMING k-means assignment — the serving path of the q277
     * family (q277 fits offline; q278/q279 consume the fit batch-side; this
@@ -1120,8 +1126,7 @@ object StreamingSessions {
   val streamingKmeansAssign: Q = Q(
     "q281_streaming_kmeans_assign",
     (s, dir) => {
-      val cents = graft.ops.Similarity.centsOfFit(
-        graft.ops.Similarity.kmFitTable(s, dir))
+      val cents = graft.ops.Similarity.kmFit(s, dir)._1
       streamToArtifact(s, dir, "kmassign", "embeddings", { p =>
         s.readStream.schema(embSchema).parquet(p)
       }, mode = "append",

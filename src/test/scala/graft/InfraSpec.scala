@@ -272,21 +272,38 @@ class InfraSpec extends AnyFunSuite {
     assert(builders === Seq("Harness.scala" -> 1), builders.toString)
   }
 
+  /** (path under src/main/scala/graft, text) of every main source. */
+  private lazy val sources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
+  }
+
+  private def filesMatching(re: String): Seq[String] = sources.collect {
+    case (f, text) if re.r.findFirstIn(text).isDefined => f }.sorted
+
   test("source scan: no qa_* cache entry, no read.parquet in Repo, one edge bound") {
     // the Q&A knowledge base is plain Scala over the extraction (QA.Kb), so
     // no consumer can install a qa_* frame; Repo reads through the Tables
     // catalog; the driver-or-distributed edge threshold is decided in
     // Lineage alone
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val sources = java.nio.file.Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p))
-    def filesMatching(re: String) = sources.collect {
-      case (f, text) if re.r.findFirstIn(text).isDefined => f }.sorted
     assert(filesMatching("""PlanCache\.cached\([^"]*"qa_""") === Nil)
     assert(!sources.toMap.apply("pipelines/Repo.scala").contains("read.parquet"))
     assert(filesMatching("DriverBfsMaxEdges") === Seq("lineage/Lineage.scala"))
+  }
+
+  test("source scan: trained models memoize in Fit, no fit table is cached") {
+    // every fit-once model goes through graft.Fit: no hand-copied last-dir
+    // memo, the oracle's dir pin read in Fit and set in Verify alone, and
+    // no PlanCache entry persisting a K-row fit table
+    assert(filesMatching("lastByDir") === Nil)
+    assert(filesMatching("graft\\.oracle\\.sfdir") === Seq("Fit.scala", "Verify.scala"))
+    assert(filesMatching("""props\.get\("graft\.oracle\.sfdir"""") === Seq("Fit.scala"))
+    assert(filesMatching("""setProperty\("graft\.oracle\.sfdir"""") === Seq("Verify.scala"))
+    assert(filesMatching(
+      """PlanCache\.cached\([^"]*s?"(q274_sel|q277_fit|q283_fit|q291_fit)""") === Nil)
   }
 
   test("materializeCtes hints non-recursive CTEs and skips self-referencing ones") {

@@ -6,6 +6,38 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   lazy val spark: SparkSession = Harness.session(4)
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs it fired, counted by a listener on
+    * its job group. The listener bus delivers in order: once a marker job's
+    * start has arrived, every job `body` fired has been counted. */
+  def jobsFiredBy[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "spec-counted"
+    val marker = "spec-counted-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = body
+      sc.setJobGroup(marker, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(2, java.util.concurrent.TimeUnit.MINUTES))
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** The tier-1 full-suite passes, run once and shared: PipelinesSpec's gate

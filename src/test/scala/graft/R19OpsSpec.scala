@@ -114,10 +114,15 @@ class R19OpsSpec extends AnyFunSuite {
     // the fsScoreOf restructure computes m-side flags over m directly; that
     // is row-identical to the old m ⋈ candidate-flags inner join iff every
     // q14 pair is a candidate pair — both derive from the same q14_ngr rare
-    // index, q14 with additional pair-REMOVING filters
+    // index, q14 with additional pair-REMOVING filters; q268 hands the
+    // same scoring its streamed registry's candidates, which must hold it too
     val m = ops.Dedup.ngramJaccard.run(spark, sfDir).select("doc_a", "doc_b")
-    val cand = ops.Dedup.linkageCandidates(spark, sfDir)
-    assert(m.join(cand, Seq("doc_a", "doc_b"), "left_anti").count() == 0)
+    Seq("batch" -> ops.Dedup.linkageCandidates(spark, sfDir),
+      "q268 registry" -> streaming.StreamingSessions.registryCandidates(spark, sfDir))
+      .foreach { case (what, cand) =>
+        assert(m.join(cand, Seq("doc_a", "doc_b"), "left_anti").count() == 0,
+          s"a q14 pair is missing from the $what candidates")
+      }
     assert(m.count() > 0) // vacuous-subset guard
   }
 
