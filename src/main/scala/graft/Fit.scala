@@ -33,15 +33,16 @@ final class Fit[T] private (input: String) {
   @volatile private var lastDir: Option[String] = None
 
   /** The model for `dir`: the held value when `dir/input` is unchanged,
-    * otherwise `fit`, run at most once per (dir, fingerprint). */
-  def apply(s: SparkSession, dir: String)(fit: => T): T = {
+    * otherwise `fit`, run at most once per (dir, fingerprint) and given that
+    * fingerprint, so a persisted artifact is keyed as the entry is. */
+  def apply(s: SparkSession, dir: String)(fit: Long => T): T = {
     val fp = ops.Artifacts.fingerprint(s, s"$dir/$input")
     // atomic: a stale entry for `dir` is replaced, never kept beside the new
     val held = byDir.updateWith(dir) {
       case cur @ Some(h) if h.fp == fp => cur
       case _ => Some(new Held(fp))
     }.get
-    val v = held.get(fit)
+    val v = held.get(fit(fp))
     lastDir = Some(dir)
     v
   }

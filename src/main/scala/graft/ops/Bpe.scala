@@ -48,7 +48,7 @@ object Bpe {
     * are exact integers; selection totally ordered. Memoized per (dir,
     * corpus fingerprint) — train once, tokenize anywhere. */
   private[graft] def learnMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    merges(s, dir) {
+    merges(s, dir) { _ =>
       val vocab = Tables.documents(s, dir)
         .select(explode(split(normCol(col("text")), "#")).as("w"))
         .filter(length(col("w")) > 0)

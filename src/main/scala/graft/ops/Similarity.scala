@@ -278,8 +278,7 @@ object Similarity {
     private[ops] val fit = graft.Fit[Seq[Seq[Double]]]("embeddings.parquet")
 
     def centroids(s: SparkSession, dir: String): Seq[Seq[Double]] =
-      fit(s, dir) {
-        val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
+      fit(s, dir) { fp =>
         val tag = dir.replaceAll("[^a-zA-Z0-9.]", "_")
         val df = Artifacts.loadOrBuild(s, s"${Artifacts.root(s)}/graft_ivf/${tag}_k$nCells", fp) {
           import org.apache.spark.ml.clustering.KMeans
@@ -669,8 +668,7 @@ object Similarity {
 
     /** codebooks(m)(code) = 8-dim centroid. */
     def codebooks(s: SparkSession, dir: String): Seq[Seq[Seq[Double]]] =
-      fit(s, dir) {
-        val fp = Artifacts.fingerprint(s, s"$dir/embeddings.parquet")
+      fit(s, dir) { fp =>
         val tag = dir.replaceAll("[^a-zA-Z0-9.]", "_")
         val df = Artifacts.loadOrBuild(s,
           s"${Artifacts.root(s)}/graft_pq/${tag}_m${subspaces}_k$codes", fp) {
@@ -1634,7 +1632,7 @@ object Similarity {
     * refetch count — every refetch advances at least one round even when
     * ≥ M rows tie at the max. */
   private[graft] def kcSelect(s: SparkSession, dir: String): Seq[(Long, Option[Long], Long)] =
-    kcSelection(s, dir) {
+    kcSelection(s, dir) { _ =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1852,7 +1850,7 @@ object Similarity {
     * DECIMAL(38,0) treatment. */
   private[graft] def kmFit(s: SparkSession, dir: String,
       k: Int = kmK): (Seq[Seq[Long]], Seq[Long]) =
-    kmFits(k)(s, dir) {
+    kmFits(k)(s, dir) { _ =>
       kmFitSeeded(s, dir, kmXq(s, dir).orderBy(col("vec_id").asc).limit(k)
         .collect().map(_.getSeq[Long](2)).toSeq)
     }
@@ -2145,7 +2143,7 @@ object Similarity {
     * vec_ids. */
   val kmeansKcSeeded: Q = Q(
     "q283_kmeans_kcenter_seeded",
-    (s, dir) => fitTable(s, kcSeededFit(s, dir) {
+    (s, dir) => fitTable(s, kcSeededFit(s, dir) { _ =>
       // seeds: q274's published selection, in pick order
       val seedIds = kcSelect(s, dir).map(_._1)
       if (seedIds.isEmpty) (Nil, Nil)

@@ -45,7 +45,7 @@ object Spectral {
     * all-ones start (1/√64 = 0.125 is dyadic), each one distributed
     * Gram-vector pass. Memoized per (dir, corpus fingerprint). */
   private[graft] def principalDirection(s: SparkSession, dir: String): Seq[Double] =
-    direction(s, dir) {
+    direction(s, dir) { _ =>
       graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, dir)
         .select(expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -120,7 +120,7 @@ object Spectral {
     * collapsing map-side to ≤3 decimal partials per partition — wire volume
     * independent of N. */
   private[graft] def probeWeights(s: SparkSession, dir: String): Seq[Double] =
-    probe(s, dir) {
+    probe(s, dir) { _ =>
       val feats = Tables.documents(s, dir).select(
         (col("n_chars").cast("double") / lit(1000.0d)).as("x1"),
         (size(split(col("text"), " ")).cast("double") / lit(100.0d)).as("x2"),
@@ -207,7 +207,7 @@ object Spectral {
     * collapsing map-side to ≤65 decimal partials per partition — wire
     * volume independent of N. */
   private[graft] def geometricMedian(s: SparkSession, dir: String): Seq[Double] =
-    median(s, dir) {
+    median(s, dir) { _ =>
       graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, dir)
         .select(expr("transform(embedding, x -> cast(x as double))").as("v"))

@@ -28,7 +28,7 @@ class FitSpec extends AnyFunSuite {
       val fs = (1 to 4).map(_ => pool.submit(new Callable[Int] {
         def call(): Int = {
           start.await()
-          fit(spark, dir) { runs.incrementAndGet(); Thread.sleep(200); 7 }
+          fit(spark, dir) { _ => runs.incrementAndGet(); Thread.sleep(200); 7 }
         }
       }))
       start.countDown()
@@ -41,24 +41,29 @@ class FitSpec extends AnyFunSuite {
     val fit = Fit[Long]("t.parquet")
     val dir = tmpInput(3)
     val runs = new AtomicInteger
-    def rows = fit(spark, dir) {
+    var handed = 0L
+    def rows = fit(spark, dir) { fp =>
       runs.incrementAndGet()
+      handed = fp
       spark.read.parquet(s"$dir/t.parquet").count()
     }
+    def fpNow = ops.Artifacts.fingerprint(spark, s"$dir/t.parquet")
     assert(rows === 3L)
     assert(rows === 3L)
     assert(runs.get === 1)
+    assert(handed === fpNow)
     spark.range(5).write.mode("overwrite").parquet(s"$dir/t.parquet")
     assert(rows === 5L)
     assert(runs.get === 2)
+    assert(handed === fpNow)
     assert(fit.entries === 1)
   }
 
   test("forOracle prefers graft.oracle.sfdir over the last dir") {
     val fit = Fit[String]("t.parquet")
     val (a, b) = (tmpInput(1), tmpInput(1))
-    fit(spark, a)("a")
-    fit(spark, b)("b")
+    fit(spark, a)(_ => "a")
+    fit(spark, b)(_ => "b")
     val key = "graft.oracle.sfdir"
     val prev = sys.props.get(key)
     try {
