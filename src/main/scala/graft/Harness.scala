@@ -5,9 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The session and the query selection every graft main starts from. */
 object Harness {
   /** `local[cores]` with `partitions` shuffle partitions (0 = one per core),
-    * UTC session time, no UI and WARN logs (Verify's run log relies on
-    * Spark's warnings). `cores` defaults to SPARK_GRAFT_CPUS, else to every
-    * core of the host; `extra` adds a main's own confs. */
+    * UTC session time, no UI, WARN logs (Verify's run log relies on
+    * Spark's warnings) and [[LocalAggregate]] installed. `cores` defaults
+    * to SPARK_GRAFT_CPUS, else to every core of the host; `extra` adds a
+    * main's own confs. */
   def session(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
         .getOrElse(Runtime.getRuntime.availableProcessors),
       partitions: Int = 0, extra: Map[String, String] = Map.empty): SparkSession = {
@@ -17,6 +18,7 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .config(extra).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalAggregate.install(spark)
     spark
   }
 

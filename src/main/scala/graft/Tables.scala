@@ -33,6 +33,9 @@ object Tables {
 
   private def memoized(spark: SparkSession, path: String)
       (read: => DataFrame): DataFrame = {
+    // sessions graft did not build (a benchmark's, a user's) get the rule
+    // on their first read
+    LocalAggregate.install(spark)
     val fp = ops.Artifacts.fingerprint(spark, path)
     // sweep stopped-session entries on EVERY probe, not only on misses
     // (ADVICE r18): in a hit-only steady state a long-lived JVM would

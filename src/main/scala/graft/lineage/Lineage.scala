@@ -11,9 +11,10 @@ import graft.model._
   * Edges and links are plain Scala over the extracted `Seq[ScriptLineage]`,
   * which already lives on the driver: repo metadata, O(scripts × columns).
   * Their Dataset forms are local relations, so no Spark job runs before a
-  * consumer's own action. The column graph and the closure stay frames: a
-  * closure walks the graph on the driver while its edge list fits
-  * [[collectIfSmall]]'s bound and as a frontier-join loop past it. Q&A
+  * consumer's own action, nor in an exact aggregate over them. The column
+  * graph and the closure stay frames: a closure walks the graph on the
+  * driver while its edge list fits [[collectIfSmall]]'s bound and as a
+  * frontier-join loop past it. Q&A
   * ([[graft.qa.Ask]], [[graft.qa.Query]]) walks the knowledge-base snapshot
   * ([[graft.qa.QA.Kb.snapshot]]) with [[driverBfsSeq]] and runs no job.
   */
@@ -39,7 +40,9 @@ object Lineage {
       Edge(sl.script, df.name, cd.name, srcDf, srcCol, cd.transformation)
     }).distinctBy(e => (e.script, e.df, e.targetCol, e.srcDf, e.srcCol))
 
-  /** [[edges]] as a local Dataset. */
+  /** [[edges]] as a local Dataset: no Spark job runs before a consumer's own
+    * action, and an exact aggregate over it (a `count()`, a content hash)
+    * folds on the driver ([[graft.LocalAggregate]]) and runs none. */
   def edges(spark: SparkSession, lineages: Seq[ScriptLineage]): Dataset[Edge] = {
     import spark.implicits._
     spark.createDataset(edges(lineages))
@@ -56,7 +59,8 @@ object Lineage {
     }.distinct
   }
 
-  /** [[stitch]] as a local Dataset. */
+  /** [[stitch]] as a local Dataset; aggregates over it fold on the driver
+    * like those over [[edges]]. */
   def stitch(spark: SparkSession, lineages: Seq[ScriptLineage]): Dataset[RepoLink] = {
     import spark.implicits._
     spark.createDataset(stitch(lineages))

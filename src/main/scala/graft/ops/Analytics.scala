@@ -419,38 +419,12 @@ object Analytics {
   /** q93: event-type co-occurrence with lift — the association-mining core
     * (market-basket over the event log): for each unordered pair of event
     * types, the number of users exhibiting both, its support, and
-    * lift = P(a∧b)/(P(a)·P(b)). The per-user self-join is bounded by the
-    * type-distinct frame (≤ |types| rows per user, here 5), so candidate
-    * volume is ≤ |types|²/2 per user — never a cross join over events — and
-    * the rollup lands on ≤ |types|²/2 keys with map-side combine. Counts are
-    * exact integers; support and lift are fixed double expressions over them
+    * lift = P(a∧b)/(P(a)·P(b)). See [[cooccurrenceOf]]. Counts are exact
+    * integers; support and lift are fixed double expressions over them
     * (identical IEEE op sequence in both engines). */
   val cooccurrence: Q = Q(
     "q93_cooccurrence_lift",
-    (s, dir) => {
-      // ut feeds four consumers (both pair-join sides, per-type totals, the
-      // user count) — one PlanCache'd copy per (session, dir) instead of
-      // re-scanning and re-deduplicating the event log per consumer (the
-      // same discipline as Dedup.rareShingleRows)
-      val ut = graft.PlanCache.cached(s, "q93_ut", dir, s"$dir/events.parquet") {
-        Tables.events(s, dir).select("user_id", "event_type").distinct()
-      }
-      val totals = ut.groupBy("event_type").agg(count(lit(1)).as("cnt"))
-      val users = ut.agg(countDistinct("user_id").as("n_users"))
-      val pairs = ut.as("a").join(ut.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-            col("a.event_type") < col("b.event_type"))
-        .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
-        .agg(count(lit(1)).as("both_cnt"))
-      pairs
-        .join(broadcast(totals.select(col("event_type").as("type_a"), col("cnt").as("cnt_a"))), "type_a")
-        .join(broadcast(totals.select(col("event_type").as("type_b"), col("cnt").as("cnt_b"))), "type_b")
-        .join(broadcast(users))
-        .select(col("type_a"), col("type_b"), col("both_cnt"), col("cnt_a"), col("cnt_b"),
-          expr("CAST(both_cnt AS DOUBLE) / CAST(n_users AS DOUBLE)").as("support"),
-          expr("(CAST(both_cnt AS DOUBLE) * CAST(n_users AS DOUBLE)) / (CAST(cnt_a AS DOUBLE) * CAST(cnt_b AS DOUBLE))")
-            .as("lift"))
-    },
+    (s, dir) => cooccurrenceOf(Tables.events(s, dir)),
     Some("""WITH ut AS (
         SELECT DISTINCT user_id, event_type FROM events
       ), totals AS (
@@ -471,6 +445,41 @@ object Analytics {
       JOIN totals ta ON pairs.type_a = ta.event_type
       JOIN totals tb ON pairs.type_b = tb.event_type
       CROSS JOIN users"""))
+
+  /** q93 over `events` in one aggregation, never a self-join: each user's
+    * sorted type set (the oracle's DISTINCT (user_id, event_type), so a null
+    * user is one group and a null type is dropped), exploded into one key
+    * per type (a, null), per type pair a < b and per non-null user
+    * (null, null), counted once. A type's count `cnt` takes the null user
+    * in; `both_cnt` and `n_users` do not, as the oracle's join on user_id
+    * and COUNT(DISTINCT user_id) do not. The ≤ |types|²/2 counted keys fold
+    * into one row that the pairs are read back from. */
+  private[graft] def cooccurrenceOf(events: DataFrame): DataFrame = {
+    val ts = col("ts")
+    val none = lit(null).cast("string")
+    val keys = events.groupBy("user_id")
+      .agg(array_sort(collect_set("event_type")).as("ts"))
+      .select(explode(concat(
+        transform(ts, t => struct(t.as("a"), none.as("b"))),
+        filter(concat(
+          flatten(transform(ts, (x, i) => transform(slice(ts, i + 2, size(ts)),
+            y => struct(x.as("a"), y.as("b"))))),
+          array(struct(none.as("a"), none.as("b")))),
+          _ => col("user_id").isNotNull))).as("k"))
+      .groupBy(col("k.a").as("a"), col("k.b").as("b")).agg(count(lit(1)).as("n"))
+    keys.agg(
+        map_from_entries(collect_list(
+          when(col("a").isNotNull && col("b").isNull, struct(col("a"), col("n"))))).as("cnt"),
+        max(when(col("a").isNull, col("n"))).as("n_users"),
+        collect_list(when(col("b").isNotNull, struct(col("a"), col("b"), col("n")))).as("p"))
+      .select(explode(col("p")).as("p"), col("cnt"), col("n_users"))
+      .select(col("p.a").as("type_a"), col("p.b").as("type_b"), col("p.n").as("both_cnt"),
+        col("cnt")(col("p.a")).as("cnt_a"), col("cnt")(col("p.b")).as("cnt_b"), col("n_users"))
+      .select(col("type_a"), col("type_b"), col("both_cnt"), col("cnt_a"), col("cnt_b"),
+        expr("CAST(both_cnt AS DOUBLE) / CAST(n_users AS DOUBLE)").as("support"),
+        expr("(CAST(both_cnt AS DOUBLE) * CAST(n_users AS DOUBLE)) / (CAST(cnt_a AS DOUBLE) * CAST(cnt_b AS DOUBLE))")
+          .as("lift"))
+  }
 
   // q99: the one window-frame family nothing else registers — a CALENDAR
   // range frame (`RANGE BETWEEN INTERVAL ... PRECEDING`), the idiom behind

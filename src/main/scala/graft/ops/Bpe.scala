@@ -39,7 +39,7 @@ object Bpe {
 
   /** lower → non-alphanumeric runs to '#' → strip edge markers. */
   private def normCol(c: Column): Column =
-    trim(regexp_replace(lower(c), "[^a-z0-9]+", "#"), "#")
+    btrim(regexp_replace(lower(c), "[^a-z0-9]+", "#"), lit("#"))
 
   /** "low" → "|l||o||w|" (every char pipe-wrapped). */
   private def encodeCol(c: Column): Column = regexp_replace(c, "(.)", "|$1|")

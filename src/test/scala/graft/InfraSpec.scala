@@ -306,6 +306,13 @@ class InfraSpec extends AnyFunSuite {
       """PlanCache\.cached\([^"]*s?"(q274_sel|q277_fit|q283_fit|q291_fit)""") === Nil)
   }
 
+  test("source scan: one optimizer rule, no q93 cache entry") {
+    // LocalAggregate is the only optimizer extension; q93 aggregates once
+    // instead of caching a distinct frame for four consumers
+    assert(filesMatching("extraOptimizations") === Seq("LocalAggregate.scala"))
+    assert(filesMatching("""PlanCache\.cached\([^"]*"q93_ut""") === Nil)
+  }
+
   test("materializeCtes hints non-recursive CTEs and skips self-referencing ones") {
     val sql = """WITH RECURSIVE base AS (
         SELECT 1 AS x FROM t

@@ -294,6 +294,38 @@ class OpsSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
+  test("q93's one aggregation equals the distinct-join formulation on null users and types") {
+    import spark.implicits._
+    // a null user counts in cnt, not in both_cnt or n_users; a null type
+    // never appears; single-type users add no pair; duplicates count once
+    val events = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("view")), (Some(1L), Some("click")), (Some(1L), Some("view")),
+      (Some(1L), None), (Some(2L), Some("view")), (Some(3L), Some("buy")),
+      (Some(4L), None), (None, Some("view")), (None, Some("click")), (None, None),
+      (Some(5L), Some("click")), (Some(5L), Some("buy")), (Some(5L), Some("view")))
+      .toDF("user_id", "event_type").repartition(3)
+    val ut = events.select("user_id", "event_type").distinct()
+    val totals = ut.groupBy("event_type").agg(count(lit(1)).as("cnt"))
+    val users = ut.agg(countDistinct("user_id").as("n_users"))
+    val reference = ut.as("a").join(ut.as("b"),
+        col("a.user_id") === col("b.user_id") && col("a.event_type") < col("b.event_type"))
+      .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
+      .agg(count(lit(1)).as("both_cnt"))
+      .join(totals.select(col("event_type").as("type_a"), col("cnt").as("cnt_a")), "type_a")
+      .join(totals.select(col("event_type").as("type_b"), col("cnt").as("cnt_b")), "type_b")
+      .crossJoin(users)
+      .select(col("type_a"), col("type_b"), col("both_cnt"), col("cnt_a"), col("cnt_b"),
+        expr("CAST(both_cnt AS DOUBLE) / CAST(n_users AS DOUBLE)").as("support"),
+        expr("(CAST(both_cnt AS DOUBLE) * CAST(n_users AS DOUBLE)) / (CAST(cnt_a AS DOUBLE) * CAST(cnt_b AS DOUBLE))")
+          .as("lift"))
+    val got = ops.Analytics.cooccurrenceOf(events)
+    assert(got.columns.toSeq === reference.columns.toSeq)
+    val expected = reference.collect().toSet
+    assert(expected.size === 3)
+    assert(got.collect().toSet === expected)
+    assert(ops.Analytics.cooccurrenceOf(events.limit(0)).collect().isEmpty)
+  }
+
   test("per-row text operators run inside whole-stage codegen") {
     // the per-row scoring paths must stay codegen'd (no interpreted
     // expressions, no Python/RDD fallbacks) — the property that keeps them
