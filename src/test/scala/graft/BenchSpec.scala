@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * would otherwise read as a performance win in the driver's BENCH JSON). */
 class BenchSpec extends AnyFunSuite {
   import SparkTestSession._
+  import BenchSpec._
 
   test("a failing query reports err and -1 seconds, not a wall time") {
     val qs = Seq(
@@ -191,10 +192,84 @@ class BenchSpec extends AnyFunSuite {
   test("loadPins parses a flat json map and tolerates a missing file") {
     val f = java.nio.file.Files.createTempFile("pins", ".json")
     java.nio.file.Files.write(f,
-      """{"q01_x": 0.34, "q148_source_overlap":1.93}""".getBytes)
+    """{"q01_x": 0.34, "q148_source_overlap":1.93}""".getBytes)
     val pins = Bench.loadPins(f.toString)
     assert(pins == Map("q01_x" -> 0.34, "q148_source_overlap" -> 1.93), pins)
     assert(Bench.loadPins("/nonexistent/pins.json").isEmpty)
     java.nio.file.Files.delete(f)
   }
+
+  test("golden: the three contract lines of one fixture render byte-stable") {
+    val oracleFile = java.nio.file.Files.createTempFile("otimes_golden", ".json")
+    java.nio.file.Files.write(oracleFile,
+      ("""{"q00": 0.031, "_total": 106.7, "_meta": {"duckdb_version": "v1.0.0", """ +
+        """"ts": "2026-08-16T00:00:00+00:00", "repeats": 2, "probe": {"ext": [0.05, 1.4]}}}""")
+        .getBytes)
+    val timed = Map(7 -> 4.567, 12 -> 3.21, 20 -> 2.5)
+    val rs = (0 until 25).map { i =>
+      val name = f"q$i%02d"
+      val t = 1700000000000L + i * 1234L
+      if (i == 3) Bench.QResult(name, -1.0, Some("AnalysisException: no \"t\"\tx"), t)
+      else Bench.QResult(name, timed.getOrElse(i, math.round((0.05 + i * 0.137) * 1000) / 1000.0),
+        None, t)
+    }
+    val regs = Seq(("q07", 4.567, 1.234), ("q12", 3.21, 1.1), ("q20", 2.5, 0.9))
+    val confirm = Map("q07" -> 1.8889, "q20" -> -1.0)
+    val rewarmed = Seq("q14_pairs" -> 0.2345, "qa_corpus" -> 1.5)
+    val heals = Seq("qa_corpus" -> "q11")
+    val blocks = Seq(0.5, 2.25, -1.0)
+    val sf = "/data/sf0.1"
+    val full = Bench.renderJson(rs, sf, 1.23456, 3, 123456789L, regs, 0.98765,
+      rewarmed, heals, confirm, 1.25, 3.5, 0.75, blocks, Bench.oracleRefJson(oracleFile.toString))
+    val summary = Bench.renderSummary(rs, sf, regs, heals, confirm, 1.23456, rewarmed,
+      1.25, 3.5, 0.75, blocks, Bench.oracleRefJson(oracleFile.toString))
+    val compact = Bench.renderCompact(rs, confirm, 1.23456, sf,
+      Bench.oracleRef(oracleFile.toString)._1)
+    java.nio.file.Files.delete(oracleFile)
+    assert(full == GoldenFull, full)
+    assert(summary == GoldenSummary, summary)
+    assert(compact == GoldenCompact, compact)
+  }
+}
+
+/** The three lines the fixture above rendered before the typed report. */
+object BenchSpec {
+  val GoldenFull: String =
+    """{"metric":"total","value":46.673,"unit":"sec","total_confirmed":43.9949,""" +
+    """"queries":{"q00":0.05,"q01":0.187,"q02":0.324,"q03":-1.0,"q04":0.598,""" +
+    """"q05":0.735,"q06":0.872,"q07":4.567,"q08":1.146,"q09":1.283,"q10":1.42,""" +
+    """"q11":1.557,"q12":3.21,"q13":1.831,"q14":1.968,"q15":2.105,"q16":2.242,""" +
+    """"q17":2.379,"q18":2.516,"q19":2.653,"q20":2.5,"q21":2.927,"q22":3.064,""" +
+    """"q23":3.201,"q24":3.338},"t_start":{"q00":1700000000000,"q01":1700000001234,""" +
+    """"q02":1700000002468,"q03":1700000003702,"q04":1700000004936,"q05":1700000006170,""" +
+    """"q06":1700000007404,"q07":1700000008638,"q08":1700000009872,"q09":1700000011106,""" +
+    """"q10":1700000012340,"q11":1700000013574,"q12":1700000014808,"q13":1700000016042,""" +
+    """"q14":1700000017276,"q15":1700000018510,"q16":1700000019744,"q17":1700000020978,""" +
+    """"q18":1700000022212,"q19":1700000023446,"q20":1700000024680,"q21":1700000025914,""" +
+    """"q22":1700000027148,"q23":1700000028382,"q24":1700000029616},""" +
+    """"errors":{"q03":"AnalysisException: no \"t\"\tx"},"failed":1,"gc_sec":1.235,""" +
+    """"persistent_rdds":3,"storage_bytes":123456789,"regressions":{"q07":[4.57,1.23,""" +
+    """1.89],"q12":[3.21,1.1],"q20":[2.5,0.9,-1.0]},"warm_shared_sec":0.988,""" +
+    """"rewarm_sec":{"q14_pairs":0.235,"qa_corpus":1.5},""" +
+    """"cache_selfheals":["qa_corpus@q11"],"load_before":1.25,"load_after":3.5,""" +
+    """"external_busy_cores":0.75,"ext_busy_blocks":[0.5,2.25,-1.0],""" +
+    """"reg_ext_busy":{"q07":0.5,"q12":2.25,"q20":-1.0},"oracle_ref":{"total":106.7,""" +
+    """"meta":{"duckdb_version": "v1.0.0", "ts": "2026-08-16T00:00:00+00:00",""" +
+    """ "repeats": 2, "probe": {"ext": [0.05, 1.4]}}},"sf":"/data/sf0.1"}"""
+  val GoldenSummary: String =
+    """{"metric":"total","value":46.673,"unit":"sec","total_confirmed":43.9949,""" +
+    """"n_queries":25,"failed":1,"gc_sec":1.235,"slowest":{"q07":4.57,"q24":3.34,""" +
+    """"q12":3.21,"q23":3.2,"q22":3.06,"q21":2.93,"q19":2.65,"q18":2.52,"q20":2.5,""" +
+    """"q17":2.38},"regressions":{"q07":[4.57,1.23,1.89],"q12":[3.21,1.1],"q20":[2.5,""" +
+    """0.9,-1.0]},"reg_t_start":{"q07":1700000008638,"q12":1700000014808,""" +
+    """"q20":1700000024680},"cache_selfheals":["qa_corpus@q11"],"t0":1700000000000,""" +
+    """"ckpt_sec":[0.0,12.3,24.7],"rewarm_max":{"qa_corpus":1.5},"load_before":1.25,""" +
+    """"load_after":3.5,"external_busy_cores":0.75,"ext_busy_blocks":[0.5,2.25,-1.0],""" +
+    """"reg_ext_busy":{"q07":0.5,"q12":2.25,"q20":-1.0},"oracle_ref":{"total":106.7,""" +
+    """"meta":{"duckdb_version": "v1.0.0", "ts": "2026-08-16T00:00:00+00:00",""" +
+    """ "repeats": 2, "probe": {"ext": [0.05, 1.4]}}},"sf":"/data/sf0.1"}"""
+  val GoldenCompact: String =
+    """{"metric":"total","value":46.673,"unit":"sec","total_confirmed":43.9949,""" +
+    """"n_queries":25,"failed":1,"gc_sec":1.235,"oracle_total":106.7,""" +
+    """"sf":"/data/sf0.1"}"""
 }
