@@ -1,11 +1,14 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): times every registered query on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. An untimed warmup pass runs
-  * first so the timed pass measures steady-state query execution, not JVM/
-  * codegen warmup or the one-time lineage-repo materialization.
+  * SPARK_GRAFT_SF_DIR and prints three JSON lines (`FullLine`,
+  * `SummaryLine`, `CompactLine`) from one `Report`. An untimed warmup pass
+  * runs first so the timed pass measures steady-state query execution, not
+  * JVM/codegen warmup or the one-time lineage-repo materialization.
   *
   * Failure-honest (round-7 directive): a query that throws is reported with
   * `-1` as its seconds entry plus its error in the `errors` object — never
@@ -47,8 +50,9 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     def mark(): Unit =
       marks += ((System.nanoTime(), procStatBusy(), selfJiffies()))
-    /** External busy cores per inter-mark block; −1 where /proc was
-      * unreadable at either end. */
+    /** External busy cores per inter-mark block: busy jiffies minus this
+      * JVM's own, over the block's duration (USER_HZ = 100); −1 where /proc
+      * was unreadable at either end. */
     def blocks: Seq[Double] =
       marks.toSeq.sliding(2).collect {
         case scala.collection.Seq((t0, b0, s0), (t1, b1, s1)) =>
@@ -89,37 +93,36 @@ object Bench {
     rs
   }
 
-  private def jstr(s: String): String = Json.str(s)
-
   /** Pinned per-query seconds from the previous round's clean run
-    * (`bench_pins.json`, flat {"name": sec} — committed, regenerated each
-    * round from the builder's clean reading). A query is a REGRESSION when
-    * it has a pin, runs slower than 2× it, and is slow enough in absolute
-    * terms for the ratio to mean anything (>0.5 s — a 0.05→0.12 s jitter is
-    * scheduler noise, not a plan change). This is the alarm that would have
-    * caught BENCH_r10's q148 3.8× drift at build time instead of judge
-    * time. Absent/unreadable file → no check (empty pins). */
-  private[graft] def loadPins(path: String): Map[String, Double] = readPins(path)._2
-
-  /** One read of the pins file: its `"_sf"` scale tag and its pins. */
+    * (`bench_pins.json`, flat {"name": sec} plus its `"_sf"` scale tag —
+    * committed, regenerated each round from a clean reading).
+    * A query is a REGRESSION when it has a pin, runs slower than 2× it, and
+    * is slow enough in absolute terms for the ratio to mean anything
+    * (>0.5 s — a 0.05→0.12 s jitter is scheduler noise, not a plan change).
+    * This is the alarm that would have caught BENCH_r10's q148 3.8× drift
+    * at build time instead of judge time. One read returns the tag and the
+    * top-level numeric entries; absent/unreadable file → no tag, no pins. */
   private[graft] def readPins(path: String): (Option[String], Map[String, Double]) =
     try {
-      val txt = readText(path)
-      ("\"_sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1)),
-        "\"([^\"]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+      val root = readJson(path)
+      (Option(root.get("_sf")).filter(_.isTextual).map(_.asText),
+        root.properties.asScala.collect {
+          case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+        }.toMap)
     } catch { case _: Exception => (None, Map.empty) }
 
   private def readText(path: String): String =
     java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+
+  private def readJson(path: String): JsonNode =
+    new ObjectMapper().readTree(new java.io.File(path))
 
   /** A query regresses when its timed reading exceeds 2× its pin PLUS its
     * recorded warm-suite delta (VERDICT r16 #4): queries pinned from
     * ISOLATED quiet readings (q113/q148/q237 at sf0.1, q135 at sf1) run
     * 0.9–1.5 s slower inside a warm 287-query suite — neighbor/GC state
     * the isolated pin deliberately excludes. The delta rides the SAME
-    * flat pins file as a "warm:<query>" entry (the flat regex parser
-    * would mis-read a nested map as pins), so the alarm band is
+    * flat pins file as a "warm:<query>" entry, so the alarm band is
     * 2×(pin + warm) for those queries and 2×pin for everything else —
     * isolated pins stay the sensitive baseline without the permanent
     * in-suite false positive they'd otherwise fire. */
@@ -160,198 +163,140 @@ object Bench {
     results.filter(_.err.isEmpty)
       .map(r => confirm.get(r.name).filter(_ >= 0).getOrElse(r.sec)).sum
 
-  /** The driver-contract JSON line: `queries` maps every query to its
-    * seconds (−1 on failure), `errors` maps failed queries to messages,
-    * `value` sums only the successful timings. `t_start` maps every query
-    * to its wall-clock start (epoch ms). */
-  private[graft] def renderJson(results: Seq[QResult], sfDir: String,
-      gcSec: Double, persistentRdds: Int, storageBytes: Long,
-      regs: Seq[(String, Double, Double)], warmSharedSec: Double,
-      rewarmed: Seq[(String, Double)], selfHeals: Seq[(String, String)],
-      confirm: Map[String, Double] = Map.empty,
-      loadBefore: Double = -1.0, loadAfter: Double = -1.0,
-      extBusy: Double = -1.0,
-      extBusyBlocks: Seq[Double] = Nil,
-      oracleRef: String = "{}"): String = {
-    val qs = results.map(r => jstr(r.name) + ":" + r.sec).mkString("{", ",", "}")
-    // the full t_start map sits immediately after `queries` so that when the
-    // driver's 2000-char tail window truncates the line, what is lost is the
-    // (reconstructible) head of these two maps, not the forensic fields
-    val ts = results.map(r => jstr(r.name) + ":" + r.tStartMs).mkString("{", ",", "}")
-    val errs = results.collect { case QResult(n, _, Some(e), _) => jstr(n) + ":" + jstr(e) }
-      .mkString("{", ",", "}")
-    val total = results.filter(_.err.isEmpty).map(_.sec).sum
-    // NOT the f-interpolator: String.format uses the default locale, and a
-    // comma-decimal locale would emit `0,123` and break the driver's
-    // json.load; Double.toString is locale-free
-    val gc3 = math.round(gcSec * 1000) / 1000.0
-    // per-entry rewarm seconds (round-11 directive #7: the cold-entry story
-    // belongs in the contract line, not on stderr the harness may drop)
-    val rw = rewarmed.map { case (n, sec) =>
-      jstr(n) + ":" + math.round(sec * 1000) / 1000.0 }.mkString("{", ",", "}")
-    // mid-timed-pass eviction forensics: "entry@consumer" occurrences
-    val sh = selfHeals.map { case (e, c) => jstr(s"$e@$c") }.mkString("[", ",", "]")
-    s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""total_confirmed":${totalConfirmed(results, confirm)},""" +
-      s""""queries":$qs,""" +
-      s""""t_start":$ts,""" +
-      s""""errors":$errs,"failed":${results.count(_.err.isDefined)},""" +
-      s""""gc_sec":$gc3,"persistent_rdds":$persistentRdds,""" +
-      s""""storage_bytes":$storageBytes,""" +
-      s""""regressions":${renderRegs(regs, confirm)},""" +
-      s""""warm_shared_sec":${math.round(warmSharedSec * 1000) / 1000.0},""" +
-      s""""rewarm_sec":$rw,"cache_selfheals":$sh,""" +
-      loadProbeJson(loadBefore, loadAfter, extBusy) + "," +
-      extBusyJson(results, regs, extBusyBlocks) + "," +
-      s""""oracle_ref":$oracleRef,""" +
-      s""""sf":${jstr(sfDir)}}"""
-  }
+  /** The DuckDB side of the matched pair, parsed from the committed
+    * oracle_times.json (VERDICT r17 #3): the oracle suite `_total` and the
+    * oracle run's measurement `_meta` (DuckDB version, window timestamp,
+    * its own load probes — written by tools/oracle_timing.py r18+), so a
+    * future ratio swing is attributable in ONE read of BENCH_r{N} instead
+    * of forensics across runs. Absent/old-format file → both None. */
+  final case class OracleRef(total: Option[JsonNode] = None,
+      meta: Option[JsonNode] = None)
 
-  /** Per-block load fields (VERDICT r16 #5): `ext_busy_blocks` aligns with
-    * the ckpt_sec grid (block i covers queries 10i..10i+9 of the timed
-    * pass), `reg_ext_busy` stamps each REGRESSION-flagged query with the
-    * external busy cores measured over its own block — the mechanical
-    * attribution that previously needed the confirm pass + prose. */
-  private[graft] def extBusyJson(results: Seq[QResult],
-      regs: Seq[(String, Double, Double)],
-      extBusyBlocks: Seq[Double]): String = {
-    val blk = extBusyBlocks.mkString("[", ",", "]")
-    val blockOf = results.zipWithIndex.map { case (r, i) => r.name -> i / 10 }.toMap
-    val regBusy = regs.flatMap { case (n, _, _) =>
-      blockOf.get(n).flatMap(extBusyBlocks.lift).map(b => jstr(n) + ":" + b)
-    }.mkString("{", ",", "}")
-    s""""ext_busy_blocks":$blk,"reg_ext_busy":$regBusy"""
-  }
-
-  /** `name:[timed, pin]` or `name:[timed, pin, confirm]` when a confirm
-    * reading exists — the r13 contract shape. */
-  private def renderRegs(regs: Seq[(String, Double, Double)],
-      confirm: Map[String, Double] = Map.empty): String =
-    regs.map { case (n, sec, pin) =>
-      val base = math.round(sec * 100) / 100.0 + "," + math.round(pin * 100) / 100.0
-      val tail = confirm.get(n).map(c => "," + math.round(c * 100) / 100.0).getOrElse("")
-      jstr(n) + ":[" + base + tail + "]"
-    }.mkString("{", ",", "}")
-
-  /** Compact trailer printed AFTER the full contract line. The driver's
-    * BENCH artifact keeps only the last ~2000 output characters; with 140+
-    * entries the full `queries` map alone overflows that window and the
-    * headline `"metric"/"value"` prefix is cut off (BENCH_r07/r08: parsed
-    * null). This line carries the headline numbers plus only the slowest
-    * queries, sized to always survive the tail truncation. Timing forensics
-    * ride along compactly: `t0` (suite wall-clock start, epoch ms),
-    * `ckpt_sec` (offset of every 10th query's start from t0 — with the
-    * per-query durations this localizes any contention window's absolute
-    * time-of-day), `reg_t_start` (exact epoch-ms start of each breached
-    * query), and `gc_sec`/`rewarm_max` (the two adjudication fields that
-    * previously lived only in the truncatable full line). */
-  private[graft] def renderSummary(results: Seq[QResult], sfDir: String,
-      regs: Seq[(String, Double, Double)],
-      selfHeals: Seq[(String, String)] = Nil,
-      confirm: Map[String, Double] = Map.empty,
-      gcSec: Double = 0.0,
-      rewarmed: Seq[(String, Double)] = Nil,
-      loadBefore: Double = -1.0, loadAfter: Double = -1.0,
-      extBusy: Double = -1.0,
-      extBusyBlocks: Seq[Double] = Nil,
-      oracleRef: String = "{}"): String = {
-    val ok = results.filter(_.err.isEmpty)
-    val slow = ok.sortBy(-_.sec).take(10)
-      .map(r => jstr(r.name) + ":" + math.round(r.sec * 100) / 100.0)
-      .mkString("{", ",", "}")
-    val sh = selfHeals.map { case (e, c) => jstr(s"$e@$c") }.mkString("[", ",", "]")
-    val t0 = results.headOption.map(_.tStartMs).getOrElse(0L)
-    val ckpt = results.zipWithIndex.collect { case (r, i) if i % 10 == 0 =>
-      math.round((r.tStartMs - t0) / 100.0) / 10.0 }.mkString("[", ",", "]")
-    val regTs = results.filter(r => regs.exists(_._1 == r.name))
-      .map(r => jstr(r.name) + ":" + r.tStartMs).mkString("{", ",", "}")
-    val rwMax = rewarmed.sortBy(-_._2).headOption
-      .map { case (n, s) => "{" + jstr(n) + ":" + math.round(s * 1000) / 1000.0 + "}" }
-      .getOrElse("{}")
-    s"""{"metric":"total","value":${ok.map(_.sec).sum},"unit":"sec",""" +
-      s""""total_confirmed":${totalConfirmed(results, confirm)},""" +
-      s""""n_queries":${results.size},"failed":${results.count(_.err.isDefined)},""" +
-      s""""gc_sec":${math.round(gcSec * 1000) / 1000.0},""" +
-      s""""slowest":$slow,"regressions":${renderRegs(regs, confirm)},""" +
-      s""""reg_t_start":$regTs,""" +
-      s""""cache_selfheals":$sh,""" +
-      s""""t0":$t0,"ckpt_sec":$ckpt,"rewarm_max":$rwMax,""" +
-      loadProbeJson(loadBefore, loadAfter, extBusy) + "," +
-      extBusyJson(results, regs, extBusyBlocks) + "," +
-      s""""oracle_ref":$oracleRef,""" +
-      s""""sf":${jstr(sfDir)}}"""
-  }
-
-  /** Ultra-compact FINAL stdout line (VERDICT r18 #2a): the r17 round lost
-    * its entire per-query PERF table because the driver's 2000-char tail
-    * window caught only a truncated JSON object. The full contract line and
-    * the ~1–2 KB summary line still print first (the driver parses and
-    * merges every JSON line it finds in the full stdout); this line repeats
-    * ONLY the headline numbers in ≤ ~250 chars so that even a bare
-    * 2000-char tail capture always ends with one complete, parseable
-    * `{"metric":...}` object. Additions-only: no field of the existing two
-    * lines moved or changed meaning. */
-  private[graft] def renderCompact(results: Seq[QResult],
-      confirm: Map[String, Double], gcSec: Double, sfDir: String,
-      oracleTotal: Option[String]): String = {
-    val ok = results.filter(_.err.isEmpty)
-    // oracle total only (the full oracle_ref with its _meta block is on the
-    // longer lines; embedding it here could push past the tail window)
-    val oTot = oracleTotal.getOrElse("null")
-    s"""{"metric":"total","value":${ok.map(_.sec).sum},"unit":"sec",""" +
-      s""""total_confirmed":${totalConfirmed(results, confirm)},""" +
-      s""""n_queries":${results.size},""" +
-      s""""failed":${results.count(_.err.isDefined)},""" +
-      s""""gc_sec":${math.round(gcSec * 1000) / 1000.0},""" +
-      s""""oracle_total":$oTot,""" +
-      s""""sf":${jstr(sfDir)}}"""
-  }
-
-  /** The DuckDB side of the matched pair, raw-embedded from the committed
-    * oracle_times.json (VERDICT r17 #3): the bench artifact itself carries
-    * the oracle suite total AND the oracle run's measurement metadata
-    * (DuckDB version, window timestamp, its own load probes — written by
-    * tools/oracle_timing.py r18+), so a future ratio swing is attributable
-    * in ONE read of BENCH_r{N} instead of cross-session forensics.
-    * Absent/old-format file → {} (the pre-r18 dump had no _total/_meta). */
-  private[graft] def oracleRefJson(path: String): String = oracleRef(path)._2
-
-  /** The oracle suite total as written in the file, and the `oracle_ref`
-    * JSON that embeds it. */
-  private[graft] def oracleRef(path: String): (Option[String], String) =
+  private[graft] def oracleRef(path: String): OracleRef =
     try {
-      val txt = readText(path)
-      val tot = "\"_total\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-        .findFirstMatchIn(txt).map(_.group(1))
-      val meta = {
-        val at = txt.indexOf("\"_meta\"")
-        if (at < 0) None
-        else {
-          val open = txt.indexOf('{', at)
-          var i = open; var depth = 0; var end = -1
-          while (i < txt.length && end < 0) {
-            txt.charAt(i) match {
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          if (open >= 0 && end > open) Some(txt.substring(open, end + 1)) else None
-        }
-      }
-      (tot, (tot, meta) match {
-        case (Some(t), Some(m)) => s"""{"total":$t,"meta":$m}"""
-        case (Some(t), None) => s"""{"total":$t}"""
-        case _ => "{}"
-      })
-    } catch { case _: Exception => (None, "{}") }
+      val root = readJson(path)
+      OracleRef(Option(root.get("_total")).filter(_.isNumber),
+        Option(root.get("_meta")).filter(_.isObject))
+    } catch { case _: Exception => OracleRef() }
 
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
+  private def r2(x: Double): Double = math.round(x * 100) / 100.0
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  /** Everything one run measured, built once in `main`. `field` renders
+    * each contract field exactly once; a printed line is only its ordered
+    * key list (`FullLine`, `SummaryLine`, `CompactLine`) through `line`.
+    * Numbers render via toString, NOT the f-interpolator: String.format
+    * uses the default locale, and a comma-decimal locale would emit `0,123`
+    * and break any JSON reader. */
+  final case class Report(results: Seq[QResult], sfDir: String,
+      regs: Seq[(String, Double, Double)] = Nil,
+      confirm: Map[String, Double] = Map.empty,
+      gcSec: Double = 0.0, persistentRdds: Int = 0, storageBytes: Long = 0L,
+      warmSharedSec: Double = 0.0, rewarmed: Seq[(String, Double)] = Nil,
+      selfHeals: Seq[(String, String)] = Nil,
+      loadBefore: Double = -1.0, loadAfter: Double = -1.0,
+      extBusy: Double = -1.0, extBusyBlocks: Seq[Double] = Nil,
+      oracle: OracleRef = OracleRef()) {
+    private def ok = results.filter(_.err.isEmpty)
+    private def t0 = results.headOption.map(_.tStartMs).getOrElse(0L)
+
+    def field(key: String): String = key match {
+      case "metric" => Json.str("total")
+      case "unit" => Json.str("sec")
+      // `value` sums only the successful timings; failures read −1
+      // in `queries` and carry their message in `errors`
+      case "value" => ok.map(_.sec).sum.toString
+      case "total_confirmed" => totalConfirmed(results, confirm).toString
+      case "n_queries" => results.size.toString
+      case "failed" => results.count(_.err.isDefined).toString
+      case "queries" => Json.obj(results.map(r => r.name -> r.sec))
+      case "t_start" => Json.obj(results.map(r => r.name -> r.tStartMs))
+      case "errors" =>
+        Json.obj(results.collect { case QResult(n, _, Some(e), _) => n -> Json.str(e) })
+      case "slowest" => Json.obj(ok.sortBy(-_.sec).take(10).map(r => r.name -> r2(r.sec)))
+      case "gc_sec" => r3(gcSec).toString
+      case "persistent_rdds" => persistentRdds.toString
+      case "storage_bytes" => storageBytes.toString
+      // `name:[timed, pin]`, or `[timed, pin, confirm]` when a confirm
+      // reading exists — the r13 contract shape
+      case "regressions" => Json.obj(regs.map { case (n, sec, pin) =>
+        n -> Json.arr((Seq(sec, pin) ++ confirm.get(n)).map(r2)) })
+      case "confirmed" =>
+        Json.obj(regs.flatMap { case (n, _, _) => confirm.get(n).map(c => n -> r3(c)) })
+      case "reg_t_start" =>
+        Json.obj(results.filter(r => regs.exists(_._1 == r.name)).map(r => r.name -> r.tStartMs))
+      case "warm_shared_sec" => r3(warmSharedSec).toString
+      // per-entry rewarm seconds (round-11 directive #7: the cold-entry
+      // story belongs in the contract line, not on stderr)
+      case "rewarm_sec" => Json.obj(rewarmed.map { case (n, s) => n -> r3(s) })
+      case "rewarm_max" =>
+        Json.obj(rewarmed.maxByOption(_._2).map { case (n, s) => n -> r3(s) })
+      // mid-timed-pass eviction forensics: "entry@consumer" occurrences
+      case "cache_selfheals" => Json.arr(selfHeals.map { case (e, c) => Json.str(s"$e@$c") })
+      case "t0" => t0.toString
+      case "ckpt_sec" =>
+        Json.arr(results.grouped(10).map(b => math.round((b.head.tStartMs - t0) / 100.0) / 10.0))
+      case "load_before" => loadBefore.toString
+      case "load_after" => loadAfter.toString
+      case "external_busy_cores" => extBusy.toString
+      // per-block load (VERDICT r16 #5): block i covers queries 10i..10i+9
+      // of the timed pass, the ckpt_sec grid; `reg_ext_busy` stamps each
+      // flagged query with the external busy cores of its own block
+      case "ext_busy_blocks" => Json.arr(extBusyBlocks)
+      case "reg_ext_busy" =>
+        val blockOf = results.map(_.name).zipWithIndex.toMap
+        Json.obj(regs.flatMap { case (n, _, _) =>
+          blockOf.get(n).flatMap(i => extBusyBlocks.lift(i / 10)).map(n -> _) })
+      case "oracle_ref" => oracle.total.fold("{}")(t =>
+        Json.obj(("total" -> t) +: oracle.meta.map("meta" -> _).toSeq))
+      case "oracle_total" => oracle.total.fold("null")(_.toString)
+      case "sf" => Json.str(sfDir)
+    }
+
+    def line(keys: Seq[String]): String = Json.obj(keys.map(k => k -> field(k)))
+  }
+
+  /** The full contract line. Its `t_start` map (per-query wall-clock
+    * start, epoch ms) sits immediately after `queries` so that
+    * when a 2000-char tail capture of stdout truncates the line, what is
+    * lost is the (reconstructible) head of these two maps, not the
+    * forensic fields. `confirmed` holds each breached query's confirm
+    * reading (−1 for a failed confirm). */
+  private[graft] val FullLine = Seq("metric", "value", "unit",
+    "total_confirmed", "queries", "t_start", "errors", "failed", "gc_sec",
+    "persistent_rdds", "storage_bytes", "regressions", "warm_shared_sec",
+    "rewarm_sec", "cache_selfheals", "load_before", "load_after",
+    "external_busy_cores", "ext_busy_blocks", "reg_ext_busy", "oracle_ref",
+    "sf", "confirmed")
+
+  /** Trailer printed AFTER the full line. A BENCH artifact keeps only the
+    * last ~2000 output characters; with 140+ entries the full
+    * `queries` map alone overflows that window and the headline prefix is
+    * cut off (BENCH_r07/r08: parsed null). This line carries the headline
+    * numbers plus only the slowest queries, sized to survive the tail
+    * truncation, with compact timing forensics: `t0` (suite start, epoch
+    * ms), `ckpt_sec` (offset of every 10th query's start from t0 — with
+    * the per-query durations this localizes any contention window's
+    * time-of-day), `reg_t_start` (epoch-ms start of each breached query),
+    * and `gc_sec`/`rewarm_max`. */
+  private[graft] val SummaryLine = Seq("metric", "value", "unit",
+    "total_confirmed", "n_queries", "failed", "gc_sec", "slowest",
+    "regressions", "reg_t_start", "cache_selfheals", "t0", "ckpt_sec",
+    "rewarm_max", "load_before", "load_after", "external_busy_cores",
+    "ext_busy_blocks", "reg_ext_busy", "oracle_ref", "sf")
+
+  /** Ultra-compact FINAL stdout line (VERDICT r18 #2a): r17 lost its whole
+    * per-query PERF table because the 2000-char tail window caught only a
+    * truncated JSON object. This line repeats ONLY the headline numbers in
+    * ≤ ~250 chars, so even a bare tail capture ends with one complete,
+    * parseable `{"metric":...}` object. The oracle total only: the full
+    * `oracle_ref` with its `_meta` could push past the tail window. */
+  private[graft] val CompactLine = Seq("metric", "value", "unit",
+    "total_confirmed", "n_queries", "failed", "gc_sec", "oracle_total", "sf")
+
+  private def gcMillis(): Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).filter(_ > 0).sum
-  }
 
   /** 1-minute loadavg (Linux), −1 when unreadable — the r15 VERDICT #2
     * load precondition: every published bench number carries the machine
@@ -362,12 +307,6 @@ object Bench {
   private[graft] def loadAvg1(): Double =
     try readText("/proc/loadavg").split(" ")(0).toDouble
     catch { case _: Exception => -1.0 }
-
-  /** Render the load-probe JSON fragment shared by both output lines. */
-  private[graft] def loadProbeJson(before: Double, after: Double,
-      externalBusy: Double): String =
-    s""""load_before":$before,"load_after":$after,""" +
-      s""""external_busy_cores":$externalBusy"""
 
   private def procStatBusy(): Long =
     try {
@@ -387,20 +326,16 @@ object Bench {
     } catch { case _: Exception => -1L }
 
   /** Directly MEASURED external load (the BENCH_NOTES r15 forensic probe,
-    * mechanized per VERDICT r15 #2): sample /proc/stat over `ms`, subtract
-    * this JVM's own jiffies, convert to busy cores (USER_HZ = 100). Run it
-    * BEFORE the suite (cheap, done while otherwise idle) so the artifact
-    * records the noisy-neighbor level that the timings are conditioned on.
-    * −1 when /proc is unreadable. */
+    * mechanized per VERDICT r15 #2): one LoadTrace block over a `ms` sleep.
+    * Run it BEFORE the suite (cheap, done while otherwise idle) so the
+    * artifact records the noisy-neighbor level that the timings are
+    * conditioned on. −1 when /proc is unreadable at either end. */
   private[graft] def externalBusyCores(ms: Int = 500): Double = {
-    val b0 = procStatBusy(); val s0 = selfJiffies()
-    if (b0 < 0 || s0 < 0) return -1.0
-    val t0 = System.nanoTime()
+    val trace = new LoadTrace
+    trace.mark()
     Thread.sleep(ms.toLong)
-    val dtSec = (System.nanoTime() - t0) / 1e9
-    val db = procStatBusy() - b0
-    val ds = selfJiffies() - s0
-    math.max(0.0, math.round((db - ds) / (100.0 * dtSec) * 100) / 100.0)
+    trace.mark()
+    trace.blocks.head
   }
 
   /** The untimed warm-up every timing main runs first: one pass over
@@ -468,7 +403,6 @@ object Bench {
     val trace = new LoadTrace
     val results = runSuite(spark, sfDir, queries, "", trace)
     val gcSec = (gcMillis() - gc0) / 1e3
-    val extBlocks = trace.blocks
     val loadAfter = loadAvg1()
     val selfHeals = PlanCache.drainSelfHeals()
     val regs = regressions(results, pins)
@@ -481,16 +415,12 @@ object Bench {
     val confirmHeals = PlanCache.drainSelfHeals()
     val storage = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum
-    val allHeals = selfHeals ++ confirmHeals
-    val (oracleTotal, oracleRefJs) = oracleRef(
-      sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "oracle_times.json"))
-    println(renderJson(results, sfDir, gcSec,
-      spark.sparkContext.getPersistentRDDs.size, storage, regs, warmSharedSec,
-      warmed, allHeals, confirm, loadBefore, loadAfter, extBusy, extBlocks,
-      oracleRefJs))
-    println(renderSummary(results, sfDir, regs, allHeals, confirm, gcSec,
-      warmed, loadBefore, loadAfter, extBusy, extBlocks, oracleRefJs))
-    println(renderCompact(results, confirm, gcSec, sfDir, oracleTotal))
+    val report = Report(results, sfDir, regs, confirm, gcSec,
+      spark.sparkContext.getPersistentRDDs.size, storage, warmSharedSec,
+      warmed, selfHeals ++ confirmHeals, loadBefore, loadAfter, extBusy,
+      trace.blocks,
+      oracleRef(sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "oracle_times.json")))
+    Seq(FullLine, SummaryLine, CompactLine).foreach(keys => println(report.line(keys)))
     spark.stop()
   }
 }

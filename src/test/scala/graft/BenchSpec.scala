@@ -19,8 +19,7 @@ class BenchSpec extends AnyFunSuite {
     assert(boom.err.isDefined, "throwing query did not surface an error")
     assert(boom.sec == -1.0)
     assert(rs.find(_.name == "ok").get.err.isEmpty)
-    val json = Bench.renderJson(rs, sfDir, gcSec = 0.1, persistentRdds = 0, storageBytes = 0L,
-      regs = Nil, warmSharedSec = 0.0, rewarmed = Nil, selfHeals = Nil)
+    val json = Bench.Report(rs, sfDir, gcSec = 0.1).line(Bench.FullLine)
     assert(json.contains("\"boom\":-1.0"), json)
     assert(json.contains("\"failed\":1"), json)
     // total sums only successes — the failure must not contribute −1
@@ -30,17 +29,18 @@ class BenchSpec extends AnyFunSuite {
 
   test("load probes land in both JSON lines; external cores are measurable") {
     val rs = Seq(Bench.QResult("ok", 0.5, None))
-    val json = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, Nil, 0.0, Nil, Nil,
-      Map.empty, loadBefore = 1.25, loadAfter = 3.5, extBusy = 0.75)
+    val probed = Bench.Report(rs, sfDir, loadBefore = 1.25, loadAfter = 3.5, extBusy = 0.75)
+    val json = probed.line(Bench.FullLine)
     assert(json.contains("\"load_before\":1.25"), json)
     assert(json.contains("\"load_after\":3.5"), json)
     assert(json.contains("\"external_busy_cores\":0.75"), json)
-    val summary = Bench.renderSummary(rs, sfDir, Nil,
-      loadBefore = 1.25, loadAfter = 3.5, extBusy = 0.75)
+    val summary = probed.line(Bench.SummaryLine)
     assert(summary.contains("\"external_busy_cores\":0.75"), summary)
     // default (unprobed) renders -1.0, never an absent field
-    val bare = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, Nil, 0.0, Nil, Nil)
+    val bare = Bench.Report(rs, sfDir).line(Bench.FullLine)
     assert(bare.contains("\"external_busy_cores\":-1.0"), bare)
+    // nothing breached: `confirmed` is present and empty
+    assert(bare.endsWith(""","confirmed":{}}"""), bare)
     // the probe itself: non-negative on this Linux box, and self time is
     // excluded (an idle-probe reading can't be the whole machine)
     val ext = Bench.externalBusyCores(ms = 200)
@@ -60,13 +60,15 @@ class BenchSpec extends AnyFunSuite {
     val regs = Bench.regressions(rs, pins)
     assert(regs == Seq(("q_slow", 7.29, 1.93)), regs.toString)
     // no confirm reading -> the [timed, pin] shape (pre-r13 compatible)
-    val json = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, regs, warmSharedSec = 1.234,
+    val json = Bench.Report(rs, sfDir, regs, warmSharedSec = 1.234,
       rewarmed = Seq("q14_pairs" -> 0.2345), selfHeals = Seq("qa_corpus" -> "q30_qa"))
+      .line(Bench.FullLine)
     assert(json.contains("\"regressions\":{\"q_slow\":[7.29,1.93]}"), json)
     assert(json.contains("\"warm_shared_sec\":1.234"), json)
     assert(json.contains("\"rewarm_sec\":{\"q14_pairs\":0.235"), json)
     assert(json.contains("\"cache_selfheals\":[\"qa_corpus@q30_qa\"]"), json)
-    val summary = Bench.renderSummary(rs, sfDir, regs, Seq("qa_corpus" -> "q30_qa"))
+    val summary = Bench.Report(rs, sfDir, regs, selfHeals = Seq("qa_corpus" -> "q30_qa"))
+      .line(Bench.SummaryLine)
     assert(summary.contains("\"regressions\":{\"q_slow\":[7.29,1.93]}"), summary)
     assert(summary.contains("\"cache_selfheals\":[\"qa_corpus@q30_qa\"]"), summary)
   }
@@ -81,12 +83,11 @@ class BenchSpec extends AnyFunSuite {
     assert(confirm("q_slow") >= 0.0, "confirm of a working query must be a wall time")
     val rs = Seq(Bench.QResult("q_slow", 7.29, None, 1700000000000L),
       Bench.QResult("q_fine", 1.0, None, 1700000010000L))
-    val json = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, regs, 0.0, Nil, Nil,
-      confirm = Map("q_slow" -> 1.889))
+    val json = Bench.Report(rs, sfDir, regs, Map("q_slow" -> 1.889)).line(Bench.FullLine)
     assert(json.contains("\"regressions\":{\"q_slow\":[7.29,1.93,1.89]}"), json)
-    val summary = Bench.renderSummary(rs, sfDir, regs,
-      confirm = Map("q_slow" -> 1.889), gcSec = 0.5,
-      rewarmed = Seq("a" -> 0.1, "q14_pairs" -> 0.42))
+    assert(json.endsWith(""","confirmed":{"q_slow":1.889}}"""), json)
+    val summary = Bench.Report(rs, sfDir, regs, Map("q_slow" -> 1.889), gcSec = 0.5,
+      rewarmed = Seq("a" -> 0.1, "q14_pairs" -> 0.42)).line(Bench.SummaryLine)
     assert(summary.contains("\"regressions\":{\"q_slow\":[7.29,1.93,1.89]}"), summary)
     assert(summary.contains("\"reg_t_start\":{\"q_slow\":1700000000000}"), summary)
     assert(summary.contains("\"gc_sec\":0.5"), summary)
@@ -119,19 +120,20 @@ class BenchSpec extends AnyFunSuite {
     // no confirms -> identical to the raw successful total
     assert(math.abs(Bench.totalConfirmed(rs, Map.empty) - (9.73 + 5.0 + 1.0)) < 1e-9)
     val regs = Seq(("q_slow", 9.73, 2.0), ("q_bad", 5.0, 2.0))
-    val json = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, regs, 0.0, Nil, Nil, confirm)
+    val json = Bench.Report(rs, sfDir, regs, confirm).line(Bench.FullLine)
     assert(json.contains("\"total_confirmed\":7.42"), json)
-    val summary = Bench.renderSummary(rs, sfDir, regs, confirm = confirm)
+    val summary = Bench.Report(rs, sfDir, regs, confirm).line(Bench.SummaryLine)
     assert(summary.contains("\"total_confirmed\":7.42"), summary)
   }
 
   test("timestamps: full line carries per-query t_start; summary t0 + ckpt offsets") {
     val rs = (0 until 25).map(i =>
       Bench.QResult(f"q$i%02d", 0.1, None, 1700000000000L + i * 1000L))
-    val json = Bench.renderJson(rs, sfDir, 0.0, 0, 0L, Nil, 0.0, Nil, Nil)
+    val report = Bench.Report(rs, sfDir)
+    val json = report.line(Bench.FullLine)
     assert(json.contains("\"t_start\":{\"q00\":1700000000000,"), json)
     assert(json.contains("\"q24\":1700000024000}"), json)
-    val summary = Bench.renderSummary(rs, sfDir, Nil)
+    val summary = report.line(Bench.SummaryLine)
     assert(summary.contains("\"t0\":1700000000000"), summary)
     // every 10th query start as offset-from-t0 seconds: q00, q10, q20
     assert(summary.contains("\"ckpt_sec\":[0.0,10.0,20.0]"), summary)
@@ -160,7 +162,7 @@ class BenchSpec extends AnyFunSuite {
     // The regression alarm only protects what it can see (VERDICT r11: q213's
     // 3.11 s was invisible because the 20 r11 queries landed unpinned). Every
     // new operator must land with its pin in the same commit.
-    val pins = Bench.loadPins("bench_pins.json")
+    val (_, pins) = Bench.readPins("bench_pins.json")
     assert(pins.nonEmpty, "bench_pins.json missing or unparseable")
     val unpinned = SparkEntry.queries.keys.toSeq
       .filterNot(_.startsWith("aux_")).filterNot(pins.contains).sorted
@@ -176,16 +178,19 @@ class BenchSpec extends AnyFunSuite {
       ("""{"q01_x": 0.031, "_total": 106.7, "_meta": {"duckdb_version": """ +
         """"v1.0.0", "ts": "2026-08-16T00:00:00+00:00", "ext_busy_cores": 0.05}}""")
         .getBytes)
-    val ref = Bench.oracleRefJson(f.toString)
+    def oracleRefJson(path: String) =
+      Bench.Report(Nil, sfDir, oracle = Bench.oracleRef(path)).field("oracle_ref")
+    val ref = oracleRefJson(f.toString)
     assert(ref.contains(""""total":106.7"""), ref)
-    assert(ref.contains(""""duckdb_version": "v1.0.0""""), ref)
-    // embedded raw meta must still be valid JSON inside a bench line
+    assert(Bench.oracleRef(f.toString).meta.map(_.get("duckdb_version").asText)
+      .contains("v1.0.0"), ref)
+    // embedded meta must still be valid JSON inside a bench line
     assert(ref.count(_ == '{') == ref.count(_ == '}'), ref)
     // pre-r18 dump (no _total/_meta) and missing file → "{}" not a throw
     val old = java.nio.file.Files.createTempFile("otimes_old", ".json")
     java.nio.file.Files.write(old, """{"q01_x": 0.031}""".getBytes)
-    assert(Bench.oracleRefJson(old.toString) == "{}")
-    assert(Bench.oracleRefJson("/nonexistent/otimes.json") == "{}")
+    assert(oracleRefJson(old.toString) == "{}")
+    assert(oracleRefJson("/nonexistent/otimes.json") == "{}")
     java.nio.file.Files.delete(f); java.nio.file.Files.delete(old)
   }
 
@@ -193,9 +198,14 @@ class BenchSpec extends AnyFunSuite {
     val f = java.nio.file.Files.createTempFile("pins", ".json")
     java.nio.file.Files.write(f,
     """{"q01_x": 0.34, "q148_source_overlap":1.93}""".getBytes)
-    val pins = Bench.loadPins(f.toString)
+    val (_, pins) = Bench.readPins(f.toString)
     assert(pins == Map("q01_x" -> 0.34, "q148_source_overlap" -> 1.93), pins)
-    assert(Bench.loadPins("/nonexistent/pins.json").isEmpty)
+    assert(Bench.readPins("/nonexistent/pins.json") == (None, Map.empty))
+    // the scale tag and top-level numbers only, never a nested map's entries
+    java.nio.file.Files.write(f,
+      """{"_sf": "sf0.1", "q01_x": 0.34, "warm:q01_x": 0.5, "notes": {"q02_y": 9.0}}""".getBytes)
+    assert(Bench.readPins(f.toString) ==
+      (Some("sf0.1"), Map("q01_x" -> 0.34, "warm:q01_x" -> 0.5)))
     java.nio.file.Files.delete(f)
   }
 
@@ -215,24 +225,30 @@ class BenchSpec extends AnyFunSuite {
     }
     val regs = Seq(("q07", 4.567, 1.234), ("q12", 3.21, 1.1), ("q20", 2.5, 0.9))
     val confirm = Map("q07" -> 1.8889, "q20" -> -1.0)
-    val rewarmed = Seq("q14_pairs" -> 0.2345, "qa_corpus" -> 1.5)
-    val heals = Seq("qa_corpus" -> "q11")
-    val blocks = Seq(0.5, 2.25, -1.0)
-    val sf = "/data/sf0.1"
-    val full = Bench.renderJson(rs, sf, 1.23456, 3, 123456789L, regs, 0.98765,
-      rewarmed, heals, confirm, 1.25, 3.5, 0.75, blocks, Bench.oracleRefJson(oracleFile.toString))
-    val summary = Bench.renderSummary(rs, sf, regs, heals, confirm, 1.23456, rewarmed,
-      1.25, 3.5, 0.75, blocks, Bench.oracleRefJson(oracleFile.toString))
-    val compact = Bench.renderCompact(rs, confirm, 1.23456, sf,
-      Bench.oracleRef(oracleFile.toString)._1)
+    val report = Bench.Report(rs, "/data/sf0.1", regs, confirm, 1.23456, 3, 123456789L,
+      0.98765, Seq("q14_pairs" -> 0.2345, "qa_corpus" -> 1.5), Seq("qa_corpus" -> "q11"),
+      1.25, 3.5, 0.75, Seq(0.5, 2.25, -1.0), Bench.oracleRef(oracleFile.toString))
     java.nio.file.Files.delete(oracleFile)
-    assert(full == GoldenFull, full)
-    assert(summary == GoldenSummary, summary)
+    // the two documented departures from the recorded lines: Jackson
+    // re-renders the oracle's _meta compactly, and the full line gains
+    // `confirmed` (3-decimal confirm readings, −1.0 for a failed one)
+    def compactMeta(line: String) = line.replace(
+      """{"duckdb_version": "v1.0.0", "ts": "2026-08-16T00:00:00+00:00", "repeats": 2, """ +
+        """"probe": {"ext": [0.05, 1.4]}}""",
+      """{"duckdb_version":"v1.0.0","ts":"2026-08-16T00:00:00+00:00","repeats":2,""" +
+        """"probe":{"ext":[0.05,1.4]}}""")
+    val full = report.line(Bench.FullLine)
+    assert(full == compactMeta(GoldenFull).stripSuffix("}") +
+      ""","confirmed":{"q07":1.889,"q20":-1.0}}""", full)
+    val summary = report.line(Bench.SummaryLine)
+    assert(summary == compactMeta(GoldenSummary), summary)
+    val compact = report.line(Bench.CompactLine)
     assert(compact == GoldenCompact, compact)
   }
 }
 
-/** The three lines the fixture above rendered before the typed report. */
+/** The three lines the golden fixture rendered through the three
+  * hand-written renderers that preceded `Bench.Report`. */
 object BenchSpec {
   val GoldenFull: String =
     """{"metric":"total","value":46.673,"unit":"sec","total_confirmed":43.9949,""" +
