@@ -179,6 +179,27 @@ object Bench {
         Option(root.get("_meta")).filter(_.isObject))
     } catch { case _: Exception => OracleRef() }
 
+  /** [[oracleRef]] of `path` when it was measured at the run's scale, by
+    * the pins' rule: the last path component of its `_meta.sf` must be a
+    * path component of `sfDir`. An off-scale, untagged or unreadable file
+    * embeds no reference, and one stderr line says why — a sf0.1 oracle
+    * total beside a sf0.01 `value` would read as a ratio it is not. */
+  private[graft] def oracleRefAt(path: String, sfDir: String): OracleRef = {
+    val ref = oracleRef(path)
+    val tag = ref.meta.flatMap(m => Option(m.get("sf"))).filter(_.isTextual)
+      .flatMap(_.asText.split('/').filter(_.nonEmpty).lastOption)
+    if (ref.total.isDefined && tag.exists(t => sfDir.split('/').contains(t))) ref
+    else {
+      val why = (ref.total, tag) match {
+        case (None, _) => s"oracle times '$path' unreadable or missing its \"_total\""
+        case (_, None) => s"oracle times '$path' missing its \"_meta.sf\" tag"
+        case (_, Some(t)) => s"oracle times measured at '$t' but run dir is '$sfDir'"
+      }
+      System.err.println(s"[bench] ORACLE REFERENCE OMITTED: $why")
+      OracleRef()
+    }
+  }
+
   private def r2(x: Double): Double = math.round(x * 100) / 100.0
   private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
 
@@ -419,7 +440,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.size, storage, warmSharedSec,
       warmed, selfHeals ++ confirmHeals, loadBefore, loadAfter, extBusy,
       trace.blocks,
-      oracleRef(sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "oracle_times.json")))
+      oracleRefAt(sys.env.getOrElse("SPARK_GRAFT_ORACLE_TIMES", "oracle_times.json"), sfDir))
     Seq(FullLine, SummaryLine, CompactLine).foreach(keys => println(report.line(keys)))
     spark.stop()
   }

@@ -1101,27 +1101,11 @@ object Dedup {
     *
     * Distributed shape: the truth join shuffles on shingle then on the pair
     * key, both natural keys; the grade is three co-partitioned pair-key
-    * joins collapsed to one row. At 100 TB this runs on a sampled shard:
-    * set spark.graft.lshEval.docSampleFraction < 1.0 for a deterministic
-    * hash-sample of docs on BOTH the truth and prediction sides (the
-    * default 1.0 keeps the exact full-corpus form the oracle checks). */
+    * joins collapsed to one row. */
   val lshEval: Q = Q(
     "q144_lsh_eval",
     (s, dir) => {
-      // Sampled-shard dial: spark.graft.lshEval.docSampleFraction < 1.0
-      // restricts the eval to a deterministic hash-sample of documents
-      // (truth AND prediction sides, so precision/recall are measured on
-      // the induced subcorpus — an unbiased estimate whose CI shrinks as
-      // 1/√pairs). Default 1.0 = exact full-corpus eval, hash-gated by the
-      // oracle; the dial exists because the truth join's cost grows with
-      // corpus self-similarity (quadratic in hot-shingle df), which an
-      // eval harness should not impose on every bench run at planet scale.
-      val frac = s.conf.get("spark.graft.lshEval.docSampleFraction", "1.0").toDouble
-      def sampled(df: DataFrame, idCol: String): DataFrame =
-        if (frac >= 1.0) df
-        else df.filter(pmod(xxhash64(col(idCol)), lit(1000000L))
-          < lit((frac * 1000000L).toLong))
-      val ng = sampled(ngramRows(s, dir), "doc_id")
+      val ng = ngramRows(s, dir)
       val sizes = ng.groupBy("doc_id").agg(count(lit(1)).as("n"))
       // no broadcast hint on the doc-count-sized frame (see q14's note):
       // co-keyed shuffle join at scale, AQE-broadcast when small
@@ -1134,8 +1118,7 @@ object Dedup {
         .agg(count(lit(1)).as("common"), min(col("a.n")).as("na"), min(col("b.n")).as("nb"))
         .filter(col("common") / (col("na") + col("nb") - col("common")) >= 0.5)
         .select("doc_a", "doc_b")
-      val pred = sampled(sampled(minhashLsh.run(s, dir)
-        .select("doc_a", "doc_b"), "doc_a"), "doc_b")
+      val pred = minhashLsh.run(s, dir).select("doc_a", "doc_b")
       val keys = Seq("doc_a", "doc_b")
       val tp = pred.join(truth, keys).agg(count(lit(1)).as("tp"))
       val fp = pred.join(truth, keys, "left_anti").agg(count(lit(1)).as("fp"))

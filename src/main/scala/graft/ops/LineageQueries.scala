@@ -284,18 +284,18 @@ object LineageQueries {
     * itself sha1-pinned in LineageSpec), with min-depth semantics, the
     * maxDepth=20 horizon, and THIS REPO's 2000-node cap semantics — a
     * (depth, name)-ordered row_number ≤ 1999, i.e. complete levels then
-    * alphabetical fill, exactly what downstreamClosure applies. The
-    * reference (qa/ask.py:211-223) instead stops in BFS discovery order, so
-    * AT the cap boundary the retained subset can differ (documented at
-    * Lineage.closure); below the cap the closures are identical.
+    * alphabetical fill, exactly what Lineage.driverBfsSeq applies to the
+    * snapshot's column pairs. The reference (qa/ask.py:211-223) instead
+    * stops in BFS discovery order, so AT the cap boundary the retained
+    * subset can differ (documented at Lineage.driverBfsSeq); below the cap
+    * the closures are identical.
     * This puts the BFS semantics under the driver's hard rows+schema+hash
     * gate rather than only the self-refereed suite. */
   val impactClosure: Q = Q(
     "q27_impact_closure",
-    (s, dir) => {
-      val graph = Lineage.columnGraph(Lineage.edges(s, lineages(s, dir)))
-      Lineage.downstreamClosure(s, graph, "amount")
-    },
+    (s, dir) => Lineage.localDepthFrame(s, Lineage.driverBfsSeq(
+      QA.Kb.snapshot(s, dir).colPairs, Seq("amount"), includeSeeds = false, limit = 2000),
+      "column"),
     None,
     oracleDyn = Some(() => sys.props.get("graft.oracle.outdir")
       // only claim the oracle when THIS RUN's edge dump actually landed
@@ -591,8 +591,8 @@ object LineageQueries {
 
   /** q169: the q27 impact closure computed by Spark 4's native
     * `WITH RECURSIVE` — a second, independent implementation of the
-    * closure contract (the adaptive driver/distributed BFS in q27,
-    * recursive SQL here), both hash-gated to agree.
+    * closure contract (the driver BFS in q27, recursive SQL over the same
+    * snapshot column pairs here), both hash-gated to agree.
     * Spark's recursion is UNION ALL-only, so termination and boundedness
     * come from the depth guard plus a DISTINCT in the recursive arm: each
     * step emits ≤ |columns| rows regardless of path multiplicity (a cycle
@@ -602,8 +602,8 @@ object LineageQueries {
   val recursiveClosure: Q = Q(
     "q169_recursive_closure",
     (s, dir) => {
-      val graph = Lineage.columnGraph(Lineage.edges(s, lineages(s, dir)))
-      graph.select(col("src"), col("dst")).distinct()
+      import s.implicits._
+      QA.Kb.snapshot(s, dir).colPairs.toDF("src", "dst")
         .createOrReplaceTempView("graft_col_edges_q169")
       s.sql("""WITH RECURSIVE r AS (
           SELECT CAST('amount' AS STRING) AS name, 0 AS depth

@@ -42,8 +42,11 @@ object QA {
     /** The knowledge base derived from one extraction (`lineages`):
       *  - `edges` and `links`: [[Lineage.edges]] and the distinct
       *    (fromScript, toScript) pairs of [[Lineage.stitch]];
-      *  - `colPairs`: the column graph's distinct (src, dst) pairs, self-loops
-      *    dropped, as [[Lineage.columnGraph]] keeps them;
+      *  - `colPairs`: the global column graph (A18), the distinct
+      *    (srcCol, targetCol) pairs of `edges`, self-loops dropped. It is
+      *    name-level: same-named columns alias across scripts, as in the
+      *    reference (qa/ask.py:185-200, SURVEY §4.3.5). Every column closure
+      *    walks it with [[Lineage.driverBfsSeq]];
       *  - `scriptsByCol`: each column an edge names, as source or target, to
       *    the sorted scripts of those edges (the A21 seed sets); its keys are
       *    the known-column set;

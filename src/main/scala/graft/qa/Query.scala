@@ -59,7 +59,6 @@ object Query {
         impacted.take(60).foreach(x => parts += s"   - $x")
         if (impacted.size > 60) parts += s"   - ... (${impacted.size - 60} more)"
         parts += "  Direct (1-hop) edges with reasons:"
-        // the reason text of Lineage.columnGraph, per distinct target
         kb.edges.filter(e => e.srcCol == c && e.targetCol != c)
           .groupMap(_.targetCol)(e => s"${e.script}: ${e.srcDf}.${e.srcCol} -> " +
             s"${e.df}.${e.targetCol} (${e.reason})")

@@ -194,6 +194,33 @@ class BenchSpec extends AnyFunSuite {
     java.nio.file.Files.delete(f); java.nio.file.Files.delete(old)
   }
 
+  test("an off-scale run embeds no oracle reference, as pins are skipped off-scale") {
+    // oracle times are measured at ONE scale (`_meta.sf`); its last path
+    // component must be a path component of the run dir, or the lines
+    // carry no DuckDB total to misread as this run's ratio
+    val f = java.nio.file.Files.createTempFile("otimes_sf", ".json")
+    def write(meta: String) = java.nio.file.Files.write(f,
+      s"""{"q01_x": 0.031, "_total": 106.7, "_meta": $meta}""".getBytes)
+    def render(runDir: String) = {
+      val r = Bench.Report(Nil, runDir, oracle = Bench.oracleRefAt(f.toString, runDir))
+      (r.field("oracle_ref"), r.field("oracle_total"))
+    }
+    write("""{"duckdb_version": "v1.0.0", "sf": "/data/sf0.1"}""")
+    assert(render("/data/sf0.01") == ("{}", "null"))
+    val full = Bench.Report(Nil, "/data/sf0.01",
+      oracle = Bench.oracleRefAt(f.toString, "/data/sf0.01")).line(Bench.FullLine)
+    assert(full.contains(""""oracle_ref":{},"sf":"/data/sf0.01""""), full)
+    assert(render("/data/sf0.12") == ("{}", "null"))
+    val (ref, total) = render("/elsewhere/sf0.1/")
+    assert(ref.contains(""""total":106.7""") && ref.contains(""""sf":"/data/sf0.1""""), ref)
+    assert(total == "106.7")
+    // untagged meta, or no file at all: no reference at any scale
+    write("""{"duckdb_version": "v1.0.0"}""")
+    assert(render("/data/sf0.1") == ("{}", "null"))
+    java.nio.file.Files.delete(f)
+    assert(render("/data/sf0.1") == ("{}", "null"))
+  }
+
   test("loadPins parses a flat json map and tolerates a missing file") {
     val f = java.nio.file.Files.createTempFile("pins", ".json")
     java.nio.file.Files.write(f,

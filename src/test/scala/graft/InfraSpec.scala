@@ -63,45 +63,42 @@ class InfraSpec extends AnyFunSuite {
     }
   }
 
-  test("driver-BFS closure path is identical to the distributed loop, cap included") {
-    import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-    // both paths of Lineage.closure on one input: the small graph takes the
-    // driver path, the frontier-join loop is called directly
-    def bothPaths(edges: org.apache.spark.sql.DataFrame, seeds: Seq[String],
+  test("driver-BFS closure: min-depth, cap fill and (depth, key) frame order") {
+    // the closure's frame form (q27's) on one input: driverBfsSeq's pairs
+    // through localDepthFrame, which must hold them sorted by (depth, key)
+    def closure(edges: Seq[(String, String)], seeds: Seq[String],
         includeSeeds: Boolean, limit: Long, maxDepth: Int, key: String) = {
-      val pairs = edges.select(col("src"), col("dst")).distinct()
-      val viaDriver = rows(Lineage.closure(spark, pairs, seeds, includeSeeds,
-        limit, maxDepth, key))
-      val viaLoop = rows(Lineage.distributedClosure(spark, pairs, seeds,
-        includeSeeds, limit, maxDepth, key))
+      val frame = Lineage.localDepthFrame(spark,
+        Lineage.driverBfsSeq(edges, seeds, includeSeeds, limit, maxDepth), key)
       val what = s"seeds=$seeds includeSeeds=$includeSeeds limit=$limit"
-      assert(viaDriver === viaLoop, s"paths diverge: $what")
-      assert(viaDriver === viaDriver.sortBy { case (k, d) => (d, k) },
+      assert(frame.columns.toSeq === Seq(key, "depth"), what)
+      val rows = frame.collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(rows === rows.sortBy { case (k, d) => (d, k) },
         s"rows not sorted by (depth, $key): $what")
-      viaDriver
+      rows
     }
     // a diamond + chain + an overflowing level to exercise min-depth AND the
-    // complete-levels-then-alphabetical-fill cap on BOTH paths
-    val edges = ((0 until 6).map(i => (s"c$i", s"c${i + 1}")) ++
-      Seq(("c1", "c4"), ("c2", "b1"), ("c2", "b2"), ("c2", "b3"), ("c2", "a1")))
-      .toDF("src", "dst")
-    for (cap <- Seq(2000L, 6L)) {
-      val out = bothPaths(edges, Seq("c0"), includeSeeds = false, cap, 20, "column")
-      assert(out.size === math.min(cap - 1, 10L), s"cap=$cap: $out")
-    }
+    // complete-levels-then-alphabetical-fill cap
+    val edges = (0 until 6).map(i => (s"c$i", s"c${i + 1}")) ++
+      Seq(("c1", "c4"), ("c2", "b1"), ("c2", "b2"), ("c2", "b3"), ("c2", "a1"))
+    val uncapped = closure(edges, Seq("c0"), includeSeeds = false, 2000L, 20, "column")
+    assert(uncapped === Seq("c1" -> 1, "c2" -> 2, "c4" -> 2, "a1" -> 3, "b1" -> 3,
+      "b2" -> 3, "b3" -> 3, "c3" -> 3, "c5" -> 3, "c6" -> 4))
+    // cap 6 counts the seed: levels 1-2 complete, then level 3 filled
+    // alphabetically up to six nodes in all
+    val capped = closure(edges, Seq("c0"), includeSeeds = false, 6L, 20, "column")
+    assert(capped === Seq("c1" -> 1, "c2" -> 2, "c4" -> 2, "a1" -> 3, "b1" -> 3))
     // the script-closure shape (Ask's A21 walk): several seeds, one
     // reachable from another and one repeated, seeds kept at depth 0, no cap
-    val multi = bothPaths(edges, Seq("c3", "c1", "zz", "c1"), includeSeeds = true,
+    val multi = closure(edges, Seq("c3", "c1", "zz", "c1"), includeSeeds = true,
       Long.MaxValue, 20, "script")
     assert(multi === Seq("c1" -> 0, "c3" -> 0, "zz" -> 0, "c2" -> 1, "c4" -> 1,
       "a1" -> 2, "b1" -> 2, "b2" -> 2, "b3" -> 2, "c5" -> 2, "c6" -> 3))
     // a chain with a shortcut (c3 -> x1 -> c7): c7 and everything past it
     // take the shorter path's depth
-    val chain = ((0 until 10).map(i => (s"c$i", s"c${i + 1}")) ++
-      Seq(("c3", "x1"), ("x1", "c7"))).toDF("src", "dst")
-    val viaShortcut = bothPaths(chain, Seq("c0"), includeSeeds = false, 2000L, 30, "column")
+    val chain = (0 until 10).map(i => (s"c$i", s"c${i + 1}")) ++
+      Seq(("c3", "x1"), ("x1", "c7"))
+    val viaShortcut = closure(chain, Seq("c0"), includeSeeds = false, 2000L, 30, "column")
     assert(viaShortcut.toMap === Map("c1" -> 1, "c2" -> 2, "c3" -> 3, "c4" -> 4,
       "x1" -> 4, "c5" -> 5, "c7" -> 5, "c6" -> 6, "c8" -> 6, "c9" -> 7, "c10" -> 8))
   }
@@ -284,14 +281,15 @@ class InfraSpec extends AnyFunSuite {
   private def filesMatching(re: String): Seq[String] = sources.collect {
     case (f, text) if re.r.findFirstIn(text).isDefined => f }.sorted
 
-  test("source scan: no qa_* cache entry, no read.parquet in Repo, one edge bound") {
+  test("source scan: no qa_* cache entry, no read.parquet in Repo, one closure") {
     // the Q&A knowledge base is plain Scala over the extraction (QA.Kb), so
     // no consumer can install a qa_* frame; Repo reads through the Tables
-    // catalog; the driver-or-distributed edge threshold is decided in
-    // Lineage alone
+    // catalog; every closure is Lineage.driverBfsSeq over a driver edge
+    // list, with no frame graph or distributed fallback beside it
     assert(filesMatching("""PlanCache\.cached\([^"]*"qa_""") === Nil)
     assert(!sources.toMap.apply("pipelines/Repo.scala").contains("read.parquet"))
-    assert(filesMatching("DriverBfsMaxEdges") === Seq("lineage/Lineage.scala"))
+    assert(filesMatching("""distributedClosure|collectIfSmall|DriverBfsMaxEdges|""" +
+      """downstreamClosure|Lineage\.columnGraph""") === Nil)
   }
 
   test("source scan: trained models memoize in Fit, no fit table is cached") {

@@ -69,9 +69,8 @@ class LineageSpec extends AnyFunSuite {
   }
 
   test("column impact closure: bronze amount reaches mart avg_daily_spend") {
-    val graph = Lineage.columnGraph(edges)
-    val closure = Lineage.downstreamClosure(spark, graph, "amount")
-      .collect().map(_.getString(0)).toSet
+    val closure = Lineage.driverBfsSeq(QA.Kb.snapshot(spark, sfDir).colPairs,
+      Seq("amount"), includeSeeds = false, limit = 2000).map(_._1).toSet
     assert(closure.contains("rolling_7_sum"))
     assert(closure.contains("daily_spend"))
     assert(closure.contains("avg_daily_spend"))

@@ -115,22 +115,23 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("downstream closure respects its limit and excludes the seed") {
-    import spark.implicits._
-    val chain = (0 until 30).map(i => (s"c$i", s"c${i + 1}", "r")).toDF("src", "dst", "reason")
-    val limited = Lineage.downstreamClosure(spark, chain, "c0", limit = 10, maxDepth = 50)
-    assert(limited.count() <= 10)
-    assert(!limited.select("column").collect().map(_.getString(0)).contains("c0"))
-    val full = Lineage.downstreamClosure(spark, chain, "c0", limit = 2000, maxDepth = 50)
-    assert(full.count() === 30)
-    val depths = full.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val chain = (0 until 30).map(i => (s"c$i", s"c${i + 1}"))
+    val limited = Lineage.driverBfsSeq(chain, Seq("c0"), includeSeeds = false,
+      limit = 10, maxDepth = 50)
+    assert(limited.size <= 10)
+    assert(!limited.map(_._1).contains("c0"))
+    val full = Lineage.driverBfsSeq(chain, Seq("c0"), includeSeeds = false,
+      limit = 2000, maxDepth = 50)
+    assert(full.size === 30)
+    val depths = full.toMap
     (1 until 30).foreach(i => assert(depths(s"c$i") === i))
   }
 
   test("closure is cycle-safe") {
-    import spark.implicits._
-    val cyc = Seq(("a", "b", "r"), ("b", "c", "r"), ("c", "a", "r")).toDF("src", "dst", "reason")
-    val cl = Lineage.downstreamClosure(spark, cyc, "a", limit = 100, maxDepth = 50)
-    assert(cl.count() === 2) // b, c — and terminates
+    val cyc = Seq(("a", "b"), ("b", "c"), ("c", "a"))
+    val cl = Lineage.driverBfsSeq(cyc, Seq("a"), includeSeeds = false,
+      limit = 100, maxDepth = 50)
+    assert(cl.size === 2) // b, c — and terminates
   }
 
   test("candidate extraction never exceeds max and prefers known backticks") {

@@ -26,8 +26,8 @@ Exclusions (incomparable by construction):
     Spark computed — different work.
 
 Usage: python3 tools/ratio_audit.py <bench_json> <oracle_times_json>
-  <bench_json>: a file containing graft.Bench's JSON line (or any flat
-  {"name": sec} map, e.g. bench_pins.json).
+  <bench_json>: a capture of graft.Bench's stdout (the line carrying
+  "queries" is read) or any flat {"name": sec} map, e.g. bench_pins.json.
 Exit 1 if any non-excluded query breaches the gate.
 """
 import json
@@ -48,7 +48,18 @@ DUMP_DERIVED = {
 
 
 def load_bench(path):
+    """The per-query map of a Bench capture: the JSON line that carries
+    `queries` (Bench prints three lines; only the full one has it), else the
+    file as one JSON value from its first `{` (bench_pins.json)."""
     txt = open(path).read()
+    for line in txt.splitlines():
+        if '"queries"' in line and "{" in line:
+            try:
+                j = json.loads(line[line.index("{"):])
+            except json.JSONDecodeError:
+                continue
+            if isinstance(j, dict) and "queries" in j:
+                return j["queries"]
     j = json.loads(txt[txt.index("{"):])
     return j.get("queries", j)
 
