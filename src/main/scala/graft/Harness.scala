@@ -4,19 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The session and the query selection every graft main starts from. */
 object Harness {
-  /** `local[cores]` with `partitions` shuffle partitions (0 = one per core),
-    * UTC session time, no UI, WARN logs (Verify's run log relies on
-    * Spark's warnings) and [[LocalAggregate]] installed. `cores` defaults
-    * to SPARK_GRAFT_CPUS, else to every core of the host; `extra` adds a
-    * main's own confs. */
+  /** `local[cores]` with one shuffle partition per core, UTC session time,
+    * no UI, WARN logs (Verify's run log relies on Spark's warnings) and
+    * [[LocalAggregate]] installed. `cores` defaults to SPARK_GRAFT_CPUS,
+    * else to every core of the host. */
   def session(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors),
-      partitions: Int = 0, extra: Map[String, String] = Map.empty): SparkSession = {
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
     val spark = SparkSession.builder().master(s"local[$cores]").appName("graft")
-      .config("spark.sql.shuffle.partitions", if (partitions > 0) partitions else cores)
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(extra).getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LocalAggregate.install(spark)
     spark

@@ -211,8 +211,7 @@ object PlanGateAudit {
         val df = fn(spark, sfDir)
         df.count() // finalize AQE
         val all = PlanGates.violations(df)
-        val v = all.filterNot(x => x.startsWith("FactBroadcastHint") &&
-          PlanGates.broadcastHintExceptions.contains(name))
+        val v = PlanGates.enforcedViolations(name, df)
         if (all.size != v.size) { excepted += 1
           println(s"excepted $name: ${PlanGates.broadcastHintExceptions(name)}")
         }

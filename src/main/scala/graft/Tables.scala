@@ -24,10 +24,9 @@ object Tables {
     * execution still scans the parquet files.
     *
     * Staleness: keyed by the same file-metadata fingerprint (size + mtime
-    * walk) PlanCache uses, so a regenerated file under the same path (the
-    * FpStress/PairSweep staged corpora) misses and re-reads. Entries of
-    * stopped sessions are dropped on each miss so long-lived JVMs stay
-    * bounded by live sessions × tables. */
+    * walk) PlanCache uses, so a regenerated file under the same path
+    * misses and re-reads. Entries of stopped sessions are dropped on each
+    * miss so long-lived JVMs stay bounded by live sessions × tables. */
   private val relCache = new scala.collection.concurrent.TrieMap[
     (SparkSession, String), (Long, DataFrame)]()
 
@@ -76,7 +75,7 @@ object Tables {
     * yields rather than pinning either layout, and fail loudly on anything
     * else — a silent misread here corrupts every event-time query downstream
     * (the exact failure mode of schema drift on a 100 TB lake). All events
-    * reads (batch, Repo DAG stages, FpStress corpora) must route through
+    * reads (batch, Repo DAG stages, staged copies) must route through
     * here or [[eventsAt]]; streaming readers probe the same contract via
     * [[graft.streaming.StreamingSessions]]. */
   def events(spark: SparkSession, dir: String): DataFrame =

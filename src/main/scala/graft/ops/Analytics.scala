@@ -512,6 +512,15 @@ object Analytics {
     Some(q99Sql))
 
   private val medianBuckets = 1024
+  /** The largest crossing slice q95 collects for its exact driver walk. */
+  val DriverSliceRows = 200000L
+
+  /** q95's input over `dir`'s lineitem: weights are exact integer
+    * centi-quantities. */
+  private[graft] def weightedMedianInput(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir).select(col("l_returnflag"), col("l_extendedprice"),
+      col("l_orderkey"), col("l_linenumber"),
+      expr("CAST(round(l_quantity * 100) AS BIGINT)").as("w100"))
 
   /** The q95 distributed exact weighted median over any frame with columns
     * (l_returnflag, l_extendedprice, l_orderkey, l_linenumber, w100) —
@@ -553,10 +562,12 @@ object Analytics {
     * crossing, accumulated as `rows_after` at each phase.
     *
     * Phases 3-5 only run when phase 1 MEASURES the crossing slice as too
-    * large to collect (> `graft.q95.driverSliceRows`, default 200k): below
-    * that, one collect + an exact driver walk replaces them — see the
-    * adaptive-short-circuit note in the body. */
-  private[graft] def weightedMedianOf(t0: DataFrame): DataFrame = {
+    * large to collect (> `sliceCap` rows, default [[DriverSliceRows]]):
+    * below that, one collect + an exact driver walk replaces them — see the
+    * adaptive-short-circuit note in the body. `sliceCap = 0` forces the
+    * distributed phases. */
+  private[graft] def weightedMedianOf(t0: DataFrame,
+      sliceCap: Long = DriverSliceRows): DataFrame = {
     val spark = t0.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -580,8 +591,8 @@ object Analytics {
     // ADAPTIVE short-circuit (the q27 driver-BFS pattern, but with an exact
     // bound instead of a heuristic): the phase-1 aggregate reports the
     // crossing bucket's EXACT row count per group before any slice work
-    // happens. When the total is driver-safe (<= graft.q95.driverSliceRows,
-    // default 200k -- tens of MB), phases 3-5 collapse into ONE collect of
+    // happens. When the total is driver-safe (<= sliceCap, default
+    // DriverSliceRows -- tens of MB), phases 3-5 collapse into ONE collect of
     // the slice plus an exact integer walk on the driver: 3 scheduled jobs
     // instead of 5, no barrier at all. Realistic value distributions put
     // ~1/1024 of each group in the crossing bucket, so at 100 TB the count
@@ -636,7 +647,6 @@ object Analytics {
         StructField("weighted_median", valueType),
         StructField("rows_at_or_above", LongType)))
       val sliceRows = walked.map(_._2).sum
-      val sliceCap = spark.conf.get("graft.q95.driverSliceRows", "200000").toLong
       if (sliceRows <= sliceCap) {
         // ---- adaptive driver path: one slice collect + exact walk ---------
         // the crossing slice is measured driver-safe; its sorted walk is the
@@ -783,10 +793,7 @@ object Analytics {
     * the multi-phase plan is exact. */
   val weightedMedian: Q = Q(
     "q95_weighted_median",
-    (s, dir) => weightedMedianOf(Tables.lineitem(s, dir)
-      .select(col("l_returnflag"), col("l_extendedprice"),
-        col("l_orderkey"), col("l_linenumber"),
-        expr("CAST(round(l_quantity * 100) AS BIGINT)").as("w100"))),
+    (s, dir) => weightedMedianOf(weightedMedianInput(s, dir)),
     Some("""WITH t AS (
         SELECT l_returnflag, l_extendedprice, l_orderkey, l_linenumber,
                CAST(round(l_quantity * 100) AS BIGINT) AS w100

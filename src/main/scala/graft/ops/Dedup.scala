@@ -2799,13 +2799,7 @@ object Dedup {
       // size (measured r15: 58M → 1.76B → 5.79B intermediate rows at
       // 1×/30×/100× sf0.1 — 30.3× and 99.7×, exactly the data ratio) but
       // large in absolute bytes; at production scale this is the stage you
-      // provision shuffle for. On a disk-bounded host the pair scoring is
-      // embarrassingly parallel ACROSS pairs, so `graft.q259.verifySlices`
-      // = K (harness knob, default 1 = this exact plan) partitions the
-      // candidate set by pair hash and verifies one slice at a time — peak
-      // shuffle footprint mass/K, output the union, row-identical by pair
-      // independence. That is how the ~sf10 deep rung (which overran an
-      // 80 GB local disk in one pass, BENCH_NOTES r14) gets MEASURED.
+      // provision shuffle for.
       // The verify intermediate (Σ_pairs terms(doc_a) rows — 58M at sf0.1)
       // dominates this query when it has to CROSS A SHUFFLE to meet the
       // doc_b posting leg: Catalyst's size estimate for the aggregated
@@ -2818,10 +2812,9 @@ object Dedup {
       // two broadcast hash joins and collapse map-side in the pair
       // aggregate: the only corpus-scale shuffle left below the cap is the
       // ≤|cand| pair rows into the final groupBy. Guide §3.1/§2.4.
-      // keySide is applied ONCE per input frame at the call sites below
-      // (ADVICE r18): the hint rides the frame per the keySide contract, so
-      // the sliced path no longer pays the limit-bounded counted probe 2K
-      // times over the same localCheckpointed wtdM/normsM
+      // keySide is applied ONCE per input frame at the call site below: the
+      // hint rides the frame per the keySide contract, so both posting legs
+      // share one limit-bounded counted probe
       def verifySlice(candSlice: DataFrame, wtdIn: DataFrame,
           normsIn: DataFrame): DataFrame = {
         val dots = candSlice
@@ -2850,33 +2843,7 @@ object Dedup {
           .withColumn("cos", col("dot").cast("double") /
             sqrt(col("na").cast("double") * col("nb").cast("double")))
       }
-      val slices = s.conf.getOption("graft.q259.verifySlices").map(_.toInt).getOrElse(1)
-      if (slices <= 1) verifySlice(cand, SizeGuard.keySide(wtd), SizeGuard.keySide(norms))
-      else {
-        // Disk-bounded mode (PairSweep deep rungs only): materialize the
-        // shared inputs once (eager localCheckpoint — candidate ids, the
-        // posting table and norms are all far smaller than one slice's
-        // verify intermediate), then verify slice-by-slice, checkpointing
-        // each slice's TINY output (pairs over τ) so its multi-GB shuffle
-        // files become unreferenced and the ContextCleaner can delete them
-        // before the next slice writes its own. Dropping unreferenced
-        // shuffles needs a full GC within the slice turnaround; the
-        // harness that enables slicing owns that contract via
-        // spark.cleaner.periodicGC.interval (PairSweep deep mode sets
-        // 30s — VERDICT r15 #5: the documented session knob, not an
-        // in-loop System.gc() a refactor could silently drop). The
-        // blocks leak until that GC — acceptable for a one-shot harness
-        // run, never the suite path.
-        val candM = cand.localCheckpoint(true)
-        val wtdM = SizeGuard.keySide(wtd.localCheckpoint(true))
-        val normsM = SizeGuard.keySide(norms.localCheckpoint(true))
-        val parts = (0 until slices).map { i =>
-          verifySlice(
-            candM.filter(pmod(xxhash64(col("doc_a"), col("doc_b")), lit(slices)) === i),
-            wtdM, normsM).localCheckpoint(true)
-        }
-        parts.reduce(_ union _)
-      }
+      verifySlice(cand, SizeGuard.keySide(wtd), SizeGuard.keySide(norms))
     },
     Some(s"""WITH tok AS (
         SELECT doc_id, w, CAST(count(1) AS BIGINT) AS tf FROM (

@@ -178,7 +178,7 @@ object Multimodal {
     * candidate generation — the q238 `winnowDfCap` idiom applied to the one
     * pair miner that had no bound. Measured maxima: 390 docs/bucket at
     * sf0.1, 3 945 at the ~sf1 twin-stress corpus — the default sits above
-    * both, so every published hash and the PairSweep growth numbers are
+    * both, so every published hash and the recorded pair-growth numbers are
     * unchanged; what changes is the WORST CASE: a pathological near-uniform
     * media corpus (every frame the same letterbox) now yields ≤ cap²/2
     * candidate pairs per bucket × 9·128 buckets, independent of corpus

@@ -99,19 +99,14 @@ object Similarity {
     val rnd = new scala.util.Random(42)
     Seq.fill(nBands * bandBits)(Seq.fill(64)(rnd.nextGaussian()))
   }
-  /** Probe masks for a Hamming budget: every bandBits-wide mask with
-    * popcount ≤ h, ordered (popcount, value). The production SET (h=2:
-    * 1 + 8 + 28 = 37 probes) equals the original explicit (j,k)-loop
-    * enumeration — the ordering differs for two-bit masks, which is
-    * immaterial: the probes feed a dropDuplicates'd candidate join, so only
-    * set membership matters. The budget is the recall/scan-cost dial
-    * measured by [[graft.AnnSweep]] (table in BENCH_NOTES). */
-  private[graft] def probeMasksFor(h: Int): Seq[Long] =
-    (0 until (1 << bandBits)).map(_.toLong)
-      .filter(m => java.lang.Long.bitCount(m) <= h)
-      .sortBy(m => (java.lang.Long.bitCount(m), m))
-  /** Exact band key + every Hamming-≤2 variant: 1 + 8 + 28 = 37 probes. */
-  private val probeMasks: Seq[Long] = probeMasksFor(2)
+  /** Exact band key + every Hamming-≤2 variant: every bandBits-wide mask
+    * with popcount ≤ 2, 1 + 8 + 28 = 37 probes, ordered (popcount, value).
+    * The probes feed a dropDuplicates'd candidate join, so only set
+    * membership matters. The Hamming budget is the recall/scan-cost dial
+    * (BENCH_NOTES' ANN recall-vs-cost table). */
+  private val probeMasks: Seq[Long] = (0 until (1 << bandBits)).map(_.toLong)
+    .filter(m => java.lang.Long.bitCount(m) <= 2)
+    .sortBy(m => (java.lang.Long.bitCount(m), m))
 
   /** (vec_id, v, norm, band_idx, band_key) rows for any (vec_id, v, norm)
     * frame: all 8 band keys in one fused codegen'd loop (VecBandKeys) — the
@@ -125,17 +120,17 @@ object Similarity {
         posexplode(expr(s"vec_band_keys(v, planes, $bandBits)"))
           .as(Seq("band_idx", "band_key")))
 
-  /** Probe-join a banded QUERY frame against the banded corpus at Hamming
-    * budget `h` and score candidates exactly. The broadcast side is always
+  /** Probe-join a banded QUERY frame against the banded corpus through
+    * [[probeMasks]] and score candidates exactly. The broadcast side is always
     * the query frame — the serving invariant that holds from q19's batch 2%
     * sample to q260's streaming micro-batches: the corpus index never moves,
     * only the (tiny) query side fans out ×|probes|. */
-  private def lshProbeJoin(corpus: DataFrame, qBand: DataFrame, h: Int): DataFrame = {
+  private def lshProbeJoin(corpus: DataFrame, qBand: DataFrame): DataFrame = {
     // query side probe budget is the recall/scan-cost dial: these synthetic
     // embeddings are near-random (5th-neighbor cos ≈ 0.3 → per-bit
     // collision ≈ 0.6) so they need the full H≤2 budget; clustered
     // production embeddings reach the same recall at H≤1
-    val probeKeys = expr(probeMasksFor(h).map(m => s"band_key ^ $m")
+    val probeKeys = expr(probeMasks.map(m => s"band_key ^ $m")
       .mkString("array(", ", ", ")"))
     val q = qBand
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qn"),
@@ -161,17 +156,6 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
   }
 
-  /** Candidate set of the q19 LSH plan at Hamming budget `h` — exposed
-    * separately so [[graft.AnnSweep]] can measure candidate volume per
-    * budget; `lshTopK(s, dir, 2)` IS q19's production plan. */
-  private[graft] def lshCandidates(s: SparkSession, dir: String, h: Int): DataFrame = {
-    val bandRows = bandRowsOf(withNorm(s, dir))
-    lshProbeJoin(bandRows, bandRows.filter(col("vec_id") % queryMod === 0), h)
-  }
-
-  private[graft] def lshTopK(s: SparkSession, dir: String, h: Int): DataFrame =
-    rankTop5(lshCandidates(s, dir, h))
-
   /** q260's per-micro-batch ANN serving plan: the arriving query batch
     * (raw embeddings schema) is banded, multi-probed, and exact-re-ranked
     * against the STATIC corpus band index — exactly q19's physical plan
@@ -185,12 +169,12 @@ object Similarity {
     * arrives in, so the accumulated append output is batch-order-independent
     * and equals the q19 batch result over the same query set. */
   private[graft] def lshServeBatch(s: SparkSession, dir: String,
-      queryBatch: DataFrame, h: Int = 2): DataFrame = {
+      queryBatch: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val qn = queryBatch.select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
       .withColumn("norm", expr("sqrt(vec_dot(v, v))"))
-    rankTop5(lshProbeJoin(bandRowsOf(withNorm(s, dir)), bandRowsOf(qn), h))
+    rankTop5(lshProbeJoin(bandRowsOf(withNorm(s, dir)), bandRowsOf(qn)))
   }
 
   /** Random-hyperplane (SimHash-for-vectors) LSH top-k: 64 deterministic
@@ -207,7 +191,10 @@ object Similarity {
     * bit-exact vs vec_dot), identical probe sets, and the q18-style re-rank. */
   val knnLsh: Q = Q(
     "q19_knn_lsh",
-    (s, dir) => lshTopK(s, dir, 2),
+    (s, dir) => {
+      val bandRows = bandRowsOf(withNorm(s, dir))
+      rankTop5(lshProbeJoin(bandRows, bandRows.filter(col("vec_id") % queryMod === 0)))
+    },
     Some {
       // plane rows: (band_idx, bit_idx, plane); bit j of band i is plane 8i+j,
       // weighted 2^(7-j) — the same most-significant-first fold as the Spark
@@ -337,17 +324,22 @@ object Similarity {
       )"""
   }
 
-  /** The q34 plan at an arbitrary probe count — `ivfTopK(s, dir,
-    * IvfIndex.nProbes)` IS q34's production plan; [[graft.AnnSweep]] sweeps
-    * the probe budget for the BENCH_NOTES recall/cost table. */
-  private[graft] def ivfTopK(s: SparkSession, dir: String, nProbes: Int): DataFrame = {
+  /** IVF-style ANN: load-cached KMeans coarse quantizer (16 cells), queries
+    * probe their `nProbes` (4) nearest centroids, exact cosine re-rank inside
+    * the probed cells. The 100 TB shape: the corpus is partitioned by cell, a
+    * query touches nProbes/16ths of it instead of all of it; the quantizer is
+    * trained once offline (IvfIndex), not refit per query; recall vs q18
+    * asserted in tests. */
+  val knnIvf: Q = Q(
+    "q34_knn_ivf",
+    (s, dir) => {
       val e = assignedCells(s, dir)
       val assigned = e.select(col("vec_id"), col("v"), col("norm"), col("cell"))
       val q = e.filter(col("vec_id") % queryMod === 0)
         .withColumn("probe_cell", explode(expr(
           s"""transform(
             slice(array_sort(zip_with(cdists, sequence(0, ${IvfIndex.nCells - 1}),
-              (d, i) -> struct(d AS d, i AS i))), 1, $nProbes),
+              (d, i) -> struct(d AS d, i AS i))), 1, ${IvfIndex.nProbes}),
             p -> CAST(p.i AS BIGINT))""")))
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qn"),
           col("probe_cell").as("cell"))
@@ -358,17 +350,7 @@ object Similarity {
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cos"))
-  }
-
-  /** IVF-style ANN: load-cached KMeans coarse quantizer (16 cells), queries
-    * probe their `nProbes` (4) nearest centroids, exact cosine re-rank inside
-    * the probed cells. The 100 TB shape: the corpus is partitioned by cell, a
-    * query touches nProbes/16ths of it instead of all of it; the quantizer is
-    * trained once offline (IvfIndex), not refit per query; recall vs q18
-    * asserted in tests. */
-  val knnIvf: Q = Q(
-    "q34_knn_ivf",
-    (s, dir) => ivfTopK(s, dir, IvfIndex.nProbes),
+    },
     None,
     Some(() => ivfOracle))
 
@@ -866,7 +848,7 @@ object Similarity {
     * bytes-ish per vector, broadcast LUT, no raw-vector I/O); raw vectors
     * are touched for exactly shortlist×queries rows. Stage costs are
     * independently tunable (nProbes, shortlist depth) — the recall/cost
-    * dials AnnSweep measures for the IVF stage. */
+    * dials of the IVF stage. */
   val ivfPqTopK: Q = Q(
     "q157_ivfpq_topk",
     (s, dir) => {
@@ -1059,9 +1041,10 @@ object Similarity {
     * the eval family: q144 grades the dedup LSH, q159 grades dimension
     * truncation, this grades the ANN index itself; the per-query rows
     * (not just a mean) are what localize WHICH queries the probe budget
-    * fails, the input to tuning the q19 Hamming dial (AnnSweep's table in
-    * BENCH_NOTES). Queries whose LSH candidate set came up empty stay in
-    * the report with recall 0 — dropping them would inflate the grade.
+    * fails, the input to tuning the q19 Hamming dial (BENCH_NOTES' ANN
+    * recall-vs-cost table). Queries whose LSH candidate set came up empty
+    * stay in the report with recall 0 — dropping them would inflate the
+    * grade.
     *
     * Distributed shape: both sides are existing top-5 frames; the grade is
     * one (q_id, neighbor)-keyed join plus per-q_id counts — cost is
@@ -1962,7 +1945,7 @@ object Similarity {
     * q274's spread and q275's coverage. All arithmetic is scaled-integer
     * (the q131 idiom): quantize once, then every distance, comparison and
     * centroid division is exact BIGINT algebra — bit-identical
-    * cross-engine and across parallelism geometries (FpStress member).
+    * cross-engine and across parallelism geometries (GeometrySpec member).
     * Output: the final centroid table in long form (cluster_id, d,
     * centroid_q, size_n) — [[kmK]]·64 rows. */
   val kmeansCentroids: Q = Q(

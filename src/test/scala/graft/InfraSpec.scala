@@ -267,6 +267,13 @@ class InfraSpec extends AnyFunSuite {
         if (n > 0) Some(p.getFileName.toString -> n) else None
       }
     assert(builders === Seq("Harness.scala" -> 1), builders.toString)
+    // the seven mains; the hand-run sweep and stress harnesses and the
+    // session options only they set are gone (GeometrySpec checks the
+    // cross-geometry hashes in tier-1)
+    assert(filesMatching("""def main\(""") === Seq("Bench.scala", "Explain.scala",
+      "PlanGates.scala", "PlanProfile.scala", "Verify.scala",
+      "extract/LineageDump.scala", "qa/Ask.scala"))
+    assert(filesMatching("verifySlices|driverSliceRows|FpStress|PairSweep|AnnSweep") === Nil)
   }
 
   /** (path under src/main/scala/graft, text) of every main source. */

@@ -487,13 +487,11 @@ class OpsSpec extends AnyFunSuite {
     // cap 0 forces the distributed phases (the slice here is driver-sized,
     // so the default would take the adaptive driver path); running BOTH pins
     // path parity on exactly the skew the distributed plan exists for
-    def run(): Map[String, (Double, Long)] =
-      graft.ops.Analytics.weightedMedianOf(df).collect()
+    def run(sliceCap: Long): Map[String, (Double, Long)] =
+      graft.ops.Analytics.weightedMedianOf(df, sliceCap).collect()
         .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    val gotDistributed =
-      try { spark.conf.set("graft.q95.driverSliceRows", "0"); run() }
-      finally spark.conf.unset("graft.q95.driverSliceRows")
-    val gotDriver = run()
+    val gotDistributed = run(sliceCap = 0)
+    val gotDriver = run(graft.ops.Analytics.DriverSliceRows)
     val expected = data.groupBy(_._1).map { case (flag, items) =>
       val sorted = items.sortBy(t => (t._2, t._3, t._4))
       val total = sorted.map(_._5).sum

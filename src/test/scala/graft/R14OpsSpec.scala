@@ -132,27 +132,6 @@ class R14OpsSpec extends AnyFunSuite {
       "is_dup truth must be exactly q14's pair set")
   }
 
-  test("deep docs corpus: distinct per-copy permutations, lengths preserved") {
-    import org.apache.spark.sql.functions.{col, length => strlen}
-    val dir = FpStress.docsCorpus(spark, 3)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val n0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").count()
-    assert(docs.count() === 3 * n0)
-    // copies carry the SAME doc lengths (translate is length-preserving:
-    // n_chars stays truthful) but pairwise DISTINCT text per copy
-    val byCopy = docs.groupBy((col("doc_id") / 100000000L).cast("long").as("copy"))
-      .agg(org.apache.spark.sql.functions.sum(strlen(col("text"))).as("chars"),
-        org.apache.spark.sql.functions.countDistinct(col("text")).as("texts"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(byCopy.map(_._1).toSeq === Seq(0L, 1L, 2L))
-    assert(byCopy.map(_._2).distinct.length === 1, "translate changed lengths")
-    // cross-copy: the same source doc must differ between copies
-    val same = docs.filter(col("doc_id") % 100000000L === 7L)
-      .select("text").collect().map(_.getString(0))
-    assert(same.length === 3 && same.distinct.length === 3,
-      "copies must carry distinct permutations")
-  }
-
   test("q266 stratified sample: per-source size/threshold laws, consistent with q261") {
     val rows = SparkEntry.queries("q266_stratified_priority_sample")(spark, sfDir)
       .collect()

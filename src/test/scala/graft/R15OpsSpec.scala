@@ -58,19 +58,6 @@ class R15OpsSpec extends AnyFunSuite {
     assert(hubRow.getAs[Boolean]("capped"))
   }
 
-  test("q259 sliced verify is row-identical to the one-pass plan") {
-    val base = SparkEntry.queries("q259_tfidf_cosine")(spark, sfDir)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    spark.conf.set("graft.q259.verifySlices", "4")
-    try {
-      val sliced = SparkEntry.queries("q259_tfidf_cosine")(spark, sfDir)
-        .collect().map(_.toSeq).sortBy(_.toString)
-      assert(sliced.length === base.length)
-      assert(sliced.toSeq === base.toSeq,
-        "pair-hash slicing changed the verified pair set")
-    } finally spark.conf.unset("graft.q259.verifySlices")
-  }
-
   test("q267 LM filter separates fluent text from planted gibberish") {
     import spark.implicits._
     // fluent docs: the same sentence shape in both folds, so each fold's LM

@@ -28,7 +28,9 @@ Exclusions (incomparable by construction):
 Usage: python3 tools/ratio_audit.py <bench_json> <oracle_times_json>
   <bench_json>: a capture of graft.Bench's stdout (the line carrying
   "queries" is read) or any flat {"name": sec} map, e.g. bench_pins.json.
-Exit 1 if any non-excluded query breaches the gate.
+Exit 1 if any non-excluded query breaches the gate. Exit 2, printing no
+table, when the capture's "sf" is off the oracle times' scale (Bench's rule:
+the last path component of "_meta.sf" must be a path component of "sf").
 """
 import json
 import sys
@@ -48,9 +50,10 @@ DUMP_DERIVED = {
 
 
 def load_bench(path):
-    """The per-query map of a Bench capture: the JSON line that carries
-    `queries` (Bench prints three lines; only the full one has it), else the
-    file as one JSON value from its first `{` (bench_pins.json)."""
+    """(per-query map, run dir) of a Bench capture: the JSON line that
+    carries `queries` (Bench prints three lines; only the full one has it),
+    else the file as one JSON value from its first `{` (bench_pins.json).
+    The run dir is that value's `sf`, None when it has none."""
     txt = open(path).read()
     for line in txt.splitlines():
         if '"queries"' in line and "{" in line:
@@ -59,14 +62,31 @@ def load_bench(path):
             except json.JSONDecodeError:
                 continue
             if isinstance(j, dict) and "queries" in j:
-                return j["queries"]
+                return j["queries"], j.get("sf")
     j = json.loads(txt[txt.index("{"):])
-    return j.get("queries", j)
+    return j.get("queries", j), j.get("sf")
+
+
+def off_scale(sf, duck):
+    """Why the oracle times do not belong to run dir `sf`, by Bench's rule
+    (`Bench.oracleRefAt`); None when they do or the capture names no dir."""
+    if sf is None:
+        return None
+    tag = [p for p in str((duck.get("_meta") or {}).get("sf") or "").split("/") if p]
+    if not tag:
+        return f'oracle times carry no "_meta.sf" tag; capture sf is {sf!r}'
+    if tag[-1] not in str(sf).split("/"):
+        return f"oracle times measured at {tag[-1]!r} but capture sf is {sf!r}"
+    return None
 
 
 def main(bench_path, oracle_path):
-    spark = load_bench(bench_path)
+    spark, sf = load_bench(bench_path)
     duck = json.load(open(oracle_path))
+    why = off_scale(sf, duck)
+    if why:
+        print(f"ratio_audit: REFUSED: {why}", file=sys.stderr)
+        return 2
     rows = []
     breaches = []
     for name in sorted(set(spark) & set(duck)):
