@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,7 +22,9 @@ import graft.model._
   * that edges, stitching, the column graph and the Q&A knowledge base
   * ([[graft.qa.QA.Kb]]) derive from. Every stage reads through
   * [[graft.Tables]], so a warm extraction only analyzes plans: it runs no
-  * Spark job.
+  * Spark job. That analysis is driver time, per stage and independent
+  * across stages (only stitching relates them), so `lineage` extracts the
+  * stages in parallel, on a pool each call creates and shuts down.
   */
 object Repo {
 
@@ -300,27 +303,36 @@ object Repo {
   }
 
   /** Plan-based lineage for every stage (materializes first so upstream
-    * schemas exist), with the stage's declared write recorded as a write
-    * asset using its logical path. */
+    * schemas exist), in [[stages]] order, extracted on a fixed pool of one
+    * thread per core, at most one per stage. The calling thread creates the
+    * pool, so its threads inherit the caller's Spark local properties (the
+    * job group that jobs are attributed by) and active session; a shared or
+    * global pool's threads would carry neither. */
   def lineage(spark: SparkSession, sfDir: String): Seq[ScriptLineage] = {
     val dir = materialize(spark, sfDir)
-    val r = reader(spark, sfDir, dir) _
-    stages.map { st =>
-      val df = st.build(spark, r)
-      val base = PlanLineage.extract(st.script, df, st.sqlBlocks)
-      // normalize physical read paths back to logical asset names
-      val reads = base.assets.map { a =>
-        val logical = a.path
-          .replaceAll("^file:", "")
-          .replaceAll(s"^${java.util.regex.Pattern.quote(dir)}/", "")
-          .replaceAll(s"^${java.util.regex.Pattern.quote(sfDir)}/", "raw/")
-          .replaceAll("\\.parquet$", "")
-        a.copy(path = logical)
-      }
-      val sinkDf = base.dfs.find(_.kind == "sink").map(_.name).getOrElse("sink")
-      val write = AssetRef(st.script, "parquet", st.writeAsset, sinkDf, "write")
-      base.copy(assets = reads :+ write)
+    val pool = Executors.newFixedThreadPool(
+      math.min(stages.size, Runtime.getRuntime.availableProcessors))
+    try stages.map(st => pool.submit(new Callable[ScriptLineage] {
+        def call() = stageLineage(spark, sfDir, dir, st)
+      })).map(_.get)
+    catch { case e: ExecutionException => throw e.getCause }
+    finally pool.shutdown()
+  }
+
+  /** One stage's lineage over the repo materialized at `dir`: its plan's
+    * column lineage, with physical read paths normalized back to logical
+    * asset names and the stage's declared write recorded as a write asset. */
+  private[graft] def stageLineage(spark: SparkSession, sfDir: String, dir: String,
+      st: Stage): ScriptLineage = {
+    val base = PlanLineage.extract(st.script, st.build(spark, reader(spark, sfDir, dir)), st.sqlBlocks)
+    val reads = base.assets.map { a =>
+      val p = a.path.stripPrefix("file:").stripPrefix(s"$dir/")
+      val logical = if (p.startsWith(s"$sfDir/")) "raw/" + p.stripPrefix(s"$sfDir/") else p
+      a.copy(path = logical.stripSuffix(".parquet"))
     }
+    val sinkDf = base.dfs.find(_.kind == "sink").map(_.name).getOrElse("sink")
+    val write = AssetRef(st.script, "parquet", st.writeAsset, sinkDf, "write")
+    base.copy(assets = reads :+ write)
   }
 
   private val lineageCache =

@@ -318,6 +318,14 @@ class InfraSpec extends AnyFunSuite {
     assert(filesMatching("""PlanCache\.cached\([^"]*"q93_ut""") === Nil)
   }
 
+  test("source scan: no shared or global pool; Repo alone makes a thread pool") {
+    // a pooled thread of unknown origin carries neither the caller's job
+    // group nor its active session; Repo.lineage's per-call pool is created
+    // by the calling thread, so its threads inherit both
+    assert(filesMatching("""ExecutionContext\.global|\.par\b|parallelStream""") === Nil)
+    assert(filesMatching("newFixedThreadPool") === Seq("pipelines/Repo.scala"))
+  }
+
   test("materializeCtes hints non-recursive CTEs and skips self-referencing ones") {
     val sql = """WITH RECURSIVE base AS (
         SELECT 1 AS x FROM t

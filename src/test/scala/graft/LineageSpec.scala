@@ -188,6 +188,45 @@ class LineageSpec extends AnyFunSuite {
     assert(after === before)
   }
 
+  /** [[Repo.stageLineage]] applied stage by stage on the calling thread:
+    * what the stage-parallel [[Repo.lineage]] must reproduce. */
+  private lazy val serialLineage = {
+    val dir = Repo.materialize(spark, sfDir)
+    Repo.stages.map(Repo.stageLineage(spark, sfDir, dir, _))
+  }
+
+  test("stage-parallel Repo.lineage equals the serial per-stage extraction, in stage order") {
+    val parallel = Repo.lineage(spark, sfDir)
+    assert(parallel.map(_.script) === Repo.stages.map(_.script))
+    assert(parallel.map(graft.extract.ReferenceJson.render)
+      === serialLineage.map(graft.extract.ReferenceJson.render))
+    assert(parallel === serialLineage)
+  }
+
+  test("a cold Repo.lineage's jobs on the pool count in the caller's job group") {
+    // a new session has a cold Tables memo, so its reads infer schemas; the
+    // caller thread only materializes (a fresh marker, no job), so every
+    // counted job ran on a pool thread that inherited the caller's group
+    val warm = Repo.lineage(spark, sfDir)
+    val (cold, jobs) = jobsFiredBy(Repo.lineage(spark.newSession(), sfDir))
+    assert(jobs > 0)
+    assert(cold === warm)
+  }
+
+  test("two concurrent Repo.lineage callers on the shared session agree with the serial result") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val expected = serialLineage
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val start = new CountDownLatch(1)
+      val fs = (1 to 2).map(_ => pool.submit(new Callable[Seq[graft.model.ScriptLineage]] {
+        def call() = { start.await(); Repo.lineage(spark, sfDir) }
+      }))
+      start.countDown()
+      fs.foreach(f => assert(f.get(5, TimeUnit.MINUTES) === expected))
+    } finally pool.shutdown()
+  }
+
   test("four concurrent asks on a cold dir build one snapshot and agree") {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
